@@ -17,7 +17,8 @@ import org.apache.spark.sql.SparkSession
   * serving session fits each model once, then every scoring/importance
   * query reuses it. DeterminismSpec pins fresh-fit == refit model
   * fingerprints, so cache hits are observationally identical to fresh
-  * fits.
+  * fits. GraftServer keeps its loaded models here too, one per registry
+  * entry: key = the entry's path, tag = `load@<createdAtMs>`.
   */
 object ModelCache {
 

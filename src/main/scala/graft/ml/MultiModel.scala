@@ -75,15 +75,19 @@ object MultiModel {
       .head().getDouble(0)
 
   /** S7 — persist + register (replaces config.ini mutation,
-    * train.py:163-188).
+    * train.py:163-188). Each save writes a fresh directory,
+    * `$dir/$name-v<createdAtMs>`, and registers it only once the write
+    * has completed, so a reader of the registry never sees a partial
+    * model and a retrain under the same name never overwrites the model
+    * being served. A path that already exists fails the save.
     */
   def save(t: Trained, dir: String, registry: ModelRegistry,
       name: String, metrics: Map[String, Double] = Map.empty): String = {
-    val path = s"$dir/$name"
-    t.pipeline.write.overwrite().save(path)
+    val createdAtMs = System.currentTimeMillis()
+    val path = s"$dir/$name-v$createdAtMs"
+    t.pipeline.write.save(path)
     registry.append(ModelEntry(name, path, t.modelType, t.params,
-      metrics ++ Map("train_accuracy" -> t.trainAccuracy),
-      System.currentTimeMillis()))
+      metrics ++ Map("train_accuracy" -> t.trainAccuracy), createdAtMs))
     path
   }
 

@@ -1,6 +1,10 @@
 package graft.core
 
-import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+import java.net.URI
+import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch,
+  Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
@@ -9,6 +13,8 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.core.Tables
+import graft.ml.{ModelRegistry, MultiModel}
+import graft.serve.GraftServer
 
 /** Concurrency hardening for the shared session caches and the serving
   * path: the single-build-per-key guarantee must hold under a thread
@@ -19,6 +25,36 @@ import graft.core.Tables
   * /predict path must stay consistent when N clients race a cold cache.
   */
 class ConcurrencySpec extends SparkSpec {
+
+  private def labeled() =
+    Tables.load(spark, sf0001, "lineitem").select(
+      when(col("l_returnflag") === "R", 1.0).otherwise(0.0).as("label"),
+      col("l_quantity"), col("l_extendedprice"), col("l_discount"),
+      col("l_tax"))
+
+  /** Run `body` against a started server over the model dir `dir`. */
+  private def withServer[T](dir: String)(body: GraftServer => T): T = {
+    val server = new GraftServer(spark, () => labeled(),
+      Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"), dir)
+    server.start()
+    try body(server) finally server.stop()
+  }
+
+  private val http = HttpClient.newHttpClient()
+
+  private def post(server: GraftServer, path: String, body: String = "")
+      : (Int, String) = {
+    val req = HttpRequest.newBuilder()
+      .uri(new URI(s"http://127.0.0.1:${server.boundPort}$path"))
+      .POST(HttpRequest.BodyPublishers.ofString(body))
+      .build()
+    val r = http.send(req, HttpResponse.BodyHandlers.ofString())
+    (r.statusCode(), r.body())
+  }
+
+  private def testScore(body: String): String =
+    """"test_score":([0-9.Ee-]+)""".r.findFirstMatchIn(body)
+      .getOrElse(fail(s"no test_score in $body")).group(1)
 
   private def hammer[T](nThreads: Int, nCalls: Int)(body: Int => T)
       : Seq[T] = {
@@ -180,45 +216,71 @@ class ConcurrencySpec extends SparkSpec {
 
   test("/predict hammered by 16 racing clients on a cold cache: every " +
       "response 200 with the SAME score; cache converges to hits") {
-    import java.net.URI
-    import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-    val server = new graft.serve.GraftServer(
-      spark,
-      () => Tables.load(spark, sf0001, "lineitem").select(
-        when(col("l_returnflag") === "R", 1.0).otherwise(0.0).as("label"),
-        col("l_quantity"), col("l_extendedprice"), col("l_discount"),
-        col("l_tax")),
-      Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"),
-      java.nio.file.Files.createTempDirectory("graft-conc").toString)
-    server.start()
-    try {
-      val http = HttpClient.newHttpClient()
-      def post(path: String): (Int, String) = {
-        val req = HttpRequest.newBuilder()
-          .uri(new URI(s"http://127.0.0.1:${server.boundPort}$path"))
-          .POST(HttpRequest.BodyPublishers.ofString(""))
-          .build()
-        val r = http.send(req, HttpResponse.BodyHandlers.ofString())
-        (r.statusCode(), r.body())
-      }
-      val (tc, tb) = post("/train/?model_type=D_TREE&name=conc_model")
+    withServer(Files.createTempDirectory("graft-conc").toString) { server =>
+      val (tc, tb) = post(server, "/train/?model_type=D_TREE&name=conc_model")
       assert(tc === 200, tb)
       val responses = hammer(16, 16)(_ =>
-        post("/predict/?mode=smoke&name=conc_model"))
+        post(server, "/predict/?mode=smoke&name=conc_model"))
       assert(responses.forall(_._1 === 200),
         responses.filter(_._1 != 200).map(_._2).mkString("; "))
       // deterministic model + deterministic test split: every racer must
       // report the identical score whether it computed or hit the cache
-      val scores = responses.map(_._2).map { b =>
-        val m = """"test_score":([0-9.Ee-]+)""".r.findFirstMatchIn(b)
-        assert(m.nonEmpty, b); m.get.group(1)
-      }
+      val scores = responses.map(r => testScore(r._2))
       assert(scores.toSet.size === 1, s"divergent scores: ${scores.toSet}")
       // after the stampede the cache must serve hits
-      val (c2, b2) = post("/predict/?mode=smoke&name=conc_model")
+      val (c2, b2) = post(server, "/predict/?mode=smoke&name=conc_model")
       assert(c2 === 200)
       assert(b2.contains("\"from_cache\":true"), b2)
-    } finally server.stop()
+    }
+  }
+
+  test("/train/ re-saving an existing name while 8 clients hit " +
+      "/predict/: every reply 2xx; afterwards the newest entry is served") {
+    val dir = Files.createTempDirectory("graft-retrain").toString
+    val registry = new ModelRegistry(s"$dir/registry.jsonl")
+    withServer(dir) { server =>
+      val (tc, tb) =
+        post(server, "/train/?model_type=D_TREE&max_depth=2&name=race")
+      assert(tc === 200, tb)
+      val first = registry.latest("race").get
+      // clients keep asking until the retrain has returned; distinct
+      // upload bodies keep missing the response cache
+      val retrained = new CountDownLatch(1)
+      val replies = new ConcurrentLinkedQueue[(Int, String)]()
+      val clients = Executors.newFixedThreadPool(8)
+      val done = (0 until 8).map { c =>
+        clients.submit(new Runnable {
+          override def run(): Unit = {
+            var i = 0
+            do {
+              replies.add(
+                if (i % 2 == 0) post(server, "/predict/?mode=smoke&name=race")
+                else post(server, "/predict/?mode=upload&name=race",
+                  "l_quantity,l_extendedprice,l_discount,l_tax\n" +
+                    s"$c,$i.5,0.05,0.02\n"))
+              i += 1
+            } while (!retrained.await(0, TimeUnit.SECONDS))
+          }
+        })
+      }
+      val (rc, rb) =
+        post(server, "/train/?model_type=D_TREE&max_depth=6&name=race")
+      retrained.countDown()
+      done.foreach(_.get(120, TimeUnit.SECONDS))
+      clients.shutdown()
+      assert(rc === 200, rb)
+      val bad = replies.asScala.filter(_._1 / 100 != 2)
+      assert(bad.isEmpty, bad.mkString("; "))
+      val newest = registry.latest("race").get
+      assert(newest.path != first.path)
+      assert(Files.isDirectory(Paths.get(first.path)),
+        "the retrain removed the model it replaced")
+      val (sc, sb) = post(server, "/predict/?mode=smoke&name=race")
+      assert(sc === 200, sb)
+      val (_, te) = MultiModel.split(labeled())
+      assert(testScore(sb).toDouble ===
+        MultiModel.accuracy(MultiModel.load(newest.path), te))
+    }
   }
 
   /** Tiny thread-safe per-key counter for build/fit accounting. */
