@@ -192,15 +192,8 @@ object GraftSession {
     * Session-settable, so entry points apply it after getOrCreate.
     */
   def tuneScanSplits(spark: SparkSession): SparkSession = {
-    // SPARK_GRAFT_SCAN_TUNE=0 restores Spark's defaults (A/B escape
-    // hatch for measurement — also unsets the configure() openCost floor)
-    if (sys.env.get("SPARK_GRAFT_SCAN_TUNE").contains("0")) {
-      spark.conf.set("spark.sql.files.openCostInBytes", "4194304")
-      spark.conf.unset("spark.sql.files.minPartitionNum")
-    } else {
-      spark.conf.set("spark.sql.files.minPartitionNum",
-        (2L * spark.sparkContext.defaultParallelism).toString)
-    }
+    spark.conf.set("spark.sql.files.minPartitionNum",
+      (2L * spark.sparkContext.defaultParallelism).toString)
     spark
   }
 

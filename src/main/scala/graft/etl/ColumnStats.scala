@@ -54,17 +54,4 @@ object ColumnStats {
   /** A6 — value histogram (notebook `value_counts()`). */
   def histogram(df: DataFrame, c: String): DataFrame =
     df.groupBy(col(c)).count().orderBy(desc("count"), asc(c))
-
-  /** A4/A5 — mean and stddev per column, exact-decimal sums so results are
-    * order-independent (see QueryDef determinism contract).
-    */
-  def meanStd(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val aggs = cols.flatMap { c =>
-      val d = col(c).cast(DecimalType(18, 6))
-      Seq(
-        (sum(d).cast(DoubleType) / count(col(c))).as(s"${c}_mean"),
-        stddev_samp(col(c)).as(s"${c}_std"))
-    }
-    df.select(aggs: _*)
-  }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * (key, salt) pair finds its match. Shuffle then distributes each hot
   * key over `buckets` reducers.
   *
-  * Round-14 measurement (Probe salted_plain/hot/full, sf10,
+  * Round-14 measurement (OPTIMIZATION_r14.md Item 8, sf10,
   * SPARK_GRAFT_PROFILE=cluster — AQE skewJoin ON): plain join 1.69 s,
   * [[hotSaltedJoin]] 3.20 s, full [[saltedJoin]] 16.6 s min. On the
   * gate's mild-skew custkey data AQE alone wins by ~2× over even the

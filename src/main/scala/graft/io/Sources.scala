@@ -66,14 +66,6 @@ object Sources {
       () => { df.unpersist(); () })
   }
 
-  /** S1 variant — untyped read for schema discovery on small samples only. */
-  def csvInferred(spark: SparkSession, path: String,
-      encoding: String = "latin1"): DataFrame =
-    Preprocess.trimHeaders(
-      spark.read.option("header", "true")
-        .option("encoding", normalizeEncoding(encoding))
-        .option("inferSchema", "true").csv(path))
-
   /** S3 — JSON scoring documents `{"X": [...], "y": [...]}`
     * (reference /root/reference/src/predict.py:131-135): multiline scan,
     * explode the X record array to rows, carry y positionally via the

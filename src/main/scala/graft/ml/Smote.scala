@@ -178,6 +178,9 @@ class Smote(override val uid: String) extends Transformer
 }
 
 object Smote extends DefaultParamsReadable[Smote] {
+  /** The values `strategy` accepts. */
+  val Strategies: Seq[String] = Seq("oversample", "smote")
+
   /** synthetic = a + t·(b − a), elementwise. */
   private[ml] val lerpUdf =
     udf((a: Vector, b: Vector, t: Double) => {

@@ -78,4 +78,8 @@ object Trainers {
   }
 
   val ModelTypes: Seq[String] = Seq("LOG_REG", "RAND_FOREST", "GNB", "D_TREE")
+
+  /** The hyperparameters [[byName]] parses as integers. */
+  val IntParams: Seq[String] =
+    Seq("max_iter", "n_estimators", "max_depth", "min_samples_split")
 }

@@ -323,15 +323,6 @@ object Multimodal {
     bos.toByteArray
   }
 
-  /** Deterministic fake embedding from the payload (stand-in for a model
-    * forward pass), as Array[Float] matching the `embeddings` table shape.
-    */
-  def featureExtract(media: DataFrame, dim: Int = 64): DataFrame =
-    media.withColumn("embedding",
-      transform(sequence(lit(0), lit(dim - 1)),
-        i => (pmod(xxhash64(col("content"), i), lit(2000001L)) - 1000000L)
-          .cast(FloatType) / 1000000.0f))
-
   /** Resize: metadata-level transform (stub keeps payload; a real codec
     * would re-encode). Clamps to the target box preserving aspect ratio.
     */

@@ -176,38 +176,6 @@ object PrefixSum {
           struct((-col("__gmax")).as("ng"), col("__bat"))).as(atName))
   }
 
-  /** Running totals of SEVERAL long-valued columns in ONE two-phase scan
-    * over a shared global order — the shape a two-sample ECDF comparison
-    * needs (cumulative counts of population A and B over the pooled value
-    * axis). Same structure as [[runningTotal]] with a vector of sums: the
-    * local window evaluates all W running sums in one Window node, the
-    * bucket aggregate carries W totals per bucket. Returns
-    * (orderCol, v0, run0, v1, run1, ...) with INCLUSIVE prefix sums.
-    *
-    * `orderCol` must be globally unique (pre-reduce to value grain first);
-    * value columns must be non-null.
-    */
-  def runningTotals(df: DataFrame, orderCol: String,
-      valueCols: Seq[String], runNames: Seq[String],
-      bounds: Option[DataFrame] = None): DataFrame = {
-    require(valueCols.nonEmpty && valueCols.length == runNames.length,
-      "valueCols and runNames must align")
-    val idx = valueCols.indices
-    val local = localScan(df, orderCol, valueCols, bounds)
-    val bAggs = idx.map(i => sum(col(s"__v$i")).as(s"__bt$i"))
-    val wOff = Window.orderBy(col("__pfx_b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = idx.foldLeft(
-        local.groupBy(col("__pfx_b")).agg(bAggs.head, bAggs.tail: _*)) {
-      (d, i) => d.withColumn(s"__off$i",
-        coalesce(sum(col(s"__bt$i")).over(wOff), lit(0L)))
-    }.select(col("__pfx_b") +: idx.map(i => col(s"__off$i")): _*)
-    local.join(broadcast(offs), Seq("__pfx_b"))
-      .select(col("__k").as(orderCol) +: idx.flatMap(i => Seq(
-        col(s"__v$i").as(valueCols(i)),
-        (col(s"__run$i") + col(s"__off$i")).as(runNames(i)))): _*)
-  }
-
   /** Running MAXIMUM of `valueCol` (long) ordered by `orderCol` (long,
     * globally unique), plus a flag marking rows that strictly RAISE the
     * running max — i.e. rows beating every value strictly before them.

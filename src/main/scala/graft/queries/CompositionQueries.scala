@@ -143,7 +143,7 @@ object CompositionQueries extends QueryModule {
         // behind the cells exchange — at gate scale the extra reads are
         // cheaper than the lost stage parallelism. Kept as-is per guide
         // §1.1. Round-14 measurement of the recorded "flips at scale"
-        // claim (Probe chi2_full vs chi2_derived, sf10,
+        // claim (OPTIMIZATION_r14.md Item 8, sf10,
         // SPARK_GRAFT_PROFILE=cluster): the 4-scan form STILL wins,
         // 0.705 s vs 1.0 s min — no flip by sf10 even under
         // clusterDefaults, because documents stays a cheap columnar

@@ -645,7 +645,7 @@ object CorpusQueries extends QueryModule {
         // so the planner/AQE must pick broadcast vs shuffle from the
         // observed build-side size (the old forced broadcast was an
         // executor OOM shape at 100×). Only the 1-row grand-total frame
-        // keeps a hint. Probe volume also drops: the join runs on the
+        // keeps a hint. The join's probe side also shrinks: it runs on the
         // deduped doc×token grain (Zipf-bounded), not the raw token
         // stream, with occurrence counts re-weighted via c_dt.
         val docs = T(s, dir, "documents")

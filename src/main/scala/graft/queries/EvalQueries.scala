@@ -336,7 +336,7 @@ object EvalQueries extends QueryModule {
         // pooled value axis of |ECDF_a − ECDF_b|. Scale shape: reduce to
         // VALUE GRAIN first (one keyed agg; cents is then a unique order
         // key), run BOTH cumulative counts in one two-phase
-        // PrefixSum.runningTotals scan — no single-task global window
+        // PrefixSum.localScan pass — no single-task global window
         // anywhere — and maximize the exact integer deviation
         // |ca·nb − cb·na| (the /na·nb division happens once, at the
         // end). Ties on the max deviation break to the smallest value,

@@ -537,7 +537,8 @@ object LlmQueries extends QueryModule {
         // (round-14 session 2 probed a fused single groupBy carrying
         // (count, first(text)) and fused+localCheckpoint here — the
         // two-aggregation form below stays FASTEST on same-JVM minima
-        // (1.31 vs 1.58 vs 1.85 s, Probe ndtk_*): the skinny count
+        // (1.31 vs 1.58 vs 1.85 s, OPTIMIZATION_r14.md "Probed and
+        // REJECTED this session"): the skinny count
         // aggregate never carries text, and dragging it through a First
         // buffer costs more than the second exchange saves.)
         val docs = T(s, dir, "documents")
@@ -589,8 +590,8 @@ object LlmQueries extends QueryModule {
         // the sort a per-partition top-k + driver merge of 20 rows, not
         // a total order.
         // (two-aggregation shape deliberately kept — see the
-        // q_neardup_pair_stats probe note; Probe ndtk_* pins this form
-        // fastest against fused and fused+checkpoint)
+        // q_neardup_pair_stats note; OPTIMIZATION_r14.md records this
+        // form fastest against fused and fused+checkpoint)
         val docs = T(s, dir, "documents")
         val fp = xxhash64(col("text"))
         val grp = docs.groupBy(fp.as("__fp"))
@@ -774,10 +775,11 @@ object LlmQueries extends QueryModule {
         // identical-text member pairs (jaccard exactly 1 ≥ 0.5, always
         // found) contribute C(cnt, 2) directly.
         // round-14 session 2: the candidate generator is the
-        // distinct-frame core simHashFpPairs — the simHashPairs wrapper
-        // re-fingerprinted, re-deduped and identity-joined a frame that
-        // is already one row per fingerprint (probe: core 1.11 vs
-        // wrapper 1.20 s; pair set pinned [0,0] by Probe simh_core_diff).
+        // distinct-frame core simHashFpPairs — the former member-level
+        // wrapper re-fingerprinted, re-deduped and identity-joined a frame
+        // that is already one row per fingerprint (core 1.11 vs wrapper
+        // 1.20 s, identical pair set; OPTIMIZATION_r14.md
+        // "q_simhash_neardup").
         // (A fused single groupBy for counts+dist was probed and REJECTED
         // — see the q_neardup_pair_stats note.)
         val docs = T(s, dir, "documents")

@@ -564,9 +564,9 @@ object MiningQueries extends QueryModule {
         // k-step neighborhood with k and take min(hop) per node — the
         // node set is identical (neighbors of already-visited members
         // of hop-set k are ⊆ hop-set k+1's input, and min() re-ranks
-        // them to their first hop), which Probe pins row-exactly
-        // (bfs_diff = [0,0]) and the oracle hash confirms; measured
-        // −20% same-JVM at sf0.1 (bfs_full 1.113 → bfs_nounion 0.889).
+        // them to their first hop), row-exact against the anti-join
+        // form and confirmed by the oracle hash; measured −20% same-JVM
+        // at sf0.1 (OPTIMIZATION_r14.md Item 4).
         // For an UNBOUNDED/deep BFS the anti-join form comes back: once
         // the frontier is a sliver of visited, pruning beats re-ranking.
         val n1 = seed.join(edges, col("node") === col("src"))

@@ -226,8 +226,9 @@ object TpchQueries extends QueryModule {
         // a FULL fact exchange — is gone: countDistinct's map-side
         // partial stage already dedups (group, suppkey), so the raw
         // stream reaches the same aggregate through one fewer shuffle of
-        // strictly more rows (3 exchanges → 2; Probe q16_nodistinct
-        // −27% same-JVM, q16_diff [0,0]; broadcast joins stay map-side).
+        // strictly more rows (3 exchanges → 2, −27% same-JVM, row-exact;
+        // OPTIMIZATION_r14.md and plans/r14/q_q16_supplier_count_*.txt;
+        // broadcast joins stay map-side).
         val l = T(s, dir, "lineitem")
           .select(col("l_partkey"), col("l_suppkey"))
         val excluded = T(s, dir, "supplier")

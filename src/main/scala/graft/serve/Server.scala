@@ -16,7 +16,8 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 import graft.eval.Metrics
 import graft.io.RedisSink
-import graft.ml.{ModelCache, ModelEntry, ModelRegistry, MultiModel}
+import graft.ml.{ModelCache, ModelEntry, ModelRegistry, MultiModel, Smote,
+  Trainers}
 
 /** The reference's FastAPI serving layer re-expressed on the JDK HTTP
   * server (zero extra dependencies): `POST /train/` and `POST /predict/`
@@ -35,8 +36,8 @@ import graft.ml.{ModelCache, ModelEntry, ModelRegistry, MultiModel}
   *   - registry is append-only JSONL, not racy INI rewrites.
   *
   * Status codes: 404 for an unknown or missing model name, 400 for a bad
-  * request (unknown mode or model type, malformed upload body), 500 for
-  * anything else.
+  * request (unknown mode or model type, a `/train/` parameter of the
+  * wrong type or value, malformed upload body), 500 for anything else.
   *
   * Cache: in-memory by default; Redis-backed (`predict:{mode}` keys, as in
   * app.py:98-140) when a redis endpoint is configured.
@@ -139,13 +140,19 @@ class GraftServer(
 
   route("/train/") { ex =>
     val p = queryParams(ex)
+    def invalid(k: String) = throw new HttpError(400, s"invalid $k: ${p(k)}")
     val modelType = p.getOrElse("model_type", "D_TREE")
-    if (!graft.ml.Trainers.ModelTypes.contains(modelType.toUpperCase))
+    if (!Trainers.ModelTypes.contains(modelType.toUpperCase))
       throw new HttpError(400, s"invalid model type: $modelType")
+    val useSmote = p.get("use_smote")
+      .fold(true)(_.toBooleanOption.getOrElse(invalid("use_smote")))
+    val smoteStrategy = p.getOrElse("smote_strategy", "oversample")
+    if (!Smote.Strategies.contains(smoteStrategy)) invalid("smote_strategy")
+    Trainers.IntParams.filter(k => p.get(k).exists(_.toIntOption.isEmpty))
+      .foreach(invalid)
     val (tr, _) = prepared
-    val t = MultiModel.train(tr, featureCols, modelType, p,
-      useSmote = p.getOrElse("use_smote", "true").toBoolean,
-      smoteStrategy = p.getOrElse("smote_strategy", "oversample"))
+    val t = MultiModel.train(tr, featureCols, modelType, p, useSmote,
+      smoteStrategy)
     val name = p.getOrElse("name", modelType.toLowerCase)
     MultiModel.save(t, modelDir, registry, name)
     lastModelName = Some(name)

@@ -222,12 +222,13 @@ object NearDup {
     // join's sides are flag filters of the same banded frame. Candidate
     // set provably identical: signatures are a pure function of text, so
     // per-side banding of per-side distinct rows = flag-filtered banding
-    // of union-distinct rows (pinned row-exactly by the Probe ninc_diff
-    // = [0,0] and property-tested vs the raw-id reference). A text on
-    // BOTH sides has both flags set; its fa=fb self-candidate verifies at
-    // exact 1.0 as before. The distinct frame is localCheckpointed — it
-    // feeds the signature branch, the verify's shingle frame and the flag
-    // join (3 consumers). Same-JVM probe: −19% at sf0.1.
+    // of union-distinct rows (row-exact against the previous form, as
+    // recorded in OPTIMIZATION_r14.md "q_neardup_incremental", and
+    // property-tested vs the raw-id reference). A text on BOTH sides has
+    // both flags set; its fa=fb self-candidate verifies at exact 1.0 as
+    // before. The distinct frame is localCheckpointed — it feeds the
+    // signature branch, the verify's shingle frame and the flag join
+    // (3 consumers). Same-JVM measurement: −19% at sf0.1.
     val fp = xxhash64(col(textCol))
     val cMembers = corpus.select(fp.as("__fa"), col(idCol).as("__cid"))
     val bMembers = batch.select(fp.as("__fb"), col(idCol).as("__bid"))
@@ -583,64 +584,25 @@ object NearDup {
     sums.select(col("__id"), hash.as("simhash"))
   }
 
-  /** SimHash near-dup candidates: pigeonhole banding on `numBands` equal
-    * chunks of the 64-bit hash (any pair within hamming distance
-    * numBands-1 shares at least one exact chunk — the banding guarantee),
-    * verified by exact hamming distance. More bands = stronger guarantee
-    * but coarser buckets (bucket count 2^(64/numBands) per band), so
-    * candidate volume grows: 4×16-bit for web-scale corpora, 8×8-bit when
-    * recall up to hamming 7 must be certain.
-    */
-  def simHashPairs(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, numBands: Int = 4, shingleN: Int = 0)
-      : DataFrame = {
-    // two-level duplicate collapse (round-7 sf1 sweep finding, same
-    // rationale as minHashPairs): (1) the 64-sum simhash aggregation
-    // runs once per DISTINCT text (identical texts have identical
-    // hashes by construction); (2) banding + hamming verify run once
-    // per DISTINCT simhash VALUE — near-dup-heavy corpora collapse
-    // further here, since different texts often share a simhash. Member
-    // ids expand only at the end; equal-value pairs are hamming 0 by
-    // definition. Round 14 (session 2): the value-level machinery lives
-    // in [[simHashFpPairs]]; this wrapper adds the member expansion —
-    // fingerprint pairs join back to member ids, and same-fingerprint
-    // (identical-text) member pairs are hamming 0 directly. Output is
-    // pair-for-pair the pre-split form's (property-tested vs the raw-id
-    // reference in DistributedPrimitivesPropertySpec).
-    val fp = xxhash64(col(textCol))
-    val fpMembers = df.select(fp.as("__fp"), col(idCol).as("__mid"))
-      .localCheckpoint()
-    val dist = df.select(fp.as("__fp"), col(textCol))
-      .dropDuplicates("__fp")
-    val fpPairs = simHashFpPairs(dist, textCol, maxHamming, numBands,
-      shingleN)
-    val cross = fpPairs
-      .join(fpMembers.select(col("__fp").as("id_a"),
-        col("__mid").as("__ia")), Seq("id_a"))
-      .join(fpMembers.select(col("__fp").as("id_b"),
-        col("__mid").as("__ib")), Seq("id_b"))
-      .select(least(col("__ia"), col("__ib")).as("id_a"),
-        greatest(col("__ia"), col("__ib")).as("id_b"), col("hamming"))
-    val within = fpMembers.select(col("__fp"), col("__mid").as("id_a"))
-      .join(fpMembers.select(col("__fp"), col("__mid").as("id_b")),
-        Seq("__fp"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        lit(0).cast("int").as("hamming"))
-    cross.unionByName(within)
-  }
-
-  /** The distinct-text core of [[simHashPairs]] — the simhash edition of
-    * [[minHashFpPairs]]: banding + hamming verify over a frame that is
-    * ALREADY one row per text fingerprint (`__fp` = xxhash64(textCol),
-    * `textCol`). Consumers that operate on collapsed text groups and
-    * attach member weights themselves (q_simhash_neardup) call this
-    * directly — wrapping it in [[simHashPairs]] paid an extra member
-    * localCheckpoint job (a re-fingerprinting scan), a redundant
-    * dropDuplicates exchange on already-distinct input, and an identity
-    * member join. The hamming-0 within-branch here pairs DISTINCT
+  /** SimHash near-dup candidates over a DISTINCT-text frame: pigeonhole
+    * banding on `numBands` equal chunks of the 64-bit hash (any pair
+    * within hamming distance numBands-1 shares at least one exact chunk —
+    * the banding guarantee), verified by exact hamming distance. More
+    * bands = stronger guarantee but coarser buckets (bucket count
+    * 2^(64/numBands) per band), so candidate volume grows: 4×16-bit for
+    * web-scale corpora, 8×8-bit when recall up to hamming 7 must be
+    * certain.
+    *
+    * The input is ALREADY one row per text fingerprint (`__fp` =
+    * xxhash64(textCol), `textCol`) — the simhash edition of
+    * [[minHashFpPairs]]. Duplicate collapse happens at two levels: the
+    * 64-sum simhash aggregation runs once per distinct text (identical
+    * texts have identical hashes by construction), and banding + hamming
+    * verify run once per distinct simhash VALUE (different texts often
+    * share a simhash). Consumers attach member weights themselves
+    * (q_simhash_neardup). The hamming-0 within-branch here pairs DISTINCT
     * fingerprints sharing a simhash VALUE — that is candidate-set
-    * completeness, not member expansion, so it stays.
+    * completeness, not member expansion.
     *
     * @return (id_a, id_b, hamming): fingerprint pairs, id_a < id_b
     *         (long order), hamming <= maxHamming

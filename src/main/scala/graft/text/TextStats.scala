@@ -137,9 +137,6 @@ object TextStats {
   /** Exact content fingerprint (hex md5) — the dedup key. */
   def fingerprintMd5(text: Column): Column = md5(text.cast(BinaryType))
 
-  /** 64-bit fast fingerprint for shard-local joins (xxhash64 seed 42). */
-  def fingerprint64(text: Column): Column = xxhash64(text)
-
   // ---------------------------------------------------------------------
   // Fused one-pass profile (round-8): queries that stack several of the
   // tokenizing stats above re-split the same text once PER STAT (plus

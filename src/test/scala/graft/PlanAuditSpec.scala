@@ -415,7 +415,7 @@ class PlanAuditSpec extends SparkSpec {
     // round-14: per-hop anti-join pruning replaced by a final min(hop)
     // re-rank (each anti-join shuffled BOTH sides per hop and deepened
     // the re-executed lineage; at a 2-hop bound pruning never pays —
-    // Probe bfs_diff pins row-equality against the anti-join form).
+    // row-equal to the anti-join form, OPTIMIZATION_r14.md Item 4).
     // The contract is now ZERO anti-joins and a hop-label union feeding
     // a per-node min aggregate.
     assert(!p.contains("LeftAnti"), p.take(3000))
@@ -481,11 +481,12 @@ class PlanAuditSpec extends SparkSpec {
   test("q_ks_drift: both ECDFs ride the bucket-partitioned two-phase " +
       "prefix-sum scan — no grain-scale single-task funnel") {
     val p = planOf("q_ks_drift")
-    // the point of PrefixSum.runningTotals: the GRAIN rows only ever
-    // flow through a window partitioned by the scan bucket (parallel),
-    // and the only single-partition segment is the exclusive scan of
-    // the B bucket AGGREGATES (B = O(parallelism) rows — the same
-    // information the old RDD form collected to the driver)
+    // the point of ExactStats.ksStat's PrefixSum.localScan: the GRAIN
+    // rows only ever flow through a window partitioned by the scan
+    // bucket (parallel), and the only single-partition segment is the
+    // exclusive scan of the B bucket AGGREGATES (B = O(parallelism)
+    // rows — the same information the old RDD form collected to the
+    // driver)
     assert(p.contains("hashpartitioning(__pfx_b"), p.take(3000))
     val sp = "Exchange SinglePartition".r.findAllIn(p).length
     assert(sp <= 1,

@@ -158,6 +158,18 @@ class MlPipelineSpec extends SparkSpec {
     assert(math.abs(total - 1.0) < 1e-6)
   }
 
+  test("L8 pruneFeatures drops a zero-importance feature from frame and " +
+      "survivors") {
+    // a constant column never splits a tree, so its importance is 0
+    val withConst = labeled.withColumn("k_const", lit(1.0))
+    val cols = featureCols :+ "k_const"
+    val (pruned, survivors) =
+      Importance.pruneFeatures(withConst, cols, nTrees = 5)
+    assert(!survivors.contains("k_const"))
+    assert(!pruned.columns.contains("k_const"))
+    assert(survivors === pruned.columns.filter(cols.contains).toSeq)
+  }
+
   test("A7-A9 metrics agree on a hand-built frame") {
     import spark.implicits._
     val df = Seq((1.0, 1.0), (1.0, 0.0), (0.0, 0.0), (0.0, 0.0))

@@ -12,9 +12,11 @@ import graft.text.NearDup
 
 import org.apache.spark.sql.types.StringType
 
-/** ScalaCheck properties for the two distributed primitives whose
+/** ScalaCheck properties for the distributed primitives whose
   * correctness is least obvious from their plans: the two-phase
-  * prefix-sum scan (vs the single-task window cumsum it replaces) and
+  * prefix-sum scan (vs the single-task window cumsum it replaces, and
+  * ksStat's aggregate form vs a driver-side brute force), the near-dup
+  * candidate generators (vs raw-id or exhaustive references) and
   * pointer-jumping connected components (vs a driver-side union-find).
   * Samples use fixed seeds (PropertiesSpec convention: no
   * scalatest-scalacheck bridge in the offline cache), so failures are
@@ -56,29 +58,49 @@ class DistributedPrimitivesPropertySpec extends SparkSpec {
     }
   }
 
-  test("property: runningTotals (two columns, one scan) == two window " +
-      "cumsums on random deltas") {
-    for (deltas <- samples(deltasGen, 6)) {
-      val rows = deltas.zipWithIndex.map { case (v, i) =>
-        Row((deltas.size - i) * 3L, v, v * 2 - 7)
+  // --- ExactStats.ksStat vs driver-side brute-force KS ---------------
+
+  // raw two-era observations (value, era A?) on a per-sample stride, so
+  // the key span (and with it the bucket width of the two-phase scan)
+  // varies and small value ranges produce ties; both eras non-empty
+  private val erasGen: Gen[List[(Long, Boolean)]] =
+    for {
+      n <- Gen.choose(2, 150)
+      stride <- Gen.choose(1L, 1000L)
+      obs <- Gen.listOfN(n, Gen.zip(
+        Gen.choose(-300L, 300L).map(_ * stride), Gen.oneOf(true, false)))
+    } yield (0L, true) :: (stride, false) :: obs
+
+  test("property: ksStat (value-grain two-phase scan) == driver-side " +
+      "brute-force KS on random two-era inputs") {
+    for ((obs, k) <- samples(erasGen, 8).zipWithIndex) {
+      // value grain as q_ks_drift builds it: one row per value with its
+      // per-era counts, in reverse key order over 4 partitions
+      val grain = obs.groupBy(_._1).toSeq.sortBy(-_._1).map {
+        case (v, os) => Row(v, os.count(_._2).toLong, os.count(!_._2).toLong)
       }
       val df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 4),
-        StructType(Seq(StructField("t", LongType, nullable = false),
-          StructField("u", LongType, nullable = false),
-          StructField("v", LongType, nullable = false))))
-      val got = PrefixSum.runningTotals(df, "t", Seq("u", "v"),
-          Seq("ru", "rv"))
-        .orderBy(col("t")).collect()
-        .map(r => (r.getLong(0), r.getLong(2), r.getLong(4)))
-      val w = Window.orderBy(col("t"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      val expect = df
-        .withColumn("ru", sum(col("u")).over(w))
-        .withColumn("rv", sum(col("v")).over(w))
-        .orderBy(col("t")).collect()
-        .map(r => (r.getLong(0), r.getLong(3), r.getLong(4)))
-      assert(got.toSeq === expect.toSeq)
+        spark.sparkContext.parallelize(grain, 4),
+        StructType(Seq(StructField("cents", LongType, nullable = false),
+          StructField("da", LongType, nullable = false),
+          StructField("db", LongType, nullable = false))))
+      val got = ExactStats.ksStat(df)
+        .select("na", "nb", "at_cents", "ks_d").head()
+      val (a, b) = obs.partition(_._2)
+      val (na, nb) = (a.size.toLong, b.size.toLong)
+      // |ca·nb − cb·na| at every pooled value; first value reaching the max
+      val devs = obs.map(_._1).distinct.sorted.map { v =>
+        val ca = BigInt(a.count(_._1 <= v))
+        val cb = BigInt(b.count(_._1 <= v))
+        v -> (ca * nb - cb * na).abs
+      }
+      val md = devs.map(_._2).max
+      val at = devs.find(_._2 == md).get._1
+      val ksD = BigDecimal(md.toDouble / (na.toDouble * nb.toDouble))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      assert((got.getLong(0), got.getLong(1), got.getLong(2),
+          got.getDouble(3)) === ((na, nb, at, ksD)),
+        s"sample #$k obs=${obs.take(8)}...")
     }
   }
 
@@ -187,17 +209,25 @@ class DistributedPrimitivesPropertySpec extends SparkSpec {
     }
   }
 
-  test("property: duplicate-collapsed simHashPairs == the raw-id " +
-      "reference algorithm on duplication-heavy corpora") {
+  test("property: simHashFpPairs over the xxhash64-distinct frame == " +
+      "per-fingerprint banding + hamming on duplication-heavy corpora") {
     for ((docs, k) <- samples(dupCorpusGen, 6).zipWithIndex) {
-      val df = docsDf(docs)
+      // the distinct-text frame q_simhash_neardup feeds the operator;
+      // upper-cased copies are distinct texts (distinct fingerprints)
+      // with the same shingles, so fingerprints sharing a simhash VALUE
+      // occur and must pair at hamming 0
+      val texts = docs ++ docs.zipWithIndex.collect {
+        case (d, i) if i % 2 == 0 => d.toUpperCase }
+      val dist = docsDf(texts)
+        .select(xxhash64(col("text")).as("__fp"), col("text"))
+        .dropDuplicates("__fp")
       val maxHamming = 6
       val numBands = 4
-      val got = NearDup.simHashPairs(df, "id", "text", maxHamming,
+      val got = NearDup.simHashFpPairs(dist, "text", maxHamming,
           numBands, shingleN = 3)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
         .toSet
-      val hashes = NearDup.simHash(df, "id", "text", shingleN = 3)
+      val hashes = NearDup.simHash(dist, "__fp", "text", shingleN = 3)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val width = 64 / numBands
       val mask = (1L << width) - 1L

@@ -91,6 +91,18 @@ class ServerSpec extends SparkSpec {
     val (code, body) = post("/train/?model_type=NOT_A_MODEL")
     assert(code === 400)
     assert(body.contains("invalid model type"))
+    // a bad parameter is a 400 naming the parameter and its value
+    for ((query, msg) <- Seq(
+        "use_smote=maybe" -> "invalid use_smote: maybe",
+        "smote_strategy=adasyn" -> "invalid smote_strategy: adasyn",
+        "max_depth=deep" -> "invalid max_depth: deep",
+        "model_type=LOG_REG&max_iter=1.5" -> "invalid max_iter: 1.5",
+        "model_type=RAND_FOREST&n_estimators=ten" ->
+          "invalid n_estimators: ten")) {
+      val (c, b) = post(s"/train/?$query")
+      assert(c === 400, s"$query: $b")
+      assert(b.contains(msg), s"$query: $b")
+    }
   }
 
   test("POST /predict/ smoke scores in [0,1]; second call hits cache") {

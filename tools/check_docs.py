@@ -13,7 +13,8 @@ Sources of truth, in order of preference:
 Fails (exit 1) if COVERAGE.md's totals line disagrees, OR if the driver
 gate has any non-green row — so COVERAGE.md can never claim "ALL green"
 while the driver's own file shows a red (that drift shipped in round 5:
-the doc said 195/195, the gate said 194/195).
+the doc said 195/195, the gate said 194/195), OR if a COVERAGE.md row
+cites a graft `Object.member` that src/main no longer declares.
 
 Note the asymmetry vs the local registry: the newest driver file is one
 round old by construction (it graded the previous commit). Queries added
@@ -134,6 +135,28 @@ def main():
             seen_rows.add(row)
     if dup_rows:
         failures.append(f"COVERAGE.md has duplicate table row(s): {dup_rows}")
+
+    # 5) Dangling code references: a backticked `Object.member` (also
+    #    `dir/Object.member`, and `Object.a/b` for several members) whose
+    #    Object is declared under src/main must name a def or val in a
+    #    file declaring that object — a row citing deleted code fails.
+    decls = {}
+    for path in glob.glob(os.path.join(REPO, "src/main/scala/**/*.scala"),
+                          recursive=True):
+        text = open(path).read()
+        for obj in re.findall(r"\bobject\s+(\w+)", text):
+            decls[obj] = decls.get(obj, "") + text
+    dangling = []
+    for obj, members in re.findall(
+            r"`(?:\w+/)*([A-Z]\w*)\.([A-Za-z_]\w*(?:/\w+)*)`", cov):
+        for member in members.split("/"):
+            if (obj in decls and member != "scala"
+                    and re.match(r"[A-Za-z_]", member)
+                    and not re.search(rf"\b(?:def|val)\s+{member}\b",
+                                      decls[obj])):
+                dangling.append(f"{obj}.{member}")
+    if dangling:
+        failures.append(f"COVERAGE.md cites undeclared code: {sorted(set(dangling))}")
 
     m = re.search(r"\*\*Totals: (\d+) registered queries — ALL (\d+) "
                   r"DuckDB-oracle hash-checked\s*\((\d+)\s*rows-only\)", cov)
