@@ -209,6 +209,12 @@ object Bench {
           graft.ml.TrainingCache.buildLog.toSeq.map { case ((_, k, fc), s) =>
             s"matrix:$k:${fc.mkString("+")}" -> s }
         val cacheBuildSec = cacheBuilds.map(_._2).sum
+        // the ledger lines overlap when builds run concurrently (the
+        // q_cv_folds fold pool) or nest (a build requesting another key);
+        // their union is the wall the builds actually took
+        val cacheUnionSec = graft.core.SessionCache.buildUnionSec
+        val cacheJsonTotals =
+          s""""cache_build_union_sec":${fmt.format(cacheUnionSec)},"total_plus_cache_build":${fmt.format(total + cacheUnionSec)}"""
         val cacheJson = cacheBuilds.sortBy(-_._2)
           .map { case (k, s) => "\"" + esc(k) + "\":" + fmt.format(s) }
           .mkString("{", ",", "}")
@@ -223,7 +229,7 @@ object Bench {
         val divJson = divergent.map("\"" + esc(_) + "\"")
           .mkString("[", ",", "]")
         val fullLine =
-          s"""{"metric":"total","value":${fmt.format(total)},"unit":"sec","queries":$fullJson,"plain_median":$plainJson,"median_divergent":$divJson,"profiles":$profJson,"cache_build_sec":${fmt.format(cacheBuildSec)},"cache_prime_wall_sec":${fmt.format(primeWall)},"cache_builds":$cacheJson,"rep_samples":$repsJson,"warmup_sec":$warmJson,"start_offset_sec":$offJson,"sf":"$sfDir","reps":$reps,"clean_reps":$cleanReps,"fold_warmup":$foldWarmup,"warmup":$warmup,"interleaved":true,"failed":$failed,"unreached":$unreached,"partial":$partial}"""
+          s"""{"metric":"total","value":${fmt.format(total)},"unit":"sec","queries":$fullJson,"plain_median":$plainJson,"median_divergent":$divJson,"profiles":$profJson,"cache_build_sec":${fmt.format(cacheBuildSec)},$cacheJsonTotals,"cache_prime_wall_sec":${fmt.format(primeWall)},"cache_builds":$cacheJson,"rep_samples":$repsJson,"warmup_sec":$warmJson,"start_offset_sec":$offJson,"sf":"$sfDir","reps":$reps,"clean_reps":$cleanReps,"fold_warmup":$foldWarmup,"warmup":$warmup,"interleaved":true,"failed":$failed,"unreached":$unreached,"partial":$partial}"""
         val fullPath = java.nio.file.Paths.get("bench_full.json")
         java.nio.file.Files.write(fullPath, (fullLine + "\n").getBytes("UTF-8"))
         // The full line goes ONLY to the file, never to stderr: sbt's
@@ -242,7 +248,7 @@ object Bench {
         val byCost = results.filter(_._2 < 0) ++ done.sortBy(-_._2)
         val budget = 1400
         val head =
-          s"""{"metric":"total","value":${fmt.format(total)},"unit":"sec","sf":"$sfDir","reps":$reps,"clean_reps":$cleanReps,"warmup":$warmup,"n_queries":${results.size},"failed":$failed,"unreached":$unreached,"partial":$partial,"cache_build_sec":${fmt.format(cacheBuildSec)},"cache_prime_wall_sec":${fmt.format(primeWall)},"full":"bench_full.json","queries":{"""
+          s"""{"metric":"total","value":${fmt.format(total)},"unit":"sec","sf":"$sfDir","reps":$reps,"clean_reps":$cleanReps,"warmup":$warmup,"n_queries":${results.size},"failed":$failed,"unreached":$unreached,"partial":$partial,"cache_build_sec":${fmt.format(cacheBuildSec)},$cacheJsonTotals,"cache_prime_wall_sec":${fmt.format(primeWall)},"full":"bench_full.json","queries":{"""
         val tail0 = "}}"
         val kept = scala.collection.mutable.ListBuffer.empty[String]
         var len = head.length + tail0.length + 40 // slack for omitted_*

@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -43,22 +45,8 @@ object Verify {
   /** `SparkEntry.oracleSql` as a JSON object string. Shared by the verify
     * dump and by OracleLintSpec (which feeds it to tools/lint_oracles.py
     * so a HUGEINT-typed oracle fails `sbt test`, not the driver's gate).
-    *
-    * JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    * — a tab or CR in builder-authored SQL would otherwise make the
-    * driver's json.load fail and silently zero the round's correctness.
     */
-  def oracleJson: String = {
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-  }
+  def oracleJson: String =
+    new ObjectMapper().registerModule(DefaultScalaModule)
+      .writeValueAsString(SparkEntry.oracleSql)
 }

@@ -59,8 +59,9 @@ object Bucketing {
     * rejoin afterwards, in this session or a later one sharing the
     * warehouse, is co-located. The fingerprint is embedded in the table
     * name, so a changed source builds a fresh layout instead of serving
-    * stale rows. Synchronized like FrameCache's promise map: exactly one
-    * build per table across racing callers in this JVM.
+    * stale rows. The check-and-write runs under one JVM-wide lock, so
+    * racing callers in this JVM build each table exactly once, and a
+    * build of one table holds up every other `bucketedTable` call.
     */
   def bucketedTable(spark: SparkSession, name: String, fingerprint: String,
       keys: Seq[String], buckets: Int = 32)(build: => DataFrame)

@@ -1,111 +1,59 @@
 package graft.ml
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** Session-scoped cache of the prepared training matrix.
-  *
-  * The reference rebuilds its entire world per request
-  * (/root/reference/src/train.py:26-114); SURVEY §7.4.6 calls for the
-  * engine to instead share one session and cached prepared data across
-  * requests. This cache holds, per (session, input dir, feature set):
+import graft.core.SessionCache
+
+/** Session-scoped cache of the prepared training matrix per (session,
+  * input dir, feature set), built once through [[graft.core.SessionCache]]:
   * the fitted prep pipeline, the persisted prepped train matrix, the
-  * persisted SMOTE-rebalanced fit input, and the held-out split — so N
-  * model trainings on the same data pay the scan/impute/scale/rebalance
-  * cost once, not N times. All cached stages are deterministic (seed 42
-  * split, hash-derived SMOTE), so cached vs fresh results are identical.
-  *
-  * Entries pin modest executor memory (the prepped matrices); `clear()`
-  * drops everything and unpersists.
+  * persisted SMOTE-rebalanced fit input and the held-out split. The
+  * reference rebuilds all of it per request; here N trainings on the same
+  * data pay scan/impute/scale/rebalance once. Every stage is
+  * deterministic (seed 42 split, hash-derived SMOTE), so cached == fresh.
   */
 object TrainingCache {
 
-  final case class Entry(
-      prep: PipelineModel,
-      preppedTrain: DataFrame,
-      smotedTrain: DataFrame,
-      preppedTest: DataFrame,
-      nTrain: Long,
+  final case class Entry(prep: PipelineModel, preppedTrain: DataFrame,
+      smotedTrain: DataFrame, preppedTest: DataFrame, nTrain: Long,
       nTest: Long)
 
-  private val cache = TrieMap.empty[(String, String, Seq[String]), Entry]
+  private val cache = new SessionCache[(String, Seq[String]), Entry](e =>
+    Seq(e.preppedTrain, e.smotedTrain, e.preppedTest).foreach(_.unpersist()))
 
-  private val buildSecs = TrieMap.empty[(String, String, Seq[String]), Double]
-
-  /** Completed matrix builds this JVM: key -> build seconds (the bench
-    * reports shared-cache build cost as its own line).
-    */
+  /** Completed matrix builds this JVM: key -> build seconds. */
   def buildLog: Map[(String, String, Seq[String]), Double] =
-    synchronized(buildSecs.toMap)
+    cache.buildLog.map { case ((app, (key, fc)), s) => (app, key, fc) -> s }
 
-  /** Get-or-build the prepared matrix for `labeled` (must be a
-    * deterministic function of `key` — the caller's input path).
-    *
-    * Builds run under a coarse lock: TrieMap.getOrElseUpdate may invoke
-    * the builder concurrently under a race, and the losing thread's
-    * persisted frames would leak unreferenced in executor memory.
-    * Builds are rare and heavyweight, so serializing them costs nothing.
-    */
+  /** Get-or-build the prepared matrix for `labeled`, a deterministic
+    * function of `key` (the caller's input path). */
   def entry(spark: SparkSession, key: String, featureCols: Seq[String])
-      (labeled: => DataFrame): Entry = synchronized {
-    // entries bound to a stopped SparkContext are dead weight (their
-    // persisted frames died with the context): drop them so JVMs that
-    // recreate sessions (tests, notebooks) don't accumulate them
-    cache.filterInPlace((_, e) =>
-      !e.preppedTrain.sparkSession.sparkContext.isStopped)
-    val k = (spark.sparkContext.applicationId, key, featureCols)
-    cache.getOrElseUpdate(k, {
-      val t0 = System.nanoTime()
-      val base = labeled.persist()
-      // track per-build persists so a partial failure (OOM mid-SMOTE,
-      // bad input at materialization) releases everything it pinned —
-      // an un-inserted Entry is unreachable by clear()
-      val pinned = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      try {
-        val (tr, te) = MultiModel.split(base)
-        val prep = PrepPipeline.fit(tr, featureCols)
-        val prepped = prep.transform(tr)
-          .select(col("label").cast("double").as("label"),
-            col(PrepPipeline.FeaturesCol))
-          .persist()
-        pinned += prepped
-        val smoted = new Smote().setStrategy("oversample")
-          .transform(prepped).persist()
-        pinned += smoted
-        val preppedTest = prep.transform(te)
-          .select(col("label").cast("double").as("label"),
-            col(PrepPipeline.FeaturesCol))
-          .persist()
-        pinned += preppedTest
-        // materialize every cache while base is pinned
-        smoted.count(); preppedTest.count()
-        val e = Entry(prep, prepped, smoted, preppedTest,
-          tr.count(), te.count())
-        buildSecs.put(k, (System.nanoTime() - t0) / 1e9)
-        e
-      } catch {
-        case e: Throwable =>
-          pinned.foreach(_.unpersist())
-          throw e
-      } finally base.unpersist()
-    })
+      (labeled: => DataFrame): Entry = cache(spark, (key, featureCols)) {
+    val base = labeled.persist()
+    // a failed build (OOM mid-SMOTE, bad input) never reaches the cache,
+    // so it must release everything it pinned itself
+    val pinned = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = { pinned += df; df.persist() }
+    try {
+      val (tr, te) = MultiModel.split(base)
+      val prep = PrepPipeline.fit(tr, featureCols)
+      def prepped(df: DataFrame) = pin(prep.transform(df)
+        .select(col("label").cast("double").as("label"),
+          col(PrepPipeline.FeaturesCol)))
+      val preppedTrain = prepped(tr)
+      val smoted = pin(new Smote().setStrategy("oversample")
+        .transform(preppedTrain))
+      val preppedTest = prepped(te)
+      // materialize every cache while base is pinned
+      smoted.count(); preppedTest.count()
+      Entry(prep, preppedTrain, smoted, preppedTest, tr.count(), te.count())
+    } catch {
+      case e: Throwable => pinned.foreach(_.unpersist()); throw e
+    } finally base.unpersist()
   }
 
-  /** Drop and unpersist every cached matrix (tests / memory pressure).
-    * Entries whose session already stopped are just dropped — their
-    * persisted blocks died with the context, and unpersist would throw.
-    */
-  def clear(): Unit = synchronized {
-    cache.values.foreach { e =>
-      if (!e.preppedTrain.sparkSession.sparkContext.isStopped) {
-        e.preppedTrain.unpersist(); e.smotedTrain.unpersist()
-        e.preppedTest.unpersist()
-      }
-    }
-    cache.clear()
-    buildSecs.clear()
-  }
+  /** Drop and unpersist every cached matrix (tests / memory pressure). */
+  def clear(): Unit = cache.clear()
 }

@@ -152,6 +152,10 @@ class ConcurrencySpec extends SparkSpec {
   test("FrameCache: a builder may request a DIFFERENT key mid-build " +
       "(no map lock held during builds); a failed build is retried, " +
       "never cached") {
+    // empty every ledger so the interval union below covers this test's
+    // builds only
+    FrameCache.clear(); graft.ml.ModelCache.clear()
+    graft.ml.TrainingCache.clear()
     // reentrancy: the promise-based cache runs builds outside the map's
     // bin locks, so a prerequisite frame can be obtained from INSIDE a
     // dependent build (the old computeIfAbsent form forbade this)
@@ -162,6 +166,15 @@ class ConcurrencySpec extends SparkSpec {
       inner.union(spark.range(3).toDF("v"))
     }
     assert(outer.count() === 10L)
+    // the inner build nests inside the outer one: the ledger lists both,
+    // their union counts the nested seconds once
+    val log = FrameCache.buildLog.map { case ((_, k), s) => k -> s }
+    val union = SessionCache.buildUnionSec
+    assert(union < log("conc:reentrant-outer") + log("conc:reentrant-inner"),
+      s"nested build double-counted: union $union, ledger $log")
+    assert(union >= log("conc:reentrant-outer"))
+    FrameCache.clear()
+    assert(SessionCache.buildUnionSec === 0.0, "clear() kept its intervals")
     // failure path: the throwing build's promise must be removed so the
     // next caller retries (and racing waiters see the failure, not a hang)
     val attempts = new AtomicInteger(0)
@@ -177,6 +190,71 @@ class ConcurrencySpec extends SparkSpec {
     }
     assert(ok.count() === 4L)
     assert(attempts.get() === 2, "failed build was cached or retried twice")
+  }
+
+  test("TrainingCache: a slow build on one key does NOT block hits on " +
+      "other keys; a build that throws after persisting releases its " +
+      "frames and is retried") {
+    val tc = graft.ml.TrainingCache
+    val fc = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
+    tc.entry(spark, "conc:tc-hit", fc)(labeled())
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(2)
+    val slowF = pool.submit(new Runnable {
+      override def run(): Unit = tc.entry(spark, "conc:tc-slow", fc) {
+        entered.countDown()
+        release.await(60, TimeUnit.SECONDS)
+        labeled()
+      }
+    })
+    try {
+      assert(entered.await(30, TimeUnit.SECONDS), "slow build never ran")
+      val t0 = System.nanoTime()
+      val hit = pool.submit(new java.util.concurrent.Callable[Long] {
+        override def call(): Long = tc.entry(spark, "conc:tc-hit", fc) {
+          fail("hit key conc:tc-hit rebuilt")
+        }.nTrain
+      })
+      assert(hit.get(10, TimeUnit.SECONDS) > 0L)
+      val hitSecs = (System.nanoTime() - t0) / 1e9
+      assert(release.getCount === 1,
+        "slow build finished before the hit ran — test proves nothing")
+      assert(hitSecs < 10.0,
+        s"hit took ${hitSecs}s while a build was in flight — blocked")
+    } finally {
+      release.countDown()
+      slowF.get(120, TimeUnit.SECONDS)
+      pool.shutdownNow()
+    }
+    // a label only the held-out rows cannot cast: the label sorts after
+    // the features, so poisoning it keeps randomSplit's row order and the
+    // held-out set. The split and prep fit pass, the train matrix and its
+    // SMOTE rebalance materialize, then the test matrix throws.
+    val keyed = Tables.load(spark, sf0001, "lineitem").select(
+      col("l_quantity"), col("l_extendedprice"), col("l_discount"),
+      col("l_tax"), when(col("l_returnflag") === "R", "1").otherwise("0")
+        .as("label"),
+      monotonically_increasing_id().as("id"))
+    val heldOut = graft.ml.MultiModel.split(keyed)._2.select("id")
+      .collect().map(_.getLong(0))
+    // Smote's localCheckpoint RDDs are Spark's lineage truncation, freed
+    // by the ContextCleaner; every other persisted RDD is a pinned frame
+    def pinnedRdds = spark.sparkContext.getPersistentRDDs.values
+      .count(!_.isCheckpointed)
+    val before = pinnedRdds
+    intercept[Exception] {
+      tc.entry(spark, "conc:tc-fail", fc)(keyed.withColumn("label",
+        when(col("id").isin(heldOut.toSeq: _*),
+          concat(col("label"), lit("x"))).otherwise(col("label"))))
+    }
+    assert(pinnedRdds === before, "failed build leaked persisted frames")
+    val builds = new AtomicInteger(0)
+    val e = tc.entry(spark, "conc:tc-fail", fc) {
+      builds.incrementAndGet(); keyed
+    }
+    assert(builds.get() === 1, "failed build was cached")
+    assert(e.nTrain > 0L && e.nTest > 0L)
   }
 
   test("ModelCache: 16 racing fitters of one tag -> exactly one fit; " +
