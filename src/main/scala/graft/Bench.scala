@@ -16,9 +16,8 @@ import graft.core.GraftSession
   *     reps-1 clean passes follow. This folding (round-11 verdict #5)
   *     cuts one full pass (~170 s at sf0.1) off the sweep wall while
   *     keeping the stall-aware median contract on the clean reps.
-  *     SPARK_GRAFT_FOLD_WARMUP=0 restores the round-10 shape (un-timed
-  *     warmup + reps clean passes); folding also auto-disables when
-  *     reps==1 so at least one clean rep always exists.
+  *     Folding is off only without a warmup run (SPARK_GRAFT_WARMUP=0)
+  *     or when reps==1, so at least one clean rep always exists.
   *   - Timed reps are INTERLEAVED round-robin across queries (pass 1 runs
   *     every query once, pass 2 runs every query again, ...). Rationale:
   *     the host shows external stall windows of ~1-2 min that inflate
@@ -88,9 +87,7 @@ object Bench {
     // fold the warmup/profile run into pass 1 (timed, median-excluded) —
     // see the methodology note above; needs a warmup run to fold and at
     // least one clean rep left over
-    val foldWarmup =
-      sys.env.getOrElse("SPARK_GRAFT_FOLD_WARMUP", "1") == "1" &&
-        warmup >= 1 && reps >= 2
+    val foldWarmup = warmup >= 1 && reps >= 2
     val cleanReps = if (foldWarmup) reps - 1 else reps
     // SPARK_GRAFT_PROFILE=cluster: run under clusterDefaults() (2000
     // shuffle partitions pre-AQE, Kryo, skew join, 64 MiB broadcast) —
@@ -148,7 +145,6 @@ object Bench {
       .empty[String, scala.collection.mutable.ArrayBuffer[Double]]
     val failedQ = scala.collection.mutable.LinkedHashSet.empty[String]
     val sweepT0 = System.nanoTime()
-    @volatile var primeWall = 0.0
 
     // ---- streaming progress: one JSONL line per completed run --------
     val progressPath = java.nio.file.Paths.get("bench_progress.jsonl")
@@ -229,7 +225,7 @@ object Bench {
         val divJson = divergent.map("\"" + esc(_) + "\"")
           .mkString("[", ",", "]")
         val fullLine =
-          s"""{"metric":"total","value":${fmt.format(total)},"unit":"sec","queries":$fullJson,"plain_median":$plainJson,"median_divergent":$divJson,"profiles":$profJson,"cache_build_sec":${fmt.format(cacheBuildSec)},$cacheJsonTotals,"cache_prime_wall_sec":${fmt.format(primeWall)},"cache_builds":$cacheJson,"rep_samples":$repsJson,"warmup_sec":$warmJson,"start_offset_sec":$offJson,"sf":"$sfDir","reps":$reps,"clean_reps":$cleanReps,"fold_warmup":$foldWarmup,"warmup":$warmup,"interleaved":true,"failed":$failed,"unreached":$unreached,"partial":$partial}"""
+          s"""{"metric":"total","value":${fmt.format(total)},"unit":"sec","queries":$fullJson,"plain_median":$plainJson,"median_divergent":$divJson,"profiles":$profJson,"cache_build_sec":${fmt.format(cacheBuildSec)},$cacheJsonTotals,"cache_builds":$cacheJson,"rep_samples":$repsJson,"warmup_sec":$warmJson,"start_offset_sec":$offJson,"sf":"$sfDir","reps":$reps,"clean_reps":$cleanReps,"fold_warmup":$foldWarmup,"warmup":$warmup,"interleaved":true,"failed":$failed,"unreached":$unreached,"partial":$partial}"""
         val fullPath = java.nio.file.Paths.get("bench_full.json")
         java.nio.file.Files.write(fullPath, (fullLine + "\n").getBytes("UTF-8"))
         // The full line goes ONLY to the file, never to stderr: sbt's
@@ -248,7 +244,7 @@ object Bench {
         val byCost = results.filter(_._2 < 0) ++ done.sortBy(-_._2)
         val budget = 1400
         val head =
-          s"""{"metric":"total","value":${fmt.format(total)},"unit":"sec","sf":"$sfDir","reps":$reps,"clean_reps":$cleanReps,"warmup":$warmup,"n_queries":${results.size},"failed":$failed,"unreached":$unreached,"partial":$partial,"cache_build_sec":${fmt.format(cacheBuildSec)},$cacheJsonTotals,"cache_prime_wall_sec":${fmt.format(primeWall)},"full":"bench_full.json","queries":{"""
+          s"""{"metric":"total","value":${fmt.format(total)},"unit":"sec","sf":"$sfDir","reps":$reps,"clean_reps":$cleanReps,"warmup":$warmup,"n_queries":${results.size},"failed":$failed,"unreached":$unreached,"partial":$partial,"cache_build_sec":${fmt.format(cacheBuildSec)},$cacheJsonTotals,"full":"bench_full.json","queries":{"""
         val tail0 = "}}"
         val kept = scala.collection.mutable.ListBuffer.empty[String]
         var len = head.length + tail0.length + 40 // slack for omitted_*
@@ -271,59 +267,8 @@ object Bench {
     // stop hook.
     Runtime.getRuntime.addShutdownHook(new Thread(() => emitSummary(true)))
 
-    // ---- pass P (opt-in): parallel shared-cache prime ------------------
-    // SPARK_GRAFT_PRIME=<regex of consumer queries> materializes the
-    // first consumer of each FrameCache / ModelCache / TrainingCache
-    // family CONCURRENTLY before warmup (all three caches are
-    // promise-per-key safe), so the cache builds overlap instead of
-    // running back-to-back inside the serial warmup.
-    // DEFAULT OFF — measured NET-NEGATIVE at sf0.1 on local[32]
-    // (round 11, back-to-back full sweeps): each query already
-    // saturates the 32 cores, so concurrent priming only adds
-    // contention — warmup wall 466 s with prime vs 386 s without, and
-    // the per-build ledger inflates ~3x (292 s contended vs 95 s
-    // serial) because each build's wall now includes its neighbors'
-    // CPU. Kept as an opt-in for environments where builds are
-    // latency-bound rather than CPU-bound (e.g. a real cluster where
-    // the driver waits on executor scheduling, or a much bigger SF
-    // where spill I/O dominates). A name that matches no registered
-    // query is harmless — that family's build just stays in its
-    // consumer's warmup. When enabled, cache_prime_wall_sec reports
-    // the phase's wall and per-build ledger seconds must be read as
-    // contended, not serial, cost.
-    val primeRe = sys.env.getOrElse("SPARK_GRAFT_PRIME", "off")
-    if (primeRe != "off") {
-      val re = primeRe.r
-      val primes = selected.filter { case (n, _) =>
-        re.findFirstIn(n).isDefined }
-      val t0 = System.nanoTime()
-      // numeric fallback: SPARK_GRAFT_CPUS may be "*" (Spark accepts it
-      // in local[...]); the pool sizing must not throw on it
-      val cpuN = cpus.toIntOption.getOrElse(
-        Runtime.getRuntime.availableProcessors())
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(8, math.max(2, cpuN / 4)))
-      try {
-        primes.map { case (name, fn) =>
-          pool.submit(new Runnable { def run(): Unit =
-            try {
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-              System.err.println(s"[bench] prime $name ok")
-            } catch { case scala.util.control.NonFatal(e) =>
-              // non-fatal only, and swallowed: the serial warmup below
-              // records the failure; fatal VM errors must kill the sweep
-              System.err.println(
-                s"[bench] prime $name failed (ignored): ${e.getMessage}")
-            } })
-        }.foreach(_.get())
-      } finally pool.shutdown()
-      primeWall = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[bench] cache prime: ${primes.size} queries, " +
-        f"$primeWall%.1fs wall")
-    }
-
     // ---- pass 0: warmup + plan profile, one query at a time ----------
-    // With foldWarmup (default) this IS timed pass 1 of the sweep: the
+    // With foldWarmup this IS timed pass 1 of the sweep: the
     // per-query wall lands in warmup_sec (median-excluded) and only
     // cleanReps = reps-1 plain passes follow.
     selected.foreach { case (name, fn) =>

@@ -20,16 +20,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * per layer — measured 3.5 s for an sf0.1 corpus pass at n=13 vs
   * ~0.1 s for this expression.
   *
-  * Semantics (mirrors `NearDup.shingles` shape contract):
-  *  - tokens are maximal runs of non-ASCII-whitespace bytes (exactly
-  *    Java regex `\s+` splitting, which is ASCII-only by default —
-  *    multibyte UTF-8 units never contain ASCII bytes);
+  * Semantics — for `text` the lower-cased string, the grams are those of
+  * `split(trim(text), "\\s+")`, Spark's tokenization, so each hash is the
+  * identity of the matching space-joined string gram (the DuckDB
+  * oracles build those strings with the same split):
+  *  - spaces (U+0020 only, like Spark's `trim`) are stripped at both
+  *    ends; every run of ASCII whitespace (Java regex `\s`; multibyte
+  *    UTF-8 units never contain ASCII bytes) then ends a token, so a
+  *    run at either end of the trimmed text leaves an EMPTY token there
+  *    (`"\tabc"` -> ["", "abc"], `"a b\n"` -> ["a", "b", ""]) and the
+  *    empty text is one empty token;
   *  - texts with fewer than n tokens yield ONE hash over all tokens;
   *  - the result is distinct (sorted ascending — callers join/explode,
-  *    order is irrelevant);
-  *  - empty/whitespace-only text yields one hash of the empty token.
+  *    order is irrelevant).
   *
-  * Case folding is the caller's job (`lower(trim(col))`), keeping this
+  * Case folding is the caller's job (`lower(col)`), keeping this
   * expression byte-deterministic.
   */
 case class TokenNgramHashes(child: Expression, n: Int, seed: Long)
@@ -84,23 +89,24 @@ object TokenNgramHashes {
     */
   def hashes(text: UTF8String, n: Int, seed: Long): GenericArrayData = {
     val bytes = text.getBytes
-    val len = bytes.length
-    // pass 1: token hashes (count bounded by len/2+1; size exactly)
+    var from = 0
+    var until = bytes.length
+    while (from < until && bytes(from) == ' ') from += 1
+    while (until > from && bytes(until - 1) == ' ') until -= 1
+    // pass 1: token hashes; each whitespace run closes the token before
+    // it, and the text's end closes the last (count bounded by len/2+2)
     var nTok = 0
-    val tokHashes = new Array[Long](len / 2 + 2)
-    var i = 0
-    while (i < len && isWs(bytes(i))) i += 1
-    if (i >= len) {
-      // whitespace-only/empty: one token, the empty string
-      tokHashes(0) = tokenHash(bytes, 0, 0, seed); nTok = 1
-    } else {
-      while (i < len) {
-        val start = i
-        while (i < len && !isWs(bytes(i))) i += 1
+    val tokHashes = new Array[Long]((until - from) / 2 + 2)
+    var start = from
+    var i = from
+    while (i < until) {
+      if (isWs(bytes(i))) {
         tokHashes(nTok) = tokenHash(bytes, start, i, seed); nTok += 1
-        while (i < len && isWs(bytes(i))) i += 1
-      }
+        while (i < until && isWs(bytes(i))) i += 1
+        start = i
+      } else i += 1
     }
+    tokHashes(nTok) = tokenHash(bytes, start, until, seed); nTok += 1
     // pass 2: rotl13/xor n-window combine; < n tokens -> one whole-text gram
     val nGrams = math.max(nTok - n + 1, 1)
     val out = new Array[Long](nGrams)

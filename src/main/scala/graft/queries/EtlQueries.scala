@@ -1134,7 +1134,7 @@ object EtlQueries extends QueryModule {
 
     "q_sessionize_batch" -> QueryDef(
       (s, dir) => {
-        // batch twin of streaming EventStream.sessionize, oracle-checked:
+        // batch twin of EventStream.sessionWindows, oracle-checked:
         // gap > 30 min starts a new session (all integral micros
         // arithmetic — exact at any scale). The per-user window pass is
         // the shared sessionization subplan (FrameCache via

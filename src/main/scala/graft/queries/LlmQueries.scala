@@ -27,9 +27,11 @@ object LlmQueries extends QueryModule {
   /** Ground truth for the near-dup family: exact all-pairs 3-gram Jaccard
     * >= 0.5 in DuckDB — a completeness gate, not just a sanity row: the
     * engine-side queries must reach the same pair set through
-    * bucket-local candidate generation + exact verify. Shingle
-    * construction mirrors NearDup.shingles exactly (proven bit-compatible
-    * by q_ngram_jaccard).
+    * bucket-local candidate generation + exact verify. The tokenization
+    * is the one NearDup.shingleHashes hashes (TokenNgramHashes tokenizes
+    * like Spark's `split(trim(lower(text)), "\\s+")`), so each engine
+    * shingle hash is the identity of one gram string here — pinned by
+    * q_ngram_jaccard.
     *
     * DUPLICATE-COLLAPSED (round-8, closing the round-7 sf1 skips): the
     * all-pairs join runs over DISTINCT texts, and member doc_ids expand
@@ -1334,7 +1336,7 @@ object LlmQueries extends QueryModule {
             (size(filter(zip_with(col("sa"), col("sb"),
               (a, b) => a === b), x => x)).cast("double") / lit(64.0))
               .as("est_j"))
-        val exact = NearDup.ngramJaccard(docs, "doc_id", "text", pairs,
+        val exact = NearDup.hashJaccard(docs, "doc_id", "text", pairs,
           n = 3)
         // ONE aggregate computes all three measures: a previous revision
         // cross-joined a second est⨝exact aggregate for the MAE, which

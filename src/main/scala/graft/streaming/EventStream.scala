@@ -1,22 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.ml.PipelineModel
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
-  GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 
 import graft.core.Tables
-
-/** One user-session aggregate maintained by [[EventStream.sessionize]]. */
-final case class SessionUpdate(
-    user_id: Long, n_events: Long, start_ms: Long, end_ms: Long,
-    closed: Boolean)
-
-/** Internal per-user session state (top-level: Spark's state encoder needs
-  * a publicly constructible case class).
-  */
-final case class SessionState(start: Long, end: Long, n: Long)
 
 /** Structured Streaming surface (SURVEY §2.10: planned extension — the
   * reference has no streaming, but its Redis prediction push and the
@@ -54,77 +43,9 @@ object EventStream {
       .select(col("window.start").as("window_start"),
         col("event_type"), col("n"), col("total"))
 
-  /** Custom-state sessionization via flatMapGroupsWithState: per-user
-    * sessions split on inactivity gaps, state evicted by event-time
-    * timeout against the watermark. Emits the running session on every
-    * update (Update mode) and a final `closed=true` record on timeout.
-    *
-    * State size is one (start, end, n) triple per active user — bounded
-    * by active-user cardinality, not event volume.
-    */
-  def sessionize(events: DataFrame, watermark: String = "10 minutes",
-      gapMs: Long = 30L * 60 * 1000): Dataset[SessionUpdate] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    // the watermarked event_time column must reach the stateful operator
-    // unchanged (casting it away would detach the watermark)
-    val ds = events
-      .withWatermark("event_time", watermark)
-      .select(col("user_id"), col("event_time"))
-      .as[(Long, java.sql.Timestamp)]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[SessionState, SessionUpdate](
-        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, rows: Iterator[(Long, java.sql.Timestamp)],
-            state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(SessionUpdate(userId, s.n, s.start, s.end,
-              closed = true))
-          } else {
-            val times = rows.map(_._2.getTime).toVector.sorted
-            if (times.isEmpty) Iterator.empty
-            else {
-              // split on inactivity gaps with the carried state folded in
-              // as the seed segment: each event merges if it lies within
-              // gap of the CURRENT (possibly state-extended) session
-              // interval, so a batch mixing late and fresh events cannot
-              // spuriously split a session that the late event just
-              // extended. A late event older than the open session by
-              // MORE than the gap (possible whenever the watermark
-              // duration exceeds the gap) becomes its own closed session
-              // ordered before the live one — merging it would silently
-              // bridge a real inactivity gap. Every superseded session is
-              // emitted closed=true, never silently replaced.
-              val sessions = times.foldLeft(state.getOption.toVector) {
-                (acc, t) =>
-                  acc.lastOption match {
-                    case Some(s) if t < s.start - gapMs =>
-                      acc.init ++ Vector(SessionState(t, t, 1L), s)
-                    case Some(s) if t <= s.end + gapMs =>
-                      acc.init :+ SessionState(math.min(s.start, t),
-                        math.max(s.end, t), s.n + 1)
-                    case _ => acc :+ SessionState(t, t, 1L)
-                  }
-              }
-              val closedMid = sessions.init.map(s =>
-                SessionUpdate(userId, s.n, s.start, s.end, closed = true))
-              val live = sessions.last
-              state.update(live)
-              state.setTimeoutTimestamp(live.end + gapMs)
-              closedMid.iterator ++ Iterator.single(
-                SessionUpdate(userId, live.n, live.start, live.end,
-                  closed = false))
-            }
-          }
-      }
-  }
-
-  /** Declarative sessionization via Spark's native `session_window` —
-    * the engine-managed form of [[sessionize]]'s custom state logic (and
-    * the declarative twin of the batch lag+cumsum gate,
-    * q_sessionize_batch). Works on batch AND streaming frames; in
+  /** Per-user gap sessionization via Spark's native `session_window`
+    * (engine-managed state; the streaming twin of the batch lag+cumsum
+    * gate, q_sessionize_batch). Works on batch AND streaming frames; in
     * streaming the state store holds one merging window per open
     * session, evicted by the watermark.
     *
@@ -132,9 +53,8 @@ object EventStream {
     * property test): session_window merges an event that lands inside
     * the CLOSED interval [start, last+gap] — an event exactly gap after
     * the previous one MERGES — i.e. it splits only on inter-event gaps
-    * STRICTLY GREATER than gap. This matches [[sessionize]]'s custom
-    * state rule (`t <= end + gap` merges); the q_stream_sessionize
-    * oracle encodes the same strict-split rule (`tu - lag > gap`).
+    * STRICTLY GREATER than gap. The q_stream_sessionize oracle encodes
+    * the same strict-split rule (`tu - lag > gap`).
     * EventStreamSpec's property generator emits events exactly gap
     * apart, so a regression on this boundary fails the suite.
     */

@@ -44,7 +44,7 @@ object Decontaminate {
       .select(col(idCol), explode(col("__shingle_hashes")).as("__ngram"))
     // inner join against the deduplicated broadcast set: each (doc,
     // shared-ngram) survives exactly once because both sides are
-    // distinct (shingles() array_distincts per doc), so the count is
+    // distinct (shingleHashes() dedups per doc), so the count is
     // |shared distinct n-grams|
     tg.join(broadcast(benchNgrams),
         col("__ngram") === col("__bench_ngram"))

@@ -15,56 +15,29 @@ import org.apache.spark.sql.types.DecimalType
   */
 object NearDup {
 
-  /** Token n-gram shingles of a text column as a distinct array
-    * (first-occurrence order, the `array_distinct` convention).
+  /** 64-bit rolling-hash token n-gram shingles of a text column, as a
+    * distinct array. The grams are those of Spark's
+    * `split(trim(lower(text)), "\\s+")`, so shingle identity is the
+    * string gram's identity and only equality-based consumers (joins,
+    * intersections, min-hashes) read them: building the n-gram STRINGS
+    * would be wasted allocation, and at n=13 even a hash-only zip_with
+    * fold pays n-1 interpreted-lambda layers per row (HOFs never enter
+    * codegen; measured 3.5 s per sf0.1 corpus pass). Delegates to the
+    * native codegen'd [[graft.functions.TokenNgramHashes]] expression —
+    * one fused JVM tokenize+hash loop per row (~0.1 s same pass).
+    * Collision probability for a 100 TB corpus (~1e12 distinct n-grams)
+    * is ~1e-7 per pair lookup — and deterministic, so a gate that passes
+    * is stable.
     *
-    * History of the construction, fastest last: a per-element
-    * re-splitting transform() (O(tokens·textlen) per doc, 3.6 s per
-    * sf0.1 pass) → an n-1-layer zip_with fold (O(n·tokens) but each
-    * layer an interpreted lambda — HOFs never enter codegen; ~0.4 s per
-    * sf0.1 pass, the hottest remaining interpreted loop of the sf10
-    * sweep) → the native codegen'd
-    * [[graft.functions.TokenNgramStrings]] window join used now.
-    *
-    * Short docs (fewer than n tokens) yield one shingle of all available
-    * tokens; a doc always has at least one shingle (possibly empty-string
-    * for empty text).
-    */
-  def shingles(df: DataFrame, textCol: String, n: Int = 3): DataFrame = {
-    // tokenization stays declarative (Spark's regex split semantics are
-    // inherited, not re-implemented); the n-gram window join runs in the
-    // native codegen'd TokenNgramStrings expression. The previous
-    // formulation — an n-1-layer zip_with fold — evaluated interpreted
-    // lambdas per element per layer (HOFs never enter codegen) and was
-    // the hottest remaining interpreted loop of the sf10 sweep.
-    // Equivalence to the fold (incl. short/empty docs and duplicate
-    // grams) is property-tested in TokenNgramStringsSpec.
-    val toks = split(trim(lower(col(textCol))), "\\s+")
-    df.withColumn("__shingles",
-      graft.functions.TokenNgramStrings.token_ngram_strings(toks, n))
-  }
-
-  /** 64-bit rolling-hash token n-gram shingles — the equality-only
-    * variant of `shingles`. When downstream only JOINS or INTERSECTS
-    * on shingle identity (decontamination, dedup keys), building the
-    * n-gram STRINGS is wasted allocation, and at n=13 even a hash-only
-    * zip_with fold pays n-1 interpreted-lambda layers per row (HOFs
-    * never enter codegen; measured 3.5 s per sf0.1 corpus pass).
-    * Delegates to the native codegen'd
-    * [[graft.functions.TokenNgramHashes]] expression — one fused JVM
-    * tokenize+hash loop per row (~0.1 s same pass). Collision
-    * probability for a 100 TB corpus (~1e12 distinct n-grams) is ~1e-7
-    * per pair lookup — and deterministic, so a gate that passes is
-    * stable.
-    *
-    * Same shape contract as `shingles`: docs with fewer than n tokens
-    * yield one hash over all tokens (distinct, order unspecified).
+    * Docs with fewer than n tokens yield one hash over all tokens, so a
+    * doc always has at least one shingle (the empty token's, for empty
+    * text).
     */
   def shingleHashes(df: DataFrame, textCol: String, n: Int = 13,
       seed: Long = 42L): DataFrame =
     df.withColumn("__shingle_hashes",
       graft.functions.TokenNgramHashes.token_ngram_hashes(
-        lower(trim(col(textCol))), n, seed))
+        lower(col(textCol)), n, seed))
 
   /** Per-document MinHash signatures: `numHashes` independent min-hashes
     * over the shingle set. Shape: explode the shingle array (the shingle
@@ -286,7 +259,7 @@ object NearDup {
     *
     * Degenerate-doc convention (inherited from TokenNgramHashes, and
     * property-tested): a text with fewer than `n` tokens hashes as ONE
-    * whole-text gram, and an empty/whitespace text as one hash of the
+    * whole-text gram, and an empty or all-space text as one hash of the
     * empty token — so NO document ever has an empty shingle set, and the
     * vacuous-⊆ trap (a blank doc "contained in" the entire corpus) is
     * structurally impossible. A short doc pairs exactly with docs whose
@@ -382,10 +355,12 @@ object NearDup {
     (members, setPairs)
   }
 
-  /** Exact n-gram Jaccard over the hashed shingle sets — identical to
-    * [[ngramJaccard]] up to 64-bit hash collisions inside a document
+  /** Exact n-gram Jaccard for given candidate pairs (ids joined back to
+    * texts) — the verification half of [[minHashPairs]] exposed
+    * standalone. It intersects the hashed shingle sets, so it is the
+    * string-gram Jaccard up to 64-bit hash collisions inside a document
     * pair's shingle union (probability ~|set|²·2⁻⁶⁴ ≈ 1e-15 per pair at
-    * ~200 shingles/doc; the minhash/simhash gates hash-match DuckDB's
+    * ~200 shingles/doc; the near-dup gates hash-match DuckDB's
     * STRING-shingle Jaccard at both test scales, confirming zero
     * collisions there). Intersecting longs instead of strings keeps the
     * verify stage inside the same fused-hash fast path as candidate
@@ -407,29 +382,7 @@ object NearDup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  /** Exact n-gram Jaccard for given candidate pairs (ids joined back to
-    * texts); the verification half of [[minHashPairs]] exposed standalone.
-    */
-  def ngramJaccard(df: DataFrame, idCol: String, textCol: String,
-      pairs: DataFrame, n: Int = 3): DataFrame = {
-    // deliberately NOT persisted: the shingle arrays are large (hundreds
-    // of strings per row) and caching them costs more than the two
-    // recomputations (measured 4× slower with persist at sf0.1)
-    val sh = shingles(df, textCol, n)
-      .select(col(idCol).as("__jid"), col("__shingles"))
-    val a = pairs.join(sh, pairs("id_a") === col("__jid"))
-      .withColumnRenamed("__shingles", "__sa").drop("__jid")
-    val b = a.join(sh, a("id_b") === col("__jid"))
-      .withColumnRenamed("__shingles", "__sb").drop("__jid")
-    b.withColumn("__inter",
-        size(array_intersect(col("__sa"), col("__sb"))).cast("double"))
-      .withColumn("jaccard",
-        col("__inter") /
-          (size(col("__sa")) + size(col("__sb")) - col("__inter")))
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
-
-  /** [[ngramJaccard]] specialized to the ADJACENT pair set
+  /** [[hashJaccard]] specialized to the ADJACENT pair set
     * {(id, id+1) | both ids present} — the sliding-window verification
     * sweep. Exploits the arithmetic pair structure for a plan the
     * general join shape can't reach (round-12 sf10 decomposition,
@@ -452,21 +405,20 @@ object NearDup {
     * PRECONDITION: `idCol` values must be UNIQUE (like saltedJoin's
     * join-type restriction, this is part of the public contract). With
     * duplicate ids the `first(when(role...), ignoreNulls)` picks an
-    * arbitrary row per role, diverging from [[ngramJaccard]]'s multiset
+    * arbitrary row per role, diverging from [[hashJaccard]]'s multiset
     * semantics, which would emit one row per matching id pair.
     *
-    * Output ordered by id_a (equality with ngramJaccard on the same
+    * Output ordered by id_a (equality with hashJaccard on the same
     * pair set is spec-pinned; the registered query is oracle-gated).
     */
   def adjacentNgramJaccard(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3): DataFrame = {
-    val sh = shingles(df, textCol, n)
-      .select(col(idCol).as("__id"), col("__shingles"))
+    val sh = shingleHashes(df, textCol, n)
+      .select(col(idCol).as("__id"), col("__shingle_hashes").as("__sh"))
     val tagged = sh.select(explode(array(
-      struct(col("__id").as("pid"), lit(0).as("role"),
-        col("__shingles").as("arr")),
+      struct(col("__id").as("pid"), lit(0).as("role"), col("__sh").as("arr")),
       struct((col("__id") - 1).as("pid"), lit(1).as("role"),
-        col("__shingles").as("arr")))).as("x"))
+        col("__sh").as("arr")))).as("x"))
       .select(col("x.pid"), col("x.role"), col("x.arr"))
     val g = tagged.groupBy(col("pid"))
       .agg(first(when(col("role") === 0, col("arr")), ignoreNulls = true)

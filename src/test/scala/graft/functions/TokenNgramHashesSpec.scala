@@ -11,6 +11,7 @@ import graft.text.NearDup
 class TokenNgramHashesSpec extends SparkSpec {
 
   import spark.implicits._
+  import TokenNgramHashesSpec.stringGrams
 
   private def hashesOf(text: String, n: Int): Seq[Long] =
     NearDup.shingleHashes(Seq((1L, text)).toDF("id", "t"), "t", n)
@@ -19,13 +20,21 @@ class TokenNgramHashesSpec extends SparkSpec {
   test("gram count and equality structure match the string shingles") {
     val texts = Seq(
       "a b c d e f", "a b c d e", "x a b c d e f y",
-      "one two", "single")
-    for (t <- texts; n <- Seq(2, 3, 5)) {
-      val strings = NearDup.shingles(Seq((1L, t)).toDF("id", "t"), "t", n)
-        .select(col("__shingles")).head().getSeq[String](0)
-      val hs = hashesOf(t, n)
-      assert(hs.size === strings.size, s"text='$t' n=$n")
-      assert(hs.distinct.size === hs.size)
+      "one two", "single", "\tabc d e", "a b c\n", "\t", "")
+    for (n <- Seq(2, 3, 5)) {
+      val hs = NearDup.shingleHashes(texts.zipWithIndex.toDF("t", "id"),
+          "t", n)
+        .select(col("id"), col("__shingle_hashes")).collect()
+        .map(r => r.getInt(0) -> r.getSeq[Long](1)).toMap
+      val gs = texts.map(stringGrams(_, n))
+      for (i <- texts.indices) {
+        assert(hs(i).size === gs(i).size, s"text='${texts(i)}' n=$n")
+        assert(hs(i).distinct.size === hs(i).size)
+        // equal hashes exactly where the string grams are equal
+        for (j <- texts.indices)
+          assert(hs(i).intersect(hs(j)).size === gs(i).intersect(gs(j)).size,
+            s"texts='${texts(i)}','${texts(j)}' n=$n")
+      }
     }
   }
 
@@ -52,5 +61,20 @@ class TokenNgramHashesSpec extends SparkSpec {
     assert(hashesOf("A B C", 3) === hashesOf("a b c", 3))
     // "a b a b a b" has 3-grams {aba, bab} twice each -> 2 distinct
     assert(hashesOf("a b a b a b", 3).size === 2)
+  }
+}
+
+object TokenNgramHashesSpec {
+
+  /** The distinct space-joined n-grams of Spark's
+    * `split(trim(lower(text)), "\\s+")`, built driver-side: strip U+0020
+    * only (Spark's `trim`), lower-case, split keeping leading and
+    * trailing empty tokens, take n-windows (one window of all tokens
+    * when there are fewer than n).
+    */
+  def stringGrams(text: String, n: Int): Set[String] = {
+    val trimmed = text.dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse
+    trimmed.toLowerCase(java.util.Locale.ROOT).split("\\s+", -1).toSeq
+      .sliding(n).map(_.mkString(" ")).toSet
   }
 }

@@ -159,6 +159,65 @@ class DistributedPrimitivesPropertySpec extends SparkSpec {
     }
   }
 
+  // --- hashed-gram Jaccard vs driver-side string-gram Jaccard ----------
+
+  // mixed-case tokens joined by random whitespace runs, with random
+  // leading and trailing whitespace; the edge texts ride in every sample
+  // (a non-space whitespace byte at either end of the trimmed text is an
+  // empty token in Spark's split, so it is part of the grams)
+  private val wsCorpusGen: Gen[List[String]] = {
+    val ws = Gen.oneOf(" ", "  ", "\t", "\n", " \r\n")
+    val edge = Gen.oneOf("", "", " ", "\t", " \t", "\n ")
+    for {
+      nDocs <- Gen.choose(3, 12)
+      docs <- Gen.listOfN(nDocs, for {
+        len <- Gen.choose(1, 9)
+        toks <- Gen.listOfN(len, Gen.oneOf("a", "b", "B", "c", "abc", "d"))
+        seps <- Gen.listOfN(len - 1, ws)
+        lead <- edge
+        trail <- edge
+      } yield lead + toks.head +
+        seps.zip(toks.tail).map { case (w, t) => w + t }.mkString + trail)
+    } yield docs ++ List("\tabc d e", "a b c\n", "\t", "")
+  }
+
+  test("property: hashJaccard and adjacentNgramJaccard == driver-side " +
+      "string-gram Jaccard on random corpora (edge whitespace included)") {
+    import graft.functions.TokenNgramHashesSpec.stringGrams
+    for ((docs, k) <- samples(wsCorpusGen, 6).zipWithIndex) {
+      // a gap after every third id, so some docs have no right neighbor
+      val all = docs.zipWithIndex.map { case (d, i) => (i + i / 3L, d) }
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(all.map { case (id, t) =>
+          Row(id, t) }, 3),
+        StructType(Seq(StructField("id", LongType, nullable = false),
+          StructField("text", StringType, nullable = false))))
+      val grams = all.map { case (id, t) => id -> stringGrams(t, 3) }.toMap
+      def jaccard(a: Long, b: Long): Double = {
+        val inter = grams(a).intersect(grams(b)).size.toDouble
+        inter / (grams(a).size + grams(b).size - inter)
+      }
+      val ids = all.map(_._1)
+      val pairs = for (a <- ids; b <- ids if a < b) yield (a, b)
+      val pairsDf = spark.createDataFrame(
+        spark.sparkContext.parallelize(pairs.map { case (a, b) =>
+          Row(a, b) }, 3),
+        StructType(Seq(StructField("id_a", LongType, nullable = false),
+          StructField("id_b", LongType, nullable = false))))
+      val got = NearDup.hashJaccard(df, "id", "text", pairsDf, n = 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .toSet
+      assert(got === pairs.map { case (a, b) => (a, b, jaccard(a, b)) }.toSet,
+        s"sample #$k docs=$docs")
+      val adjacent = NearDup.adjacentNgramJaccard(df, "id", "text", n = 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .toSeq
+      val expectAdjacent = ids.sorted.filter(a => grams.contains(a + 1))
+        .map(a => (a, a + 1, jaccard(a, a + 1)))
+      assert(adjacent === expectAdjacent, s"sample #$k docs=$docs")
+    }
+  }
+
   // --- duplicate-collapsed near-dup == raw-id reference ----------------
 
   // duplication-HEAVY corpora: base docs from the small alphabet, then

@@ -38,42 +38,6 @@ class EventStreamSpec extends SparkSpec {
     assert(streamed === batch)
   }
 
-  test("sessionize splits on gaps and accounts for every event") {
-    val gapMs = 3600L * 1000
-    val events = EventStream.readEvents(spark, eventsDir)
-    val q = EventStream.sessionize(events, gapMs = gapMs)
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode("update")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val sessions = spark.table("sessions")
-    assert(sessions.filter(col("start_ms") > col("end_ms")).count() === 0)
-    // a session can be emitted as running and again as timeout-closed —
-    // dedupe by (user, start); the max n_events is the session's final size
-    val got = sessions.groupBy("user_id", "start_ms")
-      .agg(max("n_events").as("n"))
-      .groupBy("user_id")
-      .agg(sum("n").as("events"), count(lit(1)).as("n_sessions"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
-      .toMap
-    // driver-side reference: per-user gap-split over the same events
-    val expected = Tables.load(spark, sf0001, "events")
-      .selectExpr("user_id", "ts div 1000 as ms").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(_._1).map { case (u, rows) =>
-        val ts = rows.map(_._2).sorted
-        val nSessions = 1L + ts.sliding(2).count {
-          case Array(a, b) => b - a > gapMs
-          case _ => false
-        }
-        u -> (ts.length.toLong, nSessions)
-      }
-    assert(got === expected)
-    // the fixture really exercises multi-session users
-    assert(expected.values.exists(_._2 > 1))
-  }
-
   test("native session_window matches the custom-state and lag+cumsum " +
       "sessionizations") {
     // batch mode: the declarative engine-managed sessionization must

@@ -41,7 +41,7 @@ class NearDupSpec extends SparkSpec {
         (col("doc_id") + 1).as("id_b"))
       .join(d.select(col("doc_id").as("id_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"))
-    val general = NearDup.ngramJaccard(d, "doc_id", "text", pairs, n = 3)
+    val general = NearDup.hashJaccard(d, "doc_id", "text", pairs, n = 3)
       .orderBy(col("id_a")).collect().toSeq
     val adjacent = NearDup.adjacentNgramJaccard(d, "doc_id", "text", n = 3)
       .collect().toSeq
@@ -69,7 +69,7 @@ class NearDupSpec extends SparkSpec {
 
   test("ngramJaccard computes exact jaccard on given pairs") {
     val pairs = Seq((1L, 4L), (1L, 3L)).toDF("id_a", "id_b")
-    val out = NearDup.ngramJaccard(docs, "doc_id", "text", pairs)
+    val out = NearDup.hashJaccard(docs, "doc_id", "text", pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
       .toMap
     assert(out((1L, 4L)) === 1.0)

@@ -14,7 +14,8 @@ Fails (exit 1) if COVERAGE.md's totals line disagrees, OR if the driver
 gate has any non-green row — so COVERAGE.md can never claim "ALL green"
 while the driver's own file shows a red (that drift shipped in round 5:
 the doc said 195/195, the gate said 194/195), OR if a COVERAGE.md row
-cites a graft `Object.member` that src/main no longer declares.
+cites a graft `Object.member` that src/main no longer declares or a
+`dir/File.scala` that src/main/scala/graft no longer has.
 
 Note the asymmetry vs the local registry: the newest driver file is one
 round old by construction (it graded the previous commit). Queries added
@@ -157,6 +158,15 @@ def main():
                 dangling.append(f"{obj}.{member}")
     if dangling:
         failures.append(f"COVERAGE.md cites undeclared code: {sorted(set(dangling))}")
+
+    # 6) Dangling file references: a backticked `dir/File.scala` must
+    #    exist under src/main/scala/graft — a row citing a deleted file
+    #    fails even though no `Object.member` of it is named.
+    missing = sorted({f for f in re.findall(r"`((?:\w+/)+\w+\.scala)", cov)
+                      if not os.path.isfile(os.path.join(
+                          REPO, "src/main/scala/graft", f))})
+    if missing:
+        failures.append(f"COVERAGE.md cites missing files: {missing}")
 
     m = re.search(r"\*\*Totals: (\d+) registered queries — ALL (\d+) "
                   r"DuckDB-oracle hash-checked\s*\((\d+)\s*rows-only\)", cov)
