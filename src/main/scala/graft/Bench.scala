@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.core.GraftSession
-
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query seconds.
   *
@@ -78,7 +76,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // default 5 (round 8): the sandbox host shows external stall windows
     // of ~1-2 min that inflate consecutive runs 10-30x (rep_samples in
     // bench_full.json carry the evidence); 5 interleaved reps survive one
@@ -89,20 +86,12 @@ object Bench {
     // least one clean rep left over
     val foldWarmup = warmup >= 1 && reps >= 2
     val cleanReps = if (foldWarmup) reps - 1 else reps
-    // SPARK_GRAFT_PROFILE=cluster: run under clusterDefaults() (2000
+    // SPARK_GRAFT_PROFILE=cluster runs under clusterDefaults() (2000
     // shuffle partitions pre-AQE, Kryo, skew join, 64 MiB broadcast) —
     // the smoke path that proves the documented cluster profile actually
-    // executes. Default stays the local measurement profile.
-    val clusterProfile =
-      sys.env.get("SPARK_GRAFT_PROFILE").contains("cluster")
-    val base = SparkSession.builder().master(s"local[$cpus]")
-      .appName("graft-bench")
-    val spark = (if (clusterProfile)
-        GraftSession.benchScratch(GraftSession.clusterDefaults(base))
-      else GraftSession.benchScratch(GraftSession.configure(base))
-        .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    GraftSession.tuneScanSplits(spark)
+    // executes; SPARK_GRAFT_ONLY=<regex> restricts the run to matching
+    // query names (see SparkEntry.measurement)
+    val (spark, matching) = SparkEntry.measurement("graft-bench")
     // ERROR, not WARN: repeated executor warnings (cache-manager,
     // single-partition-window notices) add hundreds of lines to the
     // merged output the driver captures; the bench result must not
@@ -111,16 +100,12 @@ object Bench {
     // see executor heartbeat failures, which log below ERROR).
     spark.sparkContext.setLogLevel(
       sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "ERROR"))
-    // local-iteration aids (both unset in the driver's per-round
-    // invocation): SPARK_GRAFT_ONLY=<regex> restricts the run to matching
-    // query names; SPARK_GRAFT_SKIP=<regex> excludes matches — used by
-    // the scale sweeps to leave out the queries whose CONTRACTED OUTPUT
-    // grows super-linearly (the full pair-list gates), so the ladder's
-    // numbers measure the engine, not the contracted output volume
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
+    // SPARK_GRAFT_SKIP=<regex> excludes matches — used by the scale
+    // sweeps to leave out the queries whose CONTRACTED OUTPUT grows
+    // super-linearly (the full pair-list gates), so the ladder's numbers
+    // measure the engine, not the contracted output volume
     val skip = sys.env.get("SPARK_GRAFT_SKIP").map(_.r)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.findFirstIn(n).isDefined) }
+    val selected = matching
       .filter { case (n, _) => !skip.exists(_.findFirstIn(n).isDefined) }
 
     val fmt = new java.text.DecimalFormat("0.###",

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
@@ -8,29 +7,15 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_PROFILE=cluster: dump under clusterDefaults() so the
-    // documented cluster profile's CORRECTNESS (not just liveness) is
-    // checkable — oracle results must be identical under 2000-partition
-    // Kryo-serialized execution or the profile is wrong
-    val base = SparkSession.builder().master(s"local[$cpus]")
-      .appName("graft-verify")
-    val spark = (if (sys.env.get("SPARK_GRAFT_PROFILE").contains("cluster"))
-        graft.core.GraftSession.benchScratch(
-          graft.core.GraftSession.clusterDefaults(base))
-      else graft.core.GraftSession.benchScratch(
-        graft.core.GraftSession.configure(base))
-        .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    graft.core.GraftSession.tuneScanSplits(spark)
+    // same session and SPARK_GRAFT_ONLY selection as Bench; under
+    // SPARK_GRAFT_PROFILE=cluster the dump checks the cluster profile's
+    // CORRECTNESS (not just liveness) — oracle results must be identical
+    // under 2000-partition Kryo-serialized execution or the profile is
+    // wrong
+    val (spark, selected) = SparkEntry.measurement("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // local-iteration aid (same contract as Bench): SPARK_GRAFT_ONLY=<regex>
-    // restricts the dump to matching names; unset in the driver invocation
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.findFirstIn(n).isDefined) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       System.err.println(s"[verify] running $name")
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{GraftSession, Tables}
 import graft.eval.Metrics
-import graft.io.{Experiment, ExperimentManifest, Sinks}
+import graft.io.{Experiment, ExperimentManifest, RedisSink, Sinks}
 import graft.ml.{ModelRegistry, MultiModel}
 
 /** CLI batch entry points mirroring the reference's DVC/CLI surface
@@ -85,8 +85,8 @@ object TrainJob {
 
 /** `ScoreJob <dataDir> <modelDir> <name> [mode]` — Predictor parity:
   * smoke = accuracy bound on the test split; db = push predictions to
-  * Redis (REDIS_HOST/REDIS_PORT env) with JSON fallback; json = write the
-  * predictions document (predict.py:118-260).
+  * Redis (GRAFT_REDIS_HOST, GRAFT_REDIS_PORT default 6379) with JSON
+  * fallback; json = write the predictions document (predict.py:118-260).
   */
 object ScoreJob {
   def main(args: Array[String]): Unit = {
@@ -105,11 +105,11 @@ object ScoreJob {
         println(s"""{"mode": "smoke", "test_score": $acc}""")
       case "db" =>
         val preds = MultiModel.score(model, te)
-        val pushed = (sys.env.get("REDIS_HOST"), sys.env.get("REDIS_PORT")) match {
-          case (Some(h), Some(p)) =>
-            graft.io.RedisSink.writeList(preds, "prediction", h, p.toInt)
+        val pushed = RedisSink.endpointFromEnv match {
+          case Some((h, p)) =>
+            RedisSink.writeList(preds, "prediction", h, p)
             true
-          case _ =>
+          case None =>
             Sinks.jsonPredictions(preds, "prediction",
               s"$modelDir/$name-predictions.json")
             false

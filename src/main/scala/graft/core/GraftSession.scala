@@ -63,6 +63,12 @@ object GraftSession {
       .config("spark.network.timeout", "600s")
       .config("spark.executor.heartbeat.maxFailures", "120")
 
+  /** Local parallelism of the entry points: `SPARK_GRAFT_CPUS`, else the
+    * host's core count.
+    */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
   /** Tmpfs shuffle scratch for MEASUREMENT entry points (Bench/Verify)
     * ONLY — never [[configure]]/[[clusterDefaults]]: tmpfs spill consumes
     * RAM, so a production profile spilling there would defeat the point

@@ -26,15 +26,10 @@ object ColumnStats {
   }
 
   /** A2 — exact distinct count per column in one pass (notebook
-    * `nunique()`). Uses `count_distinct` per column; for 100 TB profiling
-    * prefer [[approxDistinctCounts]] (single-pass HLL, no expand).
+    * `nunique()`), one `count_distinct` per column.
     */
   def distinctCounts(df: DataFrame, cols: Seq[String]): DataFrame =
     df.select(cols.map(c => count_distinct(col(c)).as(c)): _*)
-
-  /** A2 at scale — HLL++ sketches, one scan, mergeable across executors. */
-  def approxDistinctCounts(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.select(cols.map(c => approx_count_distinct(col(c)).as(c)): _*)
 
   /** A3 — most frequent value of a column, ties broken by smallest value
     * (deterministic, unlike pandas' arbitrary `.mode().iloc[0]`).

@@ -88,6 +88,13 @@ class RedisClient(host: String, port: Int, timeoutMs: Int = 5000)
   */
 object RedisSink {
 
+  /** The Redis endpoint every main uses: `GRAFT_REDIS_HOST`, with
+    * `GRAFT_REDIS_PORT` (default 6379); None when no host is set.
+    */
+  def endpointFromEnv: Option[(String, Int)] =
+    sys.env.get("GRAFT_REDIS_HOST").map(h =>
+      h -> sys.env.getOrElse("GRAFT_REDIS_PORT", "6379").toInt)
+
   def writeList(df: DataFrame, predictionCol: String, host: String,
       port: Int, key: String = "predictions", chunk: Int = 512): Unit = {
     val vals = df.select(col(predictionCol).cast("long").cast("string"))

@@ -40,28 +40,6 @@ object Sinks {
       .parquet(path)
   }
 
-  /** Corpus-layout parquet writer — the 100 TB physical-layout recipe:
-    * repartition by the partition columns (one shuffle; otherwise every
-    * task writes a file into every partition dir → small-file explosion),
-    * sort rows within files by a locality key (e.g. the content
-    * fingerprint, so dup-candidate rows are adjacent and parquet row-group
-    * min/max stats prune digest probes), and cap rows per file so single
-    * files stay rewritable.
-    *
-    * Downstream reads then get partition pruning on the partition columns
-    * for free (`PartitionFilters` in the scan).
-    */
-  def parquetCorpus(df: DataFrame, path: String,
-      partitionCols: Seq[String], sortCols: Seq[String],
-      maxRecordsPerFile: Long = 5000000L): Unit = {
-    val keyed = df.repartition(partitionCols.map(col): _*)
-      .sortWithinPartitions((partitionCols ++ sortCols).map(col): _*)
-    keyed.write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
-  }
-
   /** S4 — JSON predictions document
     * `{"predictions": [...], "created_at": ...}` (reference
     * /root/reference/src/predict.py:248-260). Collapses to a single JSON

@@ -30,42 +30,6 @@ object Sources {
       "iso-8859-1"
     else e
 
-  /** The two halves of a dead-letter CSV read; call [[BadRecordSplit.release]]
-    * once both frames are consumed to free the backing cache (the scan
-    * must be persisted — Spark disallows filtering a lazy scan on only
-    * its corrupt-record column, and the halves would otherwise re-read
-    * and re-parse the file twice).
-    */
-  final case class BadRecordSplit(good: DataFrame, bad: DataFrame,
-      release: () => Unit)
-
-  /** S1 variant — malformed-row routing: PERMISSIVE read with the corrupt
-    * raw line captured, split into valid rows + corrupt raw lines. The
-    * messy-CSV defense the reference handles by pandas' tolerant parser;
-    * here every malformed line is preserved for a dead-letter sink instead
-    * of being silently coerced.
-    */
-  def csvWithBadRecords(spark: SparkSession, path: String,
-      schema: StructType, encoding: String = "latin1"): BadRecordSplit = {
-    val corruptCol = "_corrupt_record"
-    val df = spark.read
-      .option("header", "true")
-      .option("encoding", normalizeEncoding(encoding))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", corruptCol)
-      .schema(StructType(schema.fields :+
-        org.apache.spark.sql.types.StructField(corruptCol,
-          org.apache.spark.sql.types.StringType)))
-      .csv(path)
-      .persist()
-    BadRecordSplit(
-      Preprocess.trimHeaders(
-        df.filter(col(corruptCol).isNull).drop(corruptCol)),
-      df.filter(col(corruptCol).isNotNull)
-        .select(col(corruptCol).as("raw_line")),
-      () => { df.unpersist(); () })
-  }
-
   /** S3 — JSON scoring documents `{"X": [...], "y": [...]}`
     * (reference /root/reference/src/predict.py:131-135): multiline scan,
     * explode the X record array to rows, carry y positionally via the

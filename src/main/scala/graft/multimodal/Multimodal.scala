@@ -323,21 +323,6 @@ object Multimodal {
     bos.toByteArray
   }
 
-  /** Resize: metadata-level transform (stub keeps payload; a real codec
-    * would re-encode). Clamps to the target box preserving aspect ratio.
-    */
-  def resize(media: DataFrame, maxW: Int, maxH: Int): DataFrame = {
-    val scale = least(
-      lit(maxW.toDouble) / col("meta.width"),
-      lit(maxH.toDouble) / col("meta.height"),
-      lit(1.0))
-    media.withColumn("meta", struct(
-      floor(col("meta.width") * scale).cast(IntegerType).as("width"),
-      floor(col("meta.height") * scale).cast(IntegerType).as("height"),
-      col("meta.n_frames").as("n_frames"),
-      col("meta.sample_rate").as("sample_rate")))
-  }
-
   /** Frame sampling for video rows: one (media_id, frame_idx) row per
     * sampled frame at the given stride — explode is narrow, so sampling
     * scales with output rows, not source payload size.

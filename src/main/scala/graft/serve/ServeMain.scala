@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.cli.Jobs
 import graft.core.GraftSession
+import graft.io.RedisSink
 
 /** Container entry point for the serving layer — the engine's analogue of
   * the reference's web service in its two-service compose stack
@@ -16,7 +17,7 @@ import graft.core.GraftSession
   *   GRAFT_MODEL_DIR   model + registry dir (default /tmp/graft_models)
   *   GRAFT_REDIS_HOST  optional — enables the Redis prediction cache
   *   GRAFT_REDIS_PORT  (default 6379 when host is set)
-  *   SPARK_GRAFT_CPUS  local[] parallelism (default 8)
+  *   SPARK_GRAFT_CPUS  local[] parallelism (default: the host's cores)
   *
   * See DEPLOY.md for the compose recipe and CI notes.
   */
@@ -25,12 +26,11 @@ object ServeMain {
     val port = sys.env.getOrElse("GRAFT_PORT", "8080").toInt
     val sfDir = sys.env.getOrElse("GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val modelDir = sys.env.getOrElse("GRAFT_MODEL_DIR", "/tmp/graft_models")
-    val redis = sys.env.get("GRAFT_REDIS_HOST").map(h =>
-      h -> sys.env.getOrElse("GRAFT_REDIS_PORT", "6379").toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val redis = RedisSink.endpointFromEnv
+    val cpus = GraftSession.cpus
     val spark = GraftSession.configure(
       SparkSession.builder().master(s"local[$cpus]").appName("graft-serve"))
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // same modeling frame as the CLI jobs and gated queries — one

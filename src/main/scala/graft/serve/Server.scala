@@ -101,8 +101,12 @@ class GraftServer(
       respond(ex, code, body)
     })
 
+  /** The query string's parameters, each key and value decoded once:
+    * split the raw query first, so an encoded `&`, `=`, `+` or `%` stays
+    * part of its value.
+    */
   private def queryParams(ex: HttpExchange): Map[String, String] =
-    Option(ex.getRequestURI.getQuery).getOrElse("").split("&")
+    Option(ex.getRequestURI.getRawQuery).getOrElse("").split("&")
       .filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2)
         java.net.URLDecoder.decode(k, "UTF-8") ->

@@ -402,11 +402,11 @@ object NearDup {
     *     job re-reads 24-byte rows — without it the sampling pass
     *     re-executes the assembly+intersect (+3.6 s at sf10).
     *
-    * PRECONDITION: `idCol` values must be UNIQUE (like saltedJoin's
-    * join-type restriction, this is part of the public contract). With
-    * duplicate ids the `first(when(role...), ignoreNulls)` picks an
-    * arbitrary row per role, diverging from [[hashJaccard]]'s multiset
-    * semantics, which would emit one row per matching id pair.
+    * PRECONDITION: `idCol` values must be UNIQUE (this is part of the
+    * public contract). With duplicate ids the
+    * `first(when(role...), ignoreNulls)` picks an arbitrary row per role,
+    * diverging from [[hashJaccard]]'s multiset semantics, which would
+    * emit one row per matching id pair.
     *
     * Output ordered by id_a (equality with hashJaccard on the same
     * pair set is spec-pinned; the registered query is oracle-gated).

@@ -178,6 +178,19 @@ class ServerSpec extends SparkSpec {
         System.currentTimeMillis()))
       assert(at("/metrics/?name=broken")._1 === 500)
       assert(at("/predict/?mode=smoke&name=broken")._1 === 500)
+      // each query value is decoded once: an encoded %, & or + is part
+      // of the name
+      val (ec, eb) = at("/predict/?mode=smoke&name=%25zz")
+      assert(ec === 404, eb)
+      assert(eb.contains("unknown model %zz"))
+      val (ac, ab) = at("/metrics/?name=x%26y")
+      assert(ac === 404, ab)
+      assert(ab.contains("unknown model x&y"))
+      val (tc, tb) = at("/train/?model_type=D_TREE&name=a%2Bb")
+      assert(tc === 200, tb)
+      val reg = new ModelRegistry(s"$dir/registry.jsonl")
+      assert(reg.latest("a+b").isDefined)
+      assert(reg.latest("a b").isEmpty)
     } finally fresh.stop()
   }
 

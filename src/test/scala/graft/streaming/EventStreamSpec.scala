@@ -6,40 +6,10 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.core.Tables
-import graft.ml.MultiModel
 
 class EventStreamSpec extends SparkSpec {
 
-  /** File streaming source wants a directory: stage events.parquet into a
-    * temp dir (hard-link copy).
-    */
-  private lazy val eventsDir: String = {
-    val dir = Files.createTempDirectory("graft-events-stream")
-    Files.copy(java.nio.file.Paths.get(s"$sf0001/events.parquet"),
-      dir.resolve("events.parquet"))
-    dir.toString
-  }
-
-  test("windowed counts over the events stream match the batch result") {
-    val events = EventStream.readEvents(spark, eventsDir)
-    val stream = EventStream.windowedCounts(events)
-    // complete mode: emit every window incl. the last still-open one, so
-    // totals are comparable to the batch count (append would hold back
-    // windows above the final watermark)
-    val q = stream.writeStream
-      .format("memory").queryName("win_counts")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val streamed = spark.table("win_counts")
-      .agg(sum("n")).head().getLong(0)
-    val batch = Tables.load(spark, sf0001, "events").count()
-    assert(streamed === batch)
-  }
-
-  test("native session_window matches the custom-state and lag+cumsum " +
-      "sessionizations") {
+  test("native session_window matches the lag+cumsum sessionization") {
     // batch mode: the declarative engine-managed sessionization must
     // agree with the lag+cumsum construction on per-user session counts
     // and event conservation (no 30-min-exact gaps exist in the fixture,
@@ -66,85 +36,15 @@ class EventStreamSpec extends SparkSpec {
     assert(native.values.exists(_._1 > 1))
   }
 
-  test("streaming dedup drops watermark-window duplicates") {
-    // stage the same documents file twice: every doc arrives twice with
-    // identical event-time → the second copy must be dropped
-    val dir = Files.createTempDirectory("graft-docs-stream")
-    Files.copy(java.nio.file.Paths.get(s"$sf0001/documents.parquet"),
-      dir.resolve("a.parquet"))
-    Files.copy(java.nio.file.Paths.get(s"$sf0001/documents.parquet"),
-      dir.resolve("b.parquet"))
-    val docs = EventStream.readDocs(spark, dir.toString)
-    val q = EventStream.dedupDocs(docs).writeStream
-      .format("memory").queryName("dedup_docs")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val batch = Tables.load(spark, sf0001, "documents")
-    val distinctTexts = batch.select("text").distinct().count()
-    // the staging doubled every doc (2N rows in), so output == distinct
-    // texts proves the dedup dropped the N duplicate copies — an
-    // identity pass-through would emit 2N and fail this equality
-    assert(spark.table("dedup_docs").count() === distinctTexts)
-    assert(distinctTexts === batch.count()) // fixture: all texts unique
-  }
-
-  test("streaming curation gate matches the batch computation exactly") {
-    val dir = Files.createTempDirectory("graft-docs-curate")
-    Files.copy(java.nio.file.Paths.get(s"$sf0001/documents.parquet"),
-      dir.resolve("docs.parquet"))
-    val q = EventStream.curateDocs(EventStream.readDocs(spark, dir.toString))
-      .select("doc_id", "lang_id", "quality")
-      .writeStream.format("memory").queryName("curated_docs")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val streamed = spark.table("curated_docs")
-      .collect().map(_.toString).sorted.toSeq
-    val batchDocs = Tables.load(spark, sf0001, "documents")
-    val expected = EventStream.curateDocs(
-        batchDocs.withColumn("event_time", lit(null)))
-      .select("doc_id", "lang_id", "quality")
-      .collect().map(_.toString).sorted.toSeq
-    assert(streamed === expected)
-    assert(streamed.nonEmpty)
-  }
-
-  test("stream-static anti join admits only documents new to the corpus") {
-    val dir = Files.createTempDirectory("graft-docs-ingest")
-    Files.copy(java.nio.file.Paths.get(s"$sf0001/documents.parquet"),
-      dir.resolve("docs.parquet"))
-    // the static corpus already contains docs 0..49 (same texts), so
-    // exactly those must be dropped from the stream
-    val corpus = Tables.load(spark, sf0001, "documents")
-      .filter(org.apache.spark.sql.functions.col("doc_id") < 50)
-    val q = EventStream.antiJoinCorpus(
-        EventStream.readDocs(spark, dir.toString), corpus)
-      .select("doc_id")
-      .writeStream.format("memory").queryName("ingest_new")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val admitted = spark.table("ingest_new")
-      .collect().map(_.getLong(0)).sorted.toSeq
-    val all = Tables.load(spark, sf0001, "documents").count()
-    assert(admitted.size.toLong === all - 50)
-    assert(admitted.forall(_ >= 50))
-  }
-
   test("checkpointed restart resumes exactly-once: no reprocessing") {
-    import org.apache.spark.sql.functions.col
-    val src = Files.createTempDirectory("graft-docs-ckpt-src")
-    val out = Files.createTempDirectory("graft-docs-ckpt-out")
-    val ckpt = Files.createTempDirectory("graft-docs-ckpt")
-    Files.copy(java.nio.file.Paths.get(s"$sf0001/documents.parquet"),
+    val src = Files.createTempDirectory("graft-events-ckpt-src")
+    val out = Files.createTempDirectory("graft-events-ckpt-out")
+    val ckpt = Files.createTempDirectory("graft-events-ckpt")
+    Files.copy(java.nio.file.Paths.get(s"$sf0001/events.parquet"),
       src.resolve("batch1.parquet"))
     def runOnce(): Unit = {
-      val q = EventStream.readDocs(spark, src.toString)
-        .select("doc_id", "text")
+      val q = EventStream.readEvents(spark, src.toString)
+        .select("event_id", "ts")
         .writeStream.format("parquet")
         .option("path", out.toString)
         .option("checkpointLocation", ckpt.toString)
@@ -152,73 +52,21 @@ class EventStreamSpec extends SparkSpec {
         .start()
       q.awaitTermination(120000)
     }
+    val events = Tables.load(spark, sf0001, "events")
+    val n0 = events.count()
     runOnce()
     val n1 = spark.read.parquet(out.toString).count()
-    // second batch: 100 NEW docs (shifted ids) landing as a new file
-    Tables.load(spark, sf0001, "documents")
-      .filter(col("doc_id") < 100)
-      .withColumn("doc_id", col("doc_id") + 1000000)
+    // second batch: 100 NEW events (shifted ids) landing as a new file
+    events.filter(col("event_id") < 100)
+      .withColumn("event_id", col("event_id") + 1000000)
       .coalesce(1)
       .write.mode("append").parquet(src.toString)
     runOnce()
     val after = spark.read.parquet(out.toString)
     // exactly-once: batch1 not reprocessed on restart, batch2 fully in
-    assert(n1 === 500L)
-    assert(after.count() === 600L)
-    assert(after.select("doc_id").distinct().count() === 600L)
-  }
-
-  test("stream-stream interval join matches the batch equivalent") {
-    val events = EventStream.readEvents(spark, eventsDir)
-    val q = EventStream.purchaseAttribution(events)
-      .writeStream.format("memory").queryName("attribution")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val streamed = spark.table("attribution").count()
-
-    val batch = Tables.load(spark, sf0001, "events")
-      .withColumn("event_time", expr("timestamp_micros(ts div 1000)"))
-    val p = batch.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("event_time").as("purchase_time"))
-    val s = batch.filter(col("event_type") === "signup")
-      .select(col("event_id").as("signup_id"),
-        col("user_id").as("signup_user"),
-        col("event_time").as("signup_time"))
-    val expected = p.join(s,
-      col("user_id") === col("signup_user") &&
-        col("signup_time") <= col("purchase_time") &&
-        col("signup_time") >= col("purchase_time") -
-          expr("INTERVAL 30 days")).count()
-    assert(streamed === expected)
-    assert(expected > 0)
-  }
-
-  test("scoreStream scores micro-batches with a persisted model") {
-    val labeled = Tables.load(spark, sf0001, "lineitem").select(
-      when(col("l_returnflag") === "R", 1.0).otherwise(0.0).as("label"),
-      col("l_quantity"), col("l_extendedprice"), col("l_discount"),
-      col("l_tax"))
-    val t = MultiModel.train(labeled,
-      Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"),
-      "D_TREE", Map("max_depth" -> "3"), useSmote = false)
-
-    val events = EventStream.readEvents(spark, eventsDir)
-      .select(col("event_id"),
-        col("value").as("l_quantity"),
-        (col("value") * 100).as("l_extendedprice"),
-        lit(0.05).as("l_discount"), lit(0.02).as("l_tax"))
-
-    val scored = new java.util.concurrent.atomic.AtomicLong(0)
-    val q = EventStream.scoreStream(events, t.pipeline) { (batch, _) =>
-      scored.addAndGet(
-        batch.filter(col("prediction").isin(0.0, 1.0)).count())
-      ()
-    }.start()
-    q.awaitTermination(120000)
-    assert(scored.get() === Tables.load(spark, sf0001, "events").count())
+    assert(n1 === n0)
+    assert(after.count() === n0 + 100)
+    assert(after.select("event_id").distinct().count() === n0 + 100)
   }
 
   // ------------------------------------------------------------------

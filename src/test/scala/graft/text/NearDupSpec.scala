@@ -26,7 +26,7 @@ class NearDupSpec extends SparkSpec {
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
   }
 
-  test("adjacentNgramJaccard equals ngramJaccard on the adjacent pair set") {
+  test("adjacentNgramJaccard equals hashJaccard on the adjacent pair set") {
     // gapped + shuffled ids: pair (2,3) exists, (4,5)/(1,2) partial-gap
     // cases (5 and 0 absent) must behave identically in both shapes,
     // including a doc (id 7) with NO adjacent partner at all
@@ -67,7 +67,7 @@ class NearDupSpec extends SparkSpec {
     assert(hamming12 < hamming13)
   }
 
-  test("ngramJaccard computes exact jaccard on given pairs") {
+  test("hashJaccard computes exact jaccard on given pairs") {
     val pairs = Seq((1L, 4L), (1L, 3L)).toDF("id_a", "id_b")
     val out = NearDup.hashJaccard(docs, "doc_id", "text", pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))

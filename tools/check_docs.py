@@ -15,7 +15,9 @@ gate has any non-green row — so COVERAGE.md can never claim "ALL green"
 while the driver's own file shows a red (that drift shipped in round 5:
 the doc said 195/195, the gate said 194/195), OR if a COVERAGE.md row
 cites a graft `Object.member` that src/main no longer declares or a
-`dir/File.scala` that src/main/scala/graft no longer has.
+`dir/File.scala` that src/main/scala/graft no longer has, OR if README.md
+or DEPLOY.md names a `GRAFT_*`/`SPARK_GRAFT_*` env var that nothing under
+src/main, tools/ or build.sbt reads.
 
 Note the asymmetry vs the local registry: the newest driver file is one
 round old by construction (it graded the previous commit). Queries added
@@ -167,6 +169,25 @@ def main():
                           REPO, "src/main/scala/graft", f))})
     if missing:
         failures.append(f"COVERAGE.md cites missing files: {missing}")
+
+    # 7) Documented env vars: every `GRAFT_*` or `SPARK_GRAFT_*` name in
+    #    README.md or DEPLOY.md must be read under src/main, tools/ or
+    #    build.sbt — as a quoted name (what sys.env / os.environ take) or
+    #    a shell expansion ($NAME, ${NAME...}). A mention in a comment or
+    #    docstring does not count as a read.
+    deploy = open(os.path.join(REPO, "DEPLOY.md")).read()
+    readers = ""
+    for path in (glob.glob(os.path.join(REPO, "src/main/**/*"), recursive=True)
+                 + glob.glob(os.path.join(REPO, "tools/*"))
+                 + [os.path.join(REPO, "build.sbt")]):
+        if os.path.isfile(path):
+            readers += open(path, errors="replace").read()
+    documented = set(re.findall(r"\b(?:SPARK_)?GRAFT_[A-Z0-9_]*[A-Z0-9]\b",
+                                readme + deploy))
+    unread = sorted(v for v in documented
+                    if not re.search(rf"([\"']){v}\1|\$\{{?{v}\b", readers))
+    if unread:
+        failures.append(f"README/DEPLOY name env vars nothing reads: {unread}")
 
     m = re.search(r"\*\*Totals: (\d+) registered queries — ALL (\d+) "
                   r"DuckDB-oracle hash-checked\s*\((\d+)\s*rows-only\)", cov)
