@@ -15,14 +15,23 @@ import graft.ml.{ModelRegistry, MultiModel}
   */
 object Jobs {
 
-  private[cli] def session(app: String): SparkSession =
+  /** The session of the long-lived mains (the CLI jobs and ServeMain):
+    * `SPARK_MASTER`, else `local[SPARK_GRAFT_CPUS]`, with one shuffle
+    * partition per core, as the measurement mains run.
+    */
+  private[graft] def session(app: String): SparkSession = {
+    val cpus = GraftSession.cpus
     GraftSession.configure(SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]")).appName(app))
+      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
+      .appName(app))
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .getOrCreate()
+  }
 
   /** The modeling view over the synthetic corpus (stands in for the
     * reference's preprocessed CICIDS matrix). Public: the serving entry
-    * point (ServeMain) and the CLI jobs must train on the SAME frame.
+    * point (ServeMain), the CLI jobs and the ML gate queries must train
+    * on the SAME frame.
     */
   def labeled(spark: SparkSession, sfDir: String): DataFrame =
     Tables.load(spark, sfDir, "lineitem").select(

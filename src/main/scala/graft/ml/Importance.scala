@@ -2,7 +2,6 @@ package graft.ml
 
 import org.apache.spark.ml.classification.RandomForestClassificationModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 import graft.etl.Preprocess
 
@@ -39,9 +38,8 @@ object Importance {
   def pruneFeatures(labeled: DataFrame, featureCols: Seq[String],
       threshold: Double = 0.001, nTrees: Int = 20)
       : (DataFrame, Seq[String]) = {
-    val prep = PrepPipeline.fit(labeled, featureCols)
-    val prepped = prep.transform(labeled)
-      .select(col("label"), col(PrepPipeline.FeaturesCol))
+    val prepped = PrepPipeline.matrix(
+      PrepPipeline.fit(labeled, featureCols), labeled)
     val rf = Trainers.randomForest(nEstimators = nTrees).fit(prepped)
     val drop = dropList(rf, featureCols, threshold)
     (Preprocess.dropTolerant(labeled, drop),

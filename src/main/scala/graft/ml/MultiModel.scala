@@ -35,15 +35,12 @@ object MultiModel {
   def train(train: DataFrame, featureCols: Seq[String], modelType: String,
       params: Map[String, String] = Map.empty,
       useSmote: Boolean = true,
-      smoteStrategy: String = "smote"): Trained = {
+      smoteStrategy: String = "oversample"): Trained = {
     val prep = PrepPipeline.fit(train, featureCols)
     // the prepped matrix feeds SMOTE's class histogram + neighborhood
     // pass, the classifier fit and the training-accuracy scan — persist
     // once instead of re-running impute/assemble/scale per consumer
-    val prepped = prep.transform(train)
-      .select(col("label").cast("double").as("label"),
-        col(PrepPipeline.FeaturesCol))
-      .persist()
+    val prepped = PrepPipeline.matrix(prep, train).persist()
     try {
       val fitInput =
         if (useSmote)

@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.ml.feature.{Imputer, StandardScaler, VectorAssembler}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** L1 — the reference's preprocessing pipeline re-expressed as spark.ml
   * stages: mean-impute → assemble → standardize
@@ -17,17 +18,13 @@ object PrepPipeline {
 
   val FeaturesCol = "features"
 
-  /** Build the unfit pipeline over the given numeric feature columns.
-    *
-    * @param imputeStrategy "mean" (reference default), "median" or "mode"
-    * @param withMean       center to zero mean (sklearn StandardScaler
-    *                       default; dense output)
+  /** Fit mean-impute → assemble → standardize (zero mean, unit variance,
+    * sklearn's StandardScaler defaults) over the given numeric feature
+    * columns of `df`.
     */
-  def build(featureCols: Seq[String], imputeStrategy: String = "mean",
-      withMean: Boolean = true, withStd: Boolean = true): Pipeline = {
+  def fit(df: DataFrame, featureCols: Seq[String]): PipelineModel = {
     val imputed = featureCols.map(c => s"imp_$c")
     val imputer = new Imputer()
-      .setStrategy(imputeStrategy)
       .setInputCols(featureCols.toArray)
       .setOutputCols(imputed.toArray)
     val assembler = new VectorAssembler()
@@ -37,12 +34,15 @@ object PrepPipeline {
     val scaler = new StandardScaler()
       .setInputCol("assembled")
       .setOutputCol(FeaturesCol)
-      .setWithMean(withMean)
-      .setWithStd(withStd)
-    new Pipeline().setStages(Array(imputer, assembler, scaler))
+      .setWithMean(true)
+    new Pipeline().setStages(Array(imputer, assembler, scaler)).fit(df)
   }
 
-  def fit(df: DataFrame, featureCols: Seq[String],
-      imputeStrategy: String = "mean"): PipelineModel =
-    build(featureCols, imputeStrategy).fit(df)
+  /** The prepared matrix `(label: double, features)` of `df` under a
+    * fitted prep: what SMOTE, every classifier fit and every held-out
+    * score read.
+    */
+  def matrix(prep: PipelineModel, df: DataFrame): DataFrame =
+    prep.transform(df).select(col("label").cast("double").as("label"),
+      col(FeaturesCol))
 }

@@ -3,7 +3,6 @@ package graft.ml
 import org.apache.spark.ml.classification.{
   Classifier, DecisionTreeClassifier, LogisticRegression, NaiveBayes,
   RandomForestClassifier}
-import org.apache.spark.ml.PipelineStage
 
 /** L2-L5 — the four classifiers the reference exposes through `/train/`
   * (reference /root/reference/src/train.py:116-159; param surface
@@ -18,12 +17,10 @@ object Trainers {
 
   val Seed = 42L
 
-  /** L2 — logistic regression. `solver` ∈ {lbfgs, liblinear} in the
-    * reference (train.py:116-126); Spark always uses its internal
-    * L-BFGS/OWL-QN so the value is metadata only.
+  /** L2 — logistic regression (train.py:116-126); Spark always uses its
+    * internal L-BFGS/OWL-QN, so the reference's `solver` is recorded only.
     */
-  def logReg(maxIter: Int = 100, solver: String = "lbfgs")
-      : LogisticRegression =
+  def logReg(maxIter: Int = 100): LogisticRegression =
     new LogisticRegression()
       .setMaxIter(maxIter)
       .setLabelCol("label").setFeaturesCol(PrepPipeline.FeaturesCol)
@@ -64,8 +61,7 @@ object Trainers {
       params: Map[String, String] = Map.empty): Classifier[_, _, _] = {
     def p(k: String, d: Int): Int = params.get(k).map(_.toInt).getOrElse(d)
     modelType.toUpperCase match {
-      case "LOG_REG" =>
-        logReg(p("max_iter", 100), params.getOrElse("solver", "lbfgs"))
+      case "LOG_REG" => logReg(p("max_iter", 100))
       case "RAND_FOREST" =>
         randomForest(p("n_estimators", 100),
           params.getOrElse("criterion", "gini"))

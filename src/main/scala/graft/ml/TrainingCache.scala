@@ -1,24 +1,24 @@
 package graft.ml
 
-import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 import graft.core.SessionCache
 
 /** Session-scoped cache of the prepared training matrix per (session,
   * input dir, feature set), built once through [[graft.core.SessionCache]]:
-  * the fitted prep pipeline, the persisted prepped train matrix, the
-  * persisted SMOTE-rebalanced fit input and the held-out split. The
-  * reference rebuilds all of it per request; here N trainings on the same
-  * data pay scan/impute/scale/rebalance once. Every stage is
-  * deterministic (seed 42 split, hash-derived SMOTE), so cached == fresh.
+  * the persisted prepped train matrix, the persisted SMOTE-rebalanced fit
+  * input and the persisted prepped held-out split. The build is
+  * [[MultiModel.train]]'s own sequence with its defaults (split → prep fit
+  * + [[PrepPipeline.matrix]] → oversample), so a classifier fit on
+  * `smotedTrain` is the classifier `MultiModel.train` fits. The reference
+  * rebuilds all of it per request; here N trainings on the same data pay
+  * scan/impute/scale/rebalance once. Every stage is deterministic (seed
+  * 42 split, hash-derived SMOTE), so cached == fresh.
   */
 object TrainingCache {
 
-  final case class Entry(prep: PipelineModel, preppedTrain: DataFrame,
-      smotedTrain: DataFrame, preppedTest: DataFrame, nTrain: Long,
-      nTest: Long)
+  final case class Entry(preppedTrain: DataFrame, smotedTrain: DataFrame,
+      preppedTest: DataFrame, nTrain: Long, nTest: Long)
 
   private val cache = new SessionCache[(String, Seq[String]), Entry](e =>
     Seq(e.preppedTrain, e.smotedTrain, e.preppedTest).foreach(_.unpersist()))
@@ -39,16 +39,13 @@ object TrainingCache {
     try {
       val (tr, te) = MultiModel.split(base)
       val prep = PrepPipeline.fit(tr, featureCols)
-      def prepped(df: DataFrame) = pin(prep.transform(df)
-        .select(col("label").cast("double").as("label"),
-          col(PrepPipeline.FeaturesCol)))
-      val preppedTrain = prepped(tr)
+      val preppedTrain = pin(PrepPipeline.matrix(prep, tr))
       val smoted = pin(new Smote().setStrategy("oversample")
         .transform(preppedTrain))
-      val preppedTest = prepped(te)
+      val preppedTest = pin(PrepPipeline.matrix(prep, te))
       // materialize every cache while base is pinned
       smoted.count(); preppedTest.count()
-      Entry(prep, preppedTrain, smoted, preppedTest, tr.count(), te.count())
+      Entry(preppedTrain, smoted, preppedTest, tr.count(), te.count())
     } catch {
       case e: Throwable => pinned.foreach(_.unpersist()); throw e
     } finally base.unpersist()

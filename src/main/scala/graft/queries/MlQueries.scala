@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.cli.Jobs
 import graft.core.{QueryDef, QueryModule, Tables}
 import graft.eval.Metrics
 import graft.ml.{Importance, ModelCache, MultiModel, PrepPipeline, Smote,
@@ -20,31 +21,14 @@ object MlQueries extends QueryModule {
   private def T(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
-  /** The modeling frame: lineitem numerics as features, return-flag as the
-    * binary label (the engine's stand-in for the reference's 47-feature
-    * CICIDS matrix).
-    */
-  private val FeatureCols =
-    Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-
-  private def labeledLineitem(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "lineitem").select(
-      when(col("l_returnflag") === "R", 1.0).otherwise(0.0).as("label"),
-      col("l_quantity"), col("l_extendedprice"), col("l_discount"),
-      col("l_tax"))
-
-  /** Persist the labeled modeling frame for the duration of `body`: the
-    * split/prep/SMOTE/fit/score stages each rescan their input, and all
-    * of them derive from this one frame. Safe to unpersist on exit —
-    * every query below returns a small driver-built result frame.
-    */
   /** The shared prepared-matrix cache entry for a testdata dir (split +
     * prep fit + SMOTE paid once per session per dir — SURVEY §7.4.6's
     * cached-prepared-data requirement; every stage is deterministic so
-    * cached == fresh).
+    * cached == fresh). Built from the modeling frame the CLI jobs and
+    * the server train on, [[Jobs.labeled]].
     */
   private def prepared(s: SparkSession, dir: String): TrainingCache.Entry =
-    TrainingCache.entry(s, dir, FeatureCols)(labeledLineitem(s, dir))
+    TrainingCache.entry(s, dir, Jobs.FeatureCols)(Jobs.labeled(s, dir))
 
   /** Train one reference model type end-to-end and report the
     * oracle-expressible invariants of the run: the split conserves every
@@ -53,8 +37,9 @@ object MlQueries extends QueryModule {
     * ([0.3, 1.0] — the lineitem numerics are near-uninformative for the
     * return flag, so a balanced-trained model scores ~0.5 on the 2:1 test
     * split; raw accuracy values stay spec-asserted, not hashed).
-    * Semantics identical to MultiModel.train(useSmote=true) + scoring —
-    * the classifier fit is the only per-model stage.
+    * Semantics identical to MultiModel.train(useSmote=true) + scoring
+    * (MlPipelineSpec pins the classifier) — the classifier fit is the
+    * only per-model stage.
     */
   private def trainerQuery(modelType: String,
       params: Map[String, String]): (SparkSession, String) => DataFrame =
@@ -194,7 +179,7 @@ object MlQueries extends QueryModule {
         // Per-class Bernoulli at the scan, no shuffle. Gate: DuckDB
         // recomputes the exact per-class totals; fraction 1.0 must keep
         // every minority row exactly, fraction 0.1 must land within ±2pp.
-        val labeled = labeledLineitem(s, dir)
+        val labeled = Jobs.labeled(s, dir)
         val sampled = labeled.stat.sampleBy("label",
             Map(0.0 -> 0.1, 1.0 -> 1.0), seed = 42L)
           .groupBy(col("label")).agg(count(lit(1)).as("__n"))
@@ -218,17 +203,16 @@ object MlQueries extends QueryModule {
       (s, dir) => {
         // SMOTE balance invariant IS oracle-checkable: post-transform both
         // classes sit at the majority count.
-        val df = labeledLineitem(s, dir)
+        val df = Jobs.labeled(s, dir)
         // the prep FIT (two stat scans) is deterministic input
         // preparation shared across reps/serving, exactly like
         // TrainingCache's role for the trainer family; the SMOTE
         // transform itself — the operator under measurement — runs fresh
         val prep = ModelCache.fitted(s, dir, "PREP:full")(
-          PrepPipeline.fit(df, FeatureCols))
+          PrepPipeline.fit(df, Jobs.FeatureCols))
           .asInstanceOf[org.apache.spark.ml.PipelineModel]
-        val prepped = prep.transform(df)
-          .select(col("label"), col(PrepPipeline.FeaturesCol))
-        new Smote().setStrategy("smote").setK(3).transform(prepped)
+        new Smote().setStrategy("smote").setK(3)
+          .transform(PrepPipeline.matrix(prep, df))
           .groupBy(col("label")).agg(count(lit(1)).as("cnt"))
           .orderBy(col("label"))
       },
@@ -255,7 +239,7 @@ object MlQueries extends QueryModule {
         // broadcast single-row aggregate, not a global window — a
         // partitionBy(lit(1)) spec gets constant-folded away and
         // executes as an unpartitioned WindowExec.
-        val ranked = Importance.ranked(s, rf, FeatureCols)
+        val ranked = Importance.ranked(s, rf, Jobs.FeatureCols)
         ranked
           .crossJoin(broadcast(
             ranked.agg(sum(col("importance")).as("__sum"))))
@@ -313,15 +297,13 @@ object MlQueries extends QueryModule {
               val train = base.filter(col("fold") =!= f).drop("fold")
               val test = base.filter(col("fold") === f).drop("fold")
               val prep = ModelCache.fitted(s, dir, s"CV_PREP:fold=$f")(
-                PrepPipeline.fit(train, FeatureCols))
+                PrepPipeline.fit(train, Jobs.FeatureCols))
                 .asInstanceOf[org.apache.spark.ml.PipelineModel]
               val clf = ModelCache.fitted(s, dir, s"CV_DT:fold=$f")(
                 Trainers.byName("D_TREE", Map("max_depth" -> "5"))
-                  .fit(prep.transform(train)
-                    .select(col("label"), col(PrepPipeline.FeaturesCol)))
+                  .fit(PrepPipeline.matrix(prep, train))
                   .asInstanceOf[org.apache.spark.ml.Transformer])
-              val scored = clf.transform(prep.transform(test)
-                .select(col("label"), col(PrepPipeline.FeaturesCol)))
+              val scored = clf.transform(PrepPipeline.matrix(prep, test))
               val r = scored.agg(count(lit(1)).as("n"),
                 sum(when(col("label") === col("prediction"), 1L)
                   .otherwise(0L)).as("ok")).head()

@@ -1,9 +1,6 @@
 package graft.serve
 
-import org.apache.spark.sql.SparkSession
-
 import graft.cli.Jobs
-import graft.core.GraftSession
 import graft.io.RedisSink
 
 /** Container entry point for the serving layer — the engine's analogue of
@@ -17,7 +14,9 @@ import graft.io.RedisSink
   *   GRAFT_MODEL_DIR   model + registry dir (default /tmp/graft_models)
   *   GRAFT_REDIS_HOST  optional — enables the Redis prediction cache
   *   GRAFT_REDIS_PORT  (default 6379 when host is set)
-  *   SPARK_GRAFT_CPUS  local[] parallelism (default: the host's cores)
+  *   SPARK_MASTER      Spark master (default local[SPARK_GRAFT_CPUS])
+  *   SPARK_GRAFT_CPUS  local[] parallelism and shuffle partitions
+  *                     (default: the host's cores)
   *
   * See DEPLOY.md for the compose recipe and CI notes.
   */
@@ -27,11 +26,7 @@ object ServeMain {
     val sfDir = sys.env.getOrElse("GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val modelDir = sys.env.getOrElse("GRAFT_MODEL_DIR", "/tmp/graft_models")
     val redis = RedisSink.endpointFromEnv
-    val cpus = GraftSession.cpus
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-serve"))
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .getOrCreate()
+    val spark = Jobs.session("graft-serve")
     spark.sparkContext.setLogLevel("WARN")
     // same modeling frame as the CLI jobs and gated queries — one
     // definition (Jobs.labeled), three consumers

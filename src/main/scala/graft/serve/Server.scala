@@ -14,7 +14,6 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
-import graft.eval.Metrics
 import graft.io.RedisSink
 import graft.ml.{ModelCache, ModelEntry, ModelRegistry, MultiModel, Smote,
   Trainers}
@@ -142,6 +141,19 @@ class GraftServer(
       MultiModel.load(entry.path)
     }.asInstanceOf[PipelineModel]
 
+  /** The entry's confusion counts over the held-out split, as
+    * (label, prediction, n) sorted by label then prediction: the one
+    * scoring pass behind smoke's `test_score` and `/metrics/`.
+    */
+  private def confusion(entry: ModelEntry): Seq[(Double, Double, Long)] = {
+    import scala.math.Ordering.Double.TotalOrdering
+    val (_, te) = prepared
+    MultiModel.score(loaded(entry), te)
+      .groupBy(col("label").cast("double").as("label"), col("prediction"))
+      .count().collect()
+      .map(r => (r.getDouble(0), r.getDouble(1), r.getLong(2))).toSeq.sorted
+  }
+
   route("/train/") { ex =>
     val p = queryParams(ex)
     def invalid(k: String) = throw new HttpError(400, s"invalid $k: ${p(k)}")
@@ -196,9 +208,10 @@ class GraftServer(
       case None =>
         val result: Map[String, Any] = mode match {
           case "smoke" =>
-            val (_, te) = prepared
+            val cm = confusion(entry)
+            val correct = cm.collect { case (l, p, n) if l == p => n }.sum
             Map("mode" -> "smoke",
-              "test_score" -> MultiModel.accuracy(loaded(entry), te))
+              "test_score" -> correct.toDouble / cm.map(_._3).sum)
           case "db" =>
             val (_, te) = prepared
             val preds = MultiModel.score(loaded(entry), te)
@@ -226,13 +239,8 @@ class GraftServer(
 
   route("/metrics/") { ex =>
     val entry = resolve(queryParams(ex))
-    val (_, te) = prepared
-    val cm = Metrics.confusion(
-      MultiModel.score(loaded(entry), te)
-        .select(col("label").cast("double").as("label"),
-          col("prediction")))
-      .collect().map(r => Seq(r.get(0), r.get(1), r.get(2)))
-    Map("name" -> entry.name, "confusion" -> cm.toSeq)
+    Map("name" -> entry.name,
+      "confusion" -> confusion(entry).map { case (l, p, n) => Seq(l, p, n) })
   }
 
   def start(): Unit = server.start()

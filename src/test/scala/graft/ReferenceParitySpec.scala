@@ -64,9 +64,7 @@ class ReferenceParitySpec extends SparkSpec {
     assert(acc >= 0.0 && acc <= 1.0)
 
     // 5. SMOTE balanced the training matrix exactly (reference invariant)
-    val prep = PrepPipeline.fit(tr, featureCols)
-    val prepped = prep.transform(tr)
-      .select(col("label"), col(PrepPipeline.FeaturesCol))
+    val prepped = PrepPipeline.matrix(PrepPipeline.fit(tr, featureCols), tr)
     val smoted = new Smote().setK(3).transform(prepped)
       .groupBy("label").count().collect()
       .map(r => r.getDouble(0) -> r.getLong(1)).toMap

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.cli.Jobs
 import graft.core.Tables
 import graft.eval.Metrics
 
@@ -74,8 +75,7 @@ class MlPipelineSpec extends SparkSpec {
     ModelCache.clear()
     var fits = 0
     val (tr, _) = MultiModel.split(labeled)
-    val prep = PrepPipeline.fit(tr, featureCols)
-    val prepped = prep.transform(tr)
+    val prepped = PrepPipeline.matrix(PrepPipeline.fit(tr, featureCols), tr)
     def fitDt(): org.apache.spark.ml.Transformer = {
       fits += 1
       Trainers.decisionTree(maxDepth = 3).fit(prepped)
@@ -109,9 +109,8 @@ class MlPipelineSpec extends SparkSpec {
   }
 
   test("M2 SMOTE balances classes exactly") {
-    val prep = PrepPipeline.fit(labeled, featureCols)
-    val prepped = prep.transform(labeled)
-      .select(col("label"), col(PrepPipeline.FeaturesCol))
+    val prepped = PrepPipeline.matrix(
+      PrepPipeline.fit(labeled, featureCols), labeled)
     val out = new Smote().setStrategy("smote").setK(3).transform(prepped)
     val counts = out.groupBy("label").count().collect()
       .map(r => r.getDouble(0) -> r.getLong(1)).toMap
@@ -119,9 +118,8 @@ class MlPipelineSpec extends SparkSpec {
   }
 
   test("M2 SMOTE is deterministic under fixed seed") {
-    val prep = PrepPipeline.fit(labeled, featureCols)
-    val prepped = prep.transform(labeled)
-      .select(col("label"), col(PrepPipeline.FeaturesCol))
+    val prepped = PrepPipeline.matrix(
+      PrepPipeline.fit(labeled, featureCols), labeled)
     def runSum() = new Smote().setStrategy("smote").setK(3)
       .transform(prepped)
       .select(explode(
@@ -132,9 +130,8 @@ class MlPipelineSpec extends SparkSpec {
   }
 
   test("M2 oversample strategy duplicates real minority rows only") {
-    val prep = PrepPipeline.fit(labeled, featureCols)
-    val prepped = prep.transform(labeled)
-      .select(col("label"), col(PrepPipeline.FeaturesCol)).cache()
+    val prepped = PrepPipeline.matrix(
+      PrepPipeline.fit(labeled, featureCols), labeled).cache()
     val out = new Smote().setStrategy("oversample").transform(prepped)
     val counts = out.groupBy("label").count().collect()
       .map(r => r.getDouble(0) -> r.getLong(1)).toMap
@@ -148,9 +145,8 @@ class MlPipelineSpec extends SparkSpec {
   }
 
   test("A10 importances cover all features and sum to ~1") {
-    val prep = PrepPipeline.fit(labeled, featureCols)
-    val prepped = prep.transform(labeled)
-      .select(col("label"), col(PrepPipeline.FeaturesCol))
+    val prepped = PrepPipeline.matrix(
+      PrepPipeline.fit(labeled, featureCols), labeled)
     val rf = Trainers.randomForest(nEstimators = 5).fit(prepped)
     val ranked = Importance.ranked(spark, rf, featureCols).collect()
     assert(ranked.map(_.getString(0)).sorted === featureCols.sorted.toArray)
@@ -186,5 +182,32 @@ class MlPipelineSpec extends SparkSpec {
     assert(rep(1.0)._2 === 1.0)
     assert(rep(1.0)._3 === 0.5)
     assert(math.abs(rep(1.0)._4 - 2.0 / 3.0) < 1e-12)
+  }
+
+  // last in the suite: TrainingCache unpersists its input, which is the
+  // plan `labeled` caches
+  test("a D_TREE fit on TrainingCache's smotedTrain is the classifier " +
+      "MultiModel.train fits with useSmote and oversample") {
+    TrainingCache.clear()
+    val e = TrainingCache.entry(spark, sf0001, Jobs.FeatureCols)(
+      Jobs.labeled(spark, sf0001))
+    val (tr, te) = MultiModel.split(Jobs.labeled(spark, sf0001))
+    val trained = MultiModel.train(tr, Jobs.FeatureCols, "D_TREE",
+      useSmote = true, smoteStrategy = "oversample")
+    type Dt = org.apache.spark.ml.classification.DecisionTreeClassificationModel
+    val viaTrain = trained.pipeline.stages.last.asInstanceOf[Dt]
+    val viaCache = Trainers.byName("D_TREE").fit(e.smotedTrain)
+      .asInstanceOf[Dt]
+    def shape(m: Dt) =
+      m.toDebugString.replaceAll("uid=dtc_[0-9a-f]+", "uid=<norm>")
+    assert(shape(viaCache) === shape(viaTrain))
+    // the same predictions on the held-out split, row for row
+    val predicted = MultiModel.score(trained.pipeline, te)
+      .select("prediction").collect().map(_.getDouble(0)).toSeq
+    val cached = viaCache.transform(e.preppedTest)
+      .select("prediction").collect().map(_.getDouble(0)).toSeq
+    assert(predicted.size === e.nTest)
+    assert(cached === predicted)
+    TrainingCache.clear()
   }
 }

@@ -155,6 +155,30 @@ class ServerSpec extends SparkSpec {
     assert(body.contains("confusion"))
   }
 
+  test("smoke test_score is the trace over the total of the /metrics/ " +
+      "confusion, and MultiModel.accuracy of the saved model") {
+    val (tc, tb) = post("/train/?model_type=D_TREE&name=one_score")
+    assert(tc === 200, tb)
+    val entry = registry.latest("one_score").get
+    val (sc, sb) = post("/predict/?mode=smoke&name=one_score")
+    assert(sc === 200, sb)
+    val (mc, mb) = post("/metrics/?name=one_score")
+    assert(mc === 200, mb)
+    val cm = new com.fasterxml.jackson.databind.ObjectMapper().readTree(mb)
+      .get("confusion")
+    val cells = (0 until cm.size).map(i => cm.get(i))
+      .map(c => (c.get(0).asDouble, c.get(1).asDouble, c.get(2).asLong))
+    import scala.math.Ordering.Double.TotalOrdering
+    assert(cells === cells.sortBy(c => (c._1, c._2)))
+    val (_, te) = MultiModel.split(labeled())
+    assert(cells.map(_._3).sum === te.count())
+    val trace = cells.collect { case (l, p, n) if l == p => n }.sum
+    val fromMetrics = trace.toDouble / cells.map(_._3).sum
+    assert(testScore(sb) === fromMetrics)
+    assert(fromMetrics ===
+      MultiModel.accuracy(MultiModel.load(entry.path), te))
+  }
+
   test("unknown or missing model is 404 on /predict/ and /metrics/; an " +
       "internal failure is 500") {
     val dir = Files.createTempDirectory("graft-serve-codes").toString
