@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.GraftSession
+
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query seconds.
   *
@@ -14,17 +16,18 @@ import org.apache.spark.sql.SparkSession
   *     reps-1 clean passes follow. This folding (round-11 verdict #5)
   *     cuts one full pass (~170 s at sf0.1) off the sweep wall while
   *     keeping the stall-aware median contract on the clean reps.
-  *     Folding is off only without a warmup run (SPARK_GRAFT_WARMUP=0)
-  *     or when reps==1, so at least one clean rep always exists.
+  *     Folding is off only when reps==1, so at least one clean rep
+  *     always exists.
   *   - Timed reps are INTERLEAVED round-robin across queries (pass 1 runs
   *     every query once, pass 2 runs every query again, ...). Rationale:
   *     the host shows external stall windows of ~1-2 min that inflate
   *     whatever runs inside them 10-30×; with back-to-back reps a single
-  *     window could cover ALL reps of one query (BENCH_sf1_r09 committed
-  *     q_a16_cube at 87.9 s over reps [109.7, 87.9, 56.4] — isolated
-  *     re-run 3.9 s). Round-robin spacing puts minutes between one
-  *     query's reps, so a stall window inflates at most one rep of many
-  *     queries instead of every rep of one.
+  *     window could cover ALL reps of one query
+  *     (`git show d06d1b8:BENCH_sf1_r09.json` has q_a16_cube at 87.9 s
+  *     over reps [109.7, 87.9, 56.4] — isolated re-run 3.9 s).
+  *     Round-robin spacing puts minutes between one query's reps, so a
+  *     stall window inflates at most one rep of many queries instead of
+  *     every rep of one.
   *   - The committed per-query number is the STALL-AWARE median (median
   *     over reps within 3× of the best rep); the PLAIN median is emitted
   *     alongside it in bench_full.json, and queries where the two
@@ -34,9 +37,9 @@ import org.apache.spark.sql.SparkSession
   *   - Every completed rep is APPENDED to bench_progress.jsonl as it
   *     finishes, and the summary (bench_full.json + the compact stdout
   *     line) is emitted from a JVM shutdown hook as well as at normal
-  *     completion — an external `timeout` kill (driver BENCH_r09, rc=124)
-  *     now leaves a valid partial artifact with "partial":true instead
-  *     of nothing.
+  *     completion — an external `timeout` kill (rc=124,
+  *     `git show d06d1b8:BENCH_r09.json`) now leaves a valid partial
+  *     artifact with "partial":true instead of nothing.
   *   - A query that throws is recorded as -1.0 (never silently counted
   *     as a fast success), excluded from the total and from later passes.
   */
@@ -80,33 +83,27 @@ object Bench {
     // of ~1-2 min that inflate consecutive runs 10-30x (rep_samples in
     // bench_full.json carry the evidence); 5 interleaved reps survive one
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt.max(1)
-    val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1").toInt.max(0)
-    // fold the warmup/profile run into pass 1 (timed, median-excluded) —
-    // see the methodology note above; needs a warmup run to fold and at
-    // least one clean rep left over
-    val foldWarmup = warmup >= 1 && reps >= 2
+    // one profile/warmup run per query, folded into pass 1 (timed,
+    // median-excluded) whenever a clean rep is left over — see the
+    // methodology note above
+    val foldWarmup = reps >= 2
     val cleanReps = if (foldWarmup) reps - 1 else reps
     // SPARK_GRAFT_PROFILE=cluster runs under clusterDefaults() (2000
     // shuffle partitions pre-AQE, Kryo, skew join, 64 MiB broadcast) —
     // the smoke path that proves the documented cluster profile actually
     // executes; SPARK_GRAFT_ONLY=<regex> restricts the run to matching
-    // query names (see SparkEntry.measurement)
-    val (spark, matching) = SparkEntry.measurement("graft-bench")
+    // query names, and a negative lookahead excludes them instead
+    // (see SparkEntry.measurement)
+    val (spark, selected) = SparkEntry.measurement("graft-bench")
     // ERROR, not WARN: repeated executor warnings (cache-manager,
     // single-partition-window notices) add hundreds of lines to the
     // merged output the driver captures; the bench result must not
     // depend on how much of that noise fits the capture window.
-    // SPARK_GRAFT_LOGLEVEL overrides for diagnosis runs (e.g. WARN to
-    // see executor heartbeat failures, which log below ERROR).
-    spark.sparkContext.setLogLevel(
-      sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "ERROR"))
-    // SPARK_GRAFT_SKIP=<regex> excludes matches — used by the scale
-    // sweeps to leave out the queries whose CONTRACTED OUTPUT grows
-    // super-linearly (the full pair-list gates), so the ladder's numbers
-    // measure the engine, not the contracted output volume
-    val skip = sys.env.get("SPARK_GRAFT_SKIP").map(_.r)
-    val selected = matching
-      .filter { case (n, _) => !skip.exists(_.findFirstIn(n).isDefined) }
+    spark.sparkContext.setLogLevel("ERROR")
+    // the run's own parallelism and profile go into every artifact, so
+    // a number is never read against a host it was not taken on
+    val cpus = GraftSession.cpus
+    val profile = SparkEntry.profile
 
     val fmt = new java.text.DecimalFormat("0.###",
       java.text.DecimalFormatSymbols.getInstance(java.util.Locale.ROOT))
@@ -210,16 +207,16 @@ object Bench {
         val divJson = divergent.map("\"" + esc(_) + "\"")
           .mkString("[", ",", "]")
         val fullLine =
-          s"""{"metric":"total","value":${fmt.format(total)},"unit":"sec","queries":$fullJson,"plain_median":$plainJson,"median_divergent":$divJson,"profiles":$profJson,"cache_build_sec":${fmt.format(cacheBuildSec)},$cacheJsonTotals,"cache_builds":$cacheJson,"rep_samples":$repsJson,"warmup_sec":$warmJson,"start_offset_sec":$offJson,"sf":"$sfDir","reps":$reps,"clean_reps":$cleanReps,"fold_warmup":$foldWarmup,"warmup":$warmup,"interleaved":true,"failed":$failed,"unreached":$unreached,"partial":$partial}"""
+          s"""{"metric":"total","value":${fmt.format(total)},"unit":"sec","queries":$fullJson,"plain_median":$plainJson,"median_divergent":$divJson,"profiles":$profJson,"cache_build_sec":${fmt.format(cacheBuildSec)},$cacheJsonTotals,"cache_builds":$cacheJson,"rep_samples":$repsJson,"warmup_sec":$warmJson,"start_offset_sec":$offJson,"sf":"$sfDir","cpus":$cpus,"profile":"$profile","reps":$reps,"clean_reps":$cleanReps,"fold_warmup":$foldWarmup,"warmup":1,"interleaved":true,"failed":$failed,"unreached":$unreached,"partial":$partial}"""
         val fullPath = java.nio.file.Paths.get("bench_full.json")
         java.nio.file.Files.write(fullPath, (fullLine + "\n").getBytes("UTF-8"))
         // The full line goes ONLY to the file, never to stderr: sbt's
         // StdoutOutput forwards the forked process's stderr into the same
         // stream as stdout, and a ~10 KB stderr line can swamp or
-        // truncate the driver's bounded capture window — BENCH_r04
-        // recorded parsed:null with its tail cut mid-full-line for
-        // exactly this reason. Stdout must end with the one compact JSON
-        // line below.
+        // truncate the driver's bounded capture window —
+        // `git show d06d1b8:BENCH_r04.json` recorded parsed:null with
+        // its tail cut mid-full-line for exactly this reason. Stdout
+        // must end with the one compact JSON line below.
         System.err.println(s"[bench] full per-query medians: $fullPath" +
           (if (partial) " (PARTIAL — killed mid-sweep)" else ""))
 
@@ -229,7 +226,7 @@ object Bench {
         val byCost = results.filter(_._2 < 0) ++ done.sortBy(-_._2)
         val budget = 1400
         val head =
-          s"""{"metric":"total","value":${fmt.format(total)},"unit":"sec","sf":"$sfDir","reps":$reps,"clean_reps":$cleanReps,"warmup":$warmup,"n_queries":${results.size},"failed":$failed,"unreached":$unreached,"partial":$partial,"cache_build_sec":${fmt.format(cacheBuildSec)},$cacheJsonTotals,"full":"bench_full.json","queries":{"""
+          s"""{"metric":"total","value":${fmt.format(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,"profile":"$profile","reps":$reps,"clean_reps":$cleanReps,"warmup":1,"n_queries":${results.size},"failed":$failed,"unreached":$unreached,"partial":$partial,"cache_build_sec":${fmt.format(cacheBuildSec)},$cacheJsonTotals,"full":"bench_full.json","queries":{"""
         val tail0 = "}}"
         val kept = scala.collection.mutable.ListBuffer.empty[String]
         var len = head.length + tail0.length + 40 // slack for omitted_*
@@ -263,18 +260,15 @@ object Bench {
         // pause INSIDE some later query's timing (measured 6-12×
         // inflation on mid-run queries in full 129-query rounds)
         System.gc()
-        // the first warmup run doubles as the metrics-accounting run
+        // the warmup run doubles as the metrics-accounting run
         // (QueryMetrics executes the same noop materialization) —
         // realized scan rows / shuffle bytes land in bench_full.json
         // at zero added cost
-        if (warmup >= 1) {
-          val t0 = System.nanoTime()
-          profiles(name) = graft.core.QueryMetrics.profile(fn(spark, sfDir))
-          if (foldWarmup) synchronized {
-            warmupSec(name) = (System.nanoTime() - t0) / 1e9
-          }
+        val t0 = System.nanoTime()
+        profiles(name) = graft.core.QueryMetrics.profile(fn(spark, sfDir))
+        if (foldWarmup) synchronized {
+          warmupSec(name) = (System.nanoTime() - t0) / 1e9
         }
-        (1 until warmup).foreach(_ => runOnce(spark, sfDir, fn))
         System.err.println(s"[bench] warmup $name ok")
       } catch {
         case scala.util.control.NonFatal(e) =>

@@ -50,21 +50,26 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map { case (k, d) => k -> d.fn }
 
+  /** The measurement profile: "cluster" when SPARK_GRAFT_PROFILE=cluster,
+    * else "local".
+    */
+  private[graft] def profile: String =
+    if (sys.env.get("SPARK_GRAFT_PROFILE").contains("cluster")) "cluster"
+    else "local"
+
   /** Session and query selection of the measurement mains (Bench,
-    * Verify): `local[GraftSession.cpus]` under the cluster profile when
-    * SPARK_GRAFT_PROFILE=cluster, else under the local one with shuffle
-    * partitions = cores; tmpfs shuffle scratch; balanced scan splits. The
-    * queries are the registry sorted by name, restricted to the names
-    * matching the SPARK_GRAFT_ONLY regex when it is set.
+    * Verify, ExplainQuery): `local[GraftSession.cpus]` under the
+    * [[profile]]'s configs; tmpfs shuffle scratch; balanced scan splits.
+    * The queries are the registry sorted by name, restricted to the
+    * names matching the SPARK_GRAFT_ONLY regex when it is set.
     */
   private[graft] def measurement(app: String)
       : (SparkSession, Seq[(String, (SparkSession, String) => DataFrame)]) = {
-    val cpus = GraftSession.cpus
-    val base = SparkSession.builder().master(s"local[$cpus]").appName(app)
-    val spark = (if (sys.env.get("SPARK_GRAFT_PROFILE").contains("cluster"))
-        GraftSession.benchScratch(GraftSession.clusterDefaults(base))
-      else GraftSession.benchScratch(GraftSession.configure(base))
-        .config("spark.sql.shuffle.partitions", cpus.toString))
+    val base = SparkSession.builder()
+      .master(s"local[${GraftSession.cpus}]").appName(app)
+    val spark = GraftSession.benchScratch(
+      if (profile == "cluster") GraftSession.clusterDefaults(base)
+      else GraftSession.configure(base))
       .getOrCreate()
     GraftSession.tuneScanSplits(spark)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)

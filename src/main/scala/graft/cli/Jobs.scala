@@ -16,17 +16,15 @@ import graft.ml.{ModelRegistry, MultiModel}
 object Jobs {
 
   /** The session of the long-lived mains (the CLI jobs and ServeMain):
-    * `SPARK_MASTER`, else `local[SPARK_GRAFT_CPUS]`, with one shuffle
-    * partition per core, as the measurement mains run.
+    * `SPARK_MASTER`, else `local[SPARK_GRAFT_CPUS]`, under
+    * [[GraftSession.configure]] (one shuffle partition per core), as the
+    * measurement mains run.
     */
-  private[graft] def session(app: String): SparkSession = {
-    val cpus = GraftSession.cpus
+  private[graft] def session(app: String): SparkSession =
     GraftSession.configure(SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
+      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${GraftSession.cpus}]"))
       .appName(app))
-      .config("spark.sql.shuffle.partitions", cpus.toString)
       .getOrCreate()
-  }
 
   /** The modeling view over the synthetic corpus (stands in for the
     * reference's preprocessed CICIDS matrix). Public: the serving entry

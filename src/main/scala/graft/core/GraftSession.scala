@@ -16,9 +16,10 @@ import org.apache.spark.sql.SparkSession
   *     read as TimestampType; with this flag a NANOS column reads as
   *     LongType (raw int64), micros generations read their raw int64
   *     directly, and [[Tables.load]] normalizes either to canonical µs.
-  *   - `spark.sql.shuffle.partitions=32` — matches local[32]; 200 would
-  *     produce tiny partitions at test scale. On a real cluster this is
-  *     superseded by AQE coalescing (enabled).
+  *   - `spark.sql.shuffle.partitions` = [[cpus]] — one partition per
+  *     local core; 200 would produce tiny partitions at test scale. On a
+  *     real cluster [[clusterDefaults]] raises it to 2000 and AQE
+  *     coalesces down from there.
   */
 object GraftSession {
 
@@ -29,7 +30,7 @@ object GraftSession {
     * points opt into tmpfs scratch via [[benchScratch]].
     */
   def configure(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.shuffle.partitions", "32")
+    b.config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -184,7 +185,7 @@ object GraftSession {
         "org.apache.spark.serializer.KryoSerializer")
       .config("spark.sql.autoBroadcastJoinThreshold", "67108864") // 64 MiB
 
-  def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
+  def local(cores: Int, appName: String = "graft"): SparkSession = {
     val spark = configure(
       SparkSession.builder().master(s"local[$cores]").appName(appName))
       .getOrCreate()

@@ -39,13 +39,6 @@ object ColumnStats {
       .orderBy(desc("count"), asc(c))
       .limit(1)
 
-  /** A3 multi-column — per-column modes in one pass via Spark's builtin
-    * `mode` TypedImperativeAggregate (deterministic=false on ties; use
-    * [[modeOf]] where tie determinism matters).
-    */
-  def modes(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.select(cols.map(c => mode(col(c)).as(c)): _*)
-
   /** A6 — value histogram (notebook `value_counts()`). */
   def histogram(df: DataFrame, c: String): DataFrame =
     df.groupBy(col(c)).count().orderBy(desc("count"), asc(c))

@@ -3,22 +3,16 @@
 //   sbt "runMain graft.tools.ExplainQuery <regex> [sfDir]"
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
-import graft.core.GraftSession
 
 object ExplainQuery {
   def main(args: Array[String]): Unit = {
     val pattern = args.headOption.getOrElse(".*").r
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    val spark = GraftSession.configure(
-      SparkSession.builder().master("local[4]").appName("graft-explain"))
-      .config("spark.sql.shuffle.partitions", 4)
-      .getOrCreate()
+    // the session Bench and Verify run, so the printed plans are theirs
+    val (spark, queries) = SparkEntry.measurement("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(q => pattern.findFirstIn(q._1).isDefined)
+    queries.filter(q => pattern.findFirstIn(q._1).isDefined)
       .foreach { case (name, fn) =>
         println(s"\n========== $name ==========")
         val df = fn(spark, dir)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.DataFrame
   * order (window dedup, decimal aggregation, top-k with ties, range
   * join, digest grouping) is run at two shuffle-partition settings and
   * compared row-for-row — the same invariance that makes results stable
-  * between local[32] and a 1000-executor cluster.
+  * between a local run and a 1000-executor cluster.
   */
 class DeterminismSpec extends SparkSpec {
 
@@ -91,11 +91,12 @@ class DeterminismSpec extends SparkSpec {
     "q_session_stats")
 
   private def rowsAt(name: String, partitions: Int): Seq[String] = {
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", partitions)
     try {
       val df: DataFrame = SparkEntry.queries(name)(spark, sf0001)
       df.collect().map(_.toString).toSeq
-    } finally spark.conf.set("spark.sql.shuffle.partitions", 32)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
 
   for (name <- Sampled)

@@ -13,6 +13,23 @@ class GraftSessionSpec extends AnyFunSuite {
       spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
   }
 
+  test("configure sets shuffle partitions to GraftSession.cpus; " +
+      "clusterDefaults sets 2000") {
+    // getOrCreate re-applies the runtime SQL configs to the shared session
+    val spark = GraftSession.local(2, "graft-session-spec")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") ===
+      GraftSession.cpus.toString)
+    // create() builds a separate session over the shared context, so the
+    // cluster profile's configs stay out of the other suites' session; it
+    // also makes itself the active and default session, so restore those
+    val cluster = GraftSession.clusterDefaults(SparkSession.builder()).create()
+    try assert(cluster.conf.get("spark.sql.shuffle.partitions") === "2000")
+    finally {
+      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(spark)
+    }
+  }
+
   test("clusterDefaults composes on any builder without clobbering") {
     // getOrCreate on a shared JVM returns the existing session, so only
     // the builder composition itself is assertable here; the applied

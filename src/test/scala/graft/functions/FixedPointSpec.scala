@@ -82,7 +82,8 @@ class FixedPointSpec extends SparkSpec {
     // codegen, and the same noop-write materialization Bench/Verify
     // use — never completing silently with null metrics. (The profile's
     // context-level configs — Kryo — can't be flipped in the shared test
-    // JVM; the full-run proof of those is CORRECTNESS_cluster_r11.txt.)
+    // JVM; the full-run proof of those is
+    // `git show d06d1b8:CORRECTNESS_cluster_r11.txt`.)
     val dir = java.nio.file.Files.createTempDirectory("fp_chaos").toString
     // adversarial table: one group whose aggregate lands at 10^38 - 1
     // (max decimal(38,0)), one healthy group — the failure must surface

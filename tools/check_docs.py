@@ -1,39 +1,27 @@
 #!/usr/bin/env python3
-"""Machine-check COVERAGE.md totals against the DRIVER's correctness gate.
+"""Machine-check COVERAGE.md and README.md against a graft.Verify run and
+a ScalaTest suite log.
 
-Usage: python3 tools/check_docs.py [verify_out_dir] [correctness_json]
+Usage: python3 tools/check_docs.py <verify_out_dir> <suite_log>
 
-Sources of truth, in order of preference:
-  - the newest driver CORRECTNESS_r*.json in the repo root (or the file
-    passed explicitly): per-query green/red from the gate that actually
-    grades the round;
-  - a graft.Verify output dir only as a fallback when no driver file
-    exists yet (round 1).
+  verify_out_dir  the output dir of `sbt "runMain graft.Verify <sf> <dir>"`
+                  (one subdir per registered query plus oracle_sql.json)
+  suite_log       the captured output of `sbt "testOnly *"` from the
+                  current sources; a log older than the newest file under
+                  src/ is refused, because its test total describes some
+                  other tree
 
-Fails (exit 1) if COVERAGE.md's totals line disagrees, OR if the driver
-gate has any non-green row — so COVERAGE.md can never claim "ALL green"
-while the driver's own file shows a red (that drift shipped in round 5:
-the doc said 195/195, the gate said 194/195), OR if a COVERAGE.md row
-cites a graft `Object.member` that src/main no longer declares or a
-`dir/File.scala` that src/main/scala/graft no longer has, OR if README.md
-or DEPLOY.md names a `GRAFT_*`/`SPARK_GRAFT_*` env var that nothing under
-src/main, tools/ or build.sbt reads.
-
-Note the asymmetry vs the local registry: the newest driver file is one
-round old by construction (it graded the previous commit). Queries added
-since then won't appear in it; the doc totals are checked against the
-*registry* via the verify dir when it is strictly newer. Reds, however,
-are checked against the driver file unconditionally — a red there means
-either an unfixed gate or an unexplained regression, both commit-blockers.
+Fails (exit 1) if COVERAGE.md's totals line disagrees with the verify
+dir's registry, OR if the documented ScalaTest total disagrees with the
+suite log, OR if a COVERAGE.md row cites a graft `Object.member` that
+src/main no longer declares or a `dir/File.scala` that
+src/main/scala/graft no longer has, OR if README.md or DEPLOY.md names a
+`GRAFT_*`/`SPARK_GRAFT_*` env var that nothing under src/main, tools/ or
+build.sbt reads.
 """
 import glob, json, os, re, sys
 
 REPO = os.path.join(os.path.dirname(__file__), "..")
-
-def newest_driver_file():
-    files = glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
-    return max(files, default=None,
-               key=lambda f: int(re.search(r"_r(\d+)", f).group(1)))
 
 def from_verify_dir(d):
     oracle = json.load(open(os.path.join(d, "oracle_sql.json")))
@@ -41,62 +29,30 @@ def from_verify_dir(d):
                if os.path.isdir(os.path.join(d, n))]
     return len(queries), len([q for q in queries if q in oracle])
 
+def newest_source_mtime():
+    return max(os.path.getmtime(p) for p in
+               glob.glob(os.path.join(REPO, "src/**/*"), recursive=True)
+               if os.path.isfile(p))
+
 def main():
-    verify_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/verify_out"
-    corr = sys.argv[2] if len(sys.argv) > 2 else newest_driver_file()
+    if len(sys.argv) != 3:
+        print("usage: python3 tools/check_docs.py <verify_out_dir> <suite_log>")
+        sys.exit(2)
+    verify_dir, tlog = sys.argv[1], sys.argv[2]
     failures = []
 
-    # 1) Driver gate: every row must be green (hash for oracle-gated,
-    #    rows>0 for rows-only entries). A driver red is tolerated ONLY if
-    #    a fresh local replica run (tools/check_correctness.py, which
-    #    mirrors the driver's pandas path since round 6) shows that same
-    #    query green — i.e. the red was fixed after the driver's run.
-    replica = {}
-    rpath = os.path.join(verify_dir, "replica_results.json")
-    if os.path.exists(rpath):
-        replica = json.load(open(rpath))
-    red, fixed = [], []
-    if corr and os.path.exists(corr):
-        gate = json.load(open(corr))
-        for name, v in sorted(gate.items()):
-            if v.get("hash_match") is not None:
-                green = (v.get("rows_match") and v.get("schema_match")
-                         and v.get("hash_match"))
-            else:
-                green = v.get("spark_rows", v.get("rows", 0)) > 0
-            if not green:
-                if replica.get(name, {}).get("hash_match"):
-                    fixed.append(name)
-                else:
-                    red.append(name)
-        print(f"driver gate ({os.path.basename(corr)}): "
-              f"{len(gate) - len(red) - len(fixed)}/{len(gate)} green"
-              + (f"; fixed-since (replica green): {fixed}" if fixed else "")
-              + (f"; RED: {red}" if red else ""))
-        if red:
-            failures.append(f"driver gate has {len(red)} unfixed non-green row(s): {red}")
-
-    # 2) Doc totals vs the freshest registry truth (verify dir if present,
-    #    else the driver file's entry count).
-    if os.path.isdir(verify_dir) and os.path.exists(
-            os.path.join(verify_dir, "oracle_sql.json")):
-        total, oracle = from_verify_dir(verify_dir)
-        src = verify_dir
-    elif corr and os.path.exists(corr):
-        gate = json.load(open(corr))
-        total = len(gate)
-        oracle = sum(1 for v in gate.values()
-                     if v.get("hash_match") is not None)
-        src = corr
-    else:
-        print("no verify dir and no CORRECTNESS_r*.json — nothing to check")
+    # 1) Doc totals vs the registry, as the verify dir records it.
+    if not os.path.exists(os.path.join(verify_dir, "oracle_sql.json")):
+        print(f"{verify_dir}: not a graft.Verify output dir "
+              "(no oracle_sql.json)")
         sys.exit(1)
+    total, oracle = from_verify_dir(verify_dir)
 
-    # 3) Documented ScalaTest total: COVERAGE.md and README.md must agree
-    #    with each other, and — when a fresh `sbt test` log exists (the
-    #    runner tees to /tmp/sbt_test_last.log, override via
-    #    GRAFT_TEST_LOG) — with the suite's own summary line. Round-8
-    #    verdict: the docs said 526 while the suite ran 537.
+    # 2) Documented ScalaTest total: COVERAGE.md and README.md must agree
+    #    with each other and with the suite log's own summary line. The
+    #    log must postdate every source file: a leftover log from an
+    #    older tree once printed "545 != suite 546" against a green
+    #    545/545 suite.
     cov = open(os.path.join(REPO, "COVERAGE.md")).read()
     readme = open(os.path.join(REPO, "README.md")).read()
     doc_tests = re.findall(r"runs (\d+) ScalaTest|(\d+) ScalaTest tests",
@@ -104,16 +60,20 @@ def main():
     counts = {int(x) for pair in doc_tests for x in pair if x}
     if len(counts) > 1:
         failures.append(f"README/COVERAGE quote different test totals: {sorted(counts)}")
-    tlog = os.environ.get("GRAFT_TEST_LOG", "/tmp/sbt_test_last.log")
-    # only compare against the suite log when the docs agree with each
-    # other — with divergent doc totals, counts.pop() would pick an
-    # arbitrary one and emit a misleading second failure on top of the
-    # consistency failure already recorded above
-    if len(counts) == 1 and os.path.exists(tlog):
+    if not os.path.isfile(tlog):
+        failures.append(f"suite log {tlog} does not exist")
+    elif os.path.getmtime(tlog) < newest_source_mtime():
+        failures.append(f"suite log {tlog} is older than the newest file "
+                        "under src/ — rerun the suite and capture it again")
+    else:
         mt = re.findall(r"Tests: succeeded (\d+)|Total number of tests run: (\d+)",
                         open(tlog, errors="replace").read())
         mt = [x for pair in mt for x in pair if x]
-        if mt:
+        if not mt:
+            failures.append(f"suite log {tlog} has no test summary line")
+        # with divergent doc totals, counts.pop() would pick an arbitrary
+        # one on top of the consistency failure already recorded above
+        elif len(counts) == 1:
             actual_tests = int(mt[-1])
             doc_t = counts.pop()
             print(f"tests: docs={doc_t} suite({tlog})={actual_tests}")
@@ -121,7 +81,7 @@ def main():
                 failures.append(
                     f"documented test total {doc_t} != suite {actual_tests}")
 
-    # 4) Duplicate table rows in COVERAGE.md (round-10 judge found a
+    # 3) Duplicate table rows in COVERAGE.md (round-10 judge found a
     #    copy-pasted Z-order row): any identical non-separator row
     #    appearing twice WITHIN one table is doc padding — fail loudly.
     #    Scoped per table (the seen-set resets at every non-table line)
@@ -139,7 +99,7 @@ def main():
     if dup_rows:
         failures.append(f"COVERAGE.md has duplicate table row(s): {dup_rows}")
 
-    # 5) Dangling code references: a backticked `Object.member` (also
+    # 4) Dangling code references: a backticked `Object.member` (also
     #    `dir/Object.member`, and `Object.a/b` for several members) whose
     #    Object is declared under src/main must name a def or val in a
     #    file declaring that object — a row citing deleted code fails.
@@ -161,7 +121,7 @@ def main():
     if dangling:
         failures.append(f"COVERAGE.md cites undeclared code: {sorted(set(dangling))}")
 
-    # 6) Dangling file references: a backticked `dir/File.scala` must
+    # 5) Dangling file references: a backticked `dir/File.scala` must
     #    exist under src/main/scala/graft — a row citing a deleted file
     #    fails even though no `Object.member` of it is named.
     missing = sorted({f for f in re.findall(r"`((?:\w+/)+\w+\.scala)", cov)
@@ -170,7 +130,7 @@ def main():
     if missing:
         failures.append(f"COVERAGE.md cites missing files: {missing}")
 
-    # 7) Documented env vars: every `GRAFT_*` or `SPARK_GRAFT_*` name in
+    # 6) Documented env vars: every `GRAFT_*` or `SPARK_GRAFT_*` name in
     #    README.md or DEPLOY.md must be read under src/main, tools/ or
     #    build.sbt — as a quoted name (what sys.env / os.environ take) or
     #    a shell expansion ($NAME, ${NAME...}). A mention in a comment or
@@ -196,7 +156,7 @@ def main():
     doc_total, doc_oracle, doc_rows = map(int, m.groups())
     ok = (doc_total == total and doc_oracle == oracle
           and doc_rows == total - oracle)
-    print(f"actual ({src}): total={total} oracle={oracle} "
+    print(f"actual ({verify_dir}): total={total} oracle={oracle} "
           f"rows_only={total - oracle}")
     print(f"COVERAGE.md:     total={doc_total} oracle={doc_oracle} "
           f"rows_only={doc_rows}")

@@ -25,8 +25,10 @@ def main():
     total = sum(s for _, s, *_ in rows if s and s >= 0)
     print("# PLANS — per-query execution profiles (generated)")
     print()
-    print(f"Source: `{path}` — medians of {b.get('reps', '?')} reps after "
+    print(f"Source: `{path}` — medians of "
+          f"{b.get('clean_reps', b.get('reps', '?'))} timed reps after "
           f"{b.get('warmup', '?')} warmup at `{b.get('sf', '?')}`, "
+          f"cpus {b.get('cpus', '?')}, profile {b.get('profile', '?')}, "
           f"{len(rows)} queries, {total:.1f} s total, "
           f"{b.get('failed', 0)} failed.")
     print()

@@ -64,9 +64,9 @@ def pick(d, use_min):
 
 
 def golden(prev_path, cur_path):
-    """Round-over-round deltas on the pinned golden-20 artifacts
-    (tools/golden_bench.sh): same scale factor, isolated quiet-window
-    reps, so a delta IS a code delta. Regressions are judged on the
+    """Before/after deltas on two bench_full.json runs at the same scale
+    factor, core count and query selection (e.g. the parent and the
+    change over one SPARK_GRAFT_ONLY subset), so a delta IS a code delta. Regressions are judged on the
     MIN rep (stall-robust); medians are shown for context. Flag
     threshold 1.3x + 0.3s absolute — below that is JIT/host jitter
     even in a quiet window."""
