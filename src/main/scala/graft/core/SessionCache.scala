@@ -21,7 +21,8 @@ import org.apache.spark.sql.SparkSession
   * promise, so waiters see the cause and the next caller retries. A
   * builder may request a DIFFERENT key mid-build (its own key would
   * self-deadlock). Entries whose SparkContext has stopped, finished or in
-  * flight, are dropped lazily; live sessions never evict each other.
+  * flight, are dropped lazily; live sessions never evict each other, and
+  * an owner drops a superseded key with [[remove]].
   *
   * Ledger: each completed build's start and end `nanoTime` per key;
   * [[buildLog]] gives their lengths, [[SessionCache.buildUnionSec]] the
@@ -61,6 +62,21 @@ final class SessionCache[K, V](release: V => Unit) {
         cache.remove(k, mine); mine._2.completeExceptionally(t); throw t
     }
   }
+
+  /** Whether `key` has an entry, built or in flight, in `spark`'s context. */
+  def contains(spark: SparkSession, key: K): Boolean =
+    cache.containsKey((spark.sparkContext.applicationId, key))
+
+  /** Drop `key`'s entry in `spark`'s context, releasing a finished value;
+    * an in-flight build still returns to its waiters, and the ledger keeps
+    * the completed build. The next caller of `key` builds afresh.
+    */
+  def remove(spark: SparkSession, key: K): Unit =
+    Option(cache.remove((spark.sparkContext.applicationId, key))).foreach {
+      case (sc, f) =>
+        if (!sc.isStopped && f.isDone && !f.isCompletedExceptionally)
+          release(f.join())
+    }
 
   /** Drop every entry and this cache's ledger, releasing finished values
     * of live contexts; an in-flight build still returns to its waiters.

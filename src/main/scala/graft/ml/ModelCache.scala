@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.ml.Transformer
+import org.apache.spark.ml.{PipelineModel, Transformer}
 import org.apache.spark.sql.SparkSession
 
 import graft.core.SessionCache
@@ -9,12 +9,25 @@ import graft.core.SessionCache
   * [[graft.core.SessionCache]]. Trainers are seeded (42, the reference
   * protocol) over deterministic cached matrices, so a hit equals a refit
   * (DeterminismSpec); it mirrors the reference pickling its fitted models
-  * so later requests skip refitting. GraftServer keeps its loaded models
-  * here too: key = the registry entry's path, tag = `load@<createdAtMs>`.
+  * so later requests skip refitting.
+  *
+  * Saved inference pipelines live here too: key = the model's saved path,
+  * tag = [[Saved]]. [[MultiModel.save]] hands the pipeline it just wrote
+  * to its entry and [[MultiModel.load]] reads through it, so the model a
+  * chain or `/train/` fitted is served without a disk load. Saved paths
+  * are write-once (a save refuses an existing path), so a hit equals a
+  * load from disk. Next to each saved model sits its confusion counts
+  * over a held-out split ([[confusion]]), the one scoring pass behind
+  * GraftServer's smoke replies and `/metrics/`.
   */
 object ModelCache {
 
+  /** The tag of a saved inference pipeline's entry. */
+  val Saved = "saved"
+
   private val cache = new SessionCache[(String, String), Transformer](_ => ())
+  private val confusions =
+    new SessionCache[(String, String), Seq[(Double, Double, Long)]](_ => ())
 
   /** Completed fits this JVM: (applicationId, key, tag) -> fit seconds. */
   def buildLog: Map[(String, String, String), Double] =
@@ -25,6 +38,28 @@ object ModelCache {
   def fitted(spark: SparkSession, key: String, modelTag: String)
       (fit: => Transformer): Transformer = cache(spark, (key, modelTag))(fit)
 
-  /** Drop all cached models (tests / memory pressure). */
-  def clear(): Unit = cache.clear()
+  /** Get-or-load the inference pipeline saved at `path`. */
+  def saved(spark: SparkSession, path: String)
+      (load: => PipelineModel): PipelineModel =
+    fitted(spark, path, Saved)(load).asInstanceOf[PipelineModel]
+
+  /** Whether the pipeline saved at `path` is held (loaded or loading). */
+  def holds(spark: SparkSession, path: String): Boolean =
+    cache.contains(spark, (path, Saved))
+
+  /** Get-or-count the confusion of the pipeline saved at `path` over the
+    * held-out split `heldOut` names, as (label, prediction, n). */
+  def confusion(spark: SparkSession, path: String, heldOut: String)
+      (count: => Seq[(Double, Double, Long)]): Seq[(Double, Double, Long)] =
+    confusions(spark, (path, heldOut))(count)
+
+  /** Drop the pipeline saved at `path` and its confusion over `heldOut`
+    * (a retrain superseded it); a later reader loads it afresh. */
+  def evict(spark: SparkSession, path: String, heldOut: String): Unit = {
+    cache.remove(spark, (path, Saved))
+    confusions.remove(spark, (path, heldOut))
+  }
+
+  /** Drop all cached models and confusions (tests / memory pressure). */
+  def clear(): Unit = { cache.clear(); confusions.clear() }
 }

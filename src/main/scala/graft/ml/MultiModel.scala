@@ -1,7 +1,8 @@
 package graft.ml
 
 import org.apache.spark.ml.{Pipeline, PipelineModel}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.eval.Metrics
@@ -41,11 +42,16 @@ object MultiModel {
     // pass, the classifier fit and the training-accuracy scan — persist
     // once instead of re-running impute/assemble/scale per consumer
     val prepped = PrepPipeline.matrix(prep, train).persist()
+    // the rebalanced fit input is materialized once: a classifier fit
+    // reads its input in several jobs (partition count, instances), each
+    // re-running SMOTE's plan, and SMOTE's label metadata spares it the
+    // max(label) pass. localCheckpoint, not persist: it keeps the plan's
+    // partition layout, which a tree's split sampling depends on
+    var fitInput = prepped
     try {
-      val fitInput =
-        if (useSmote)
-          new Smote().setStrategy(smoteStrategy).transform(prepped)
-        else prepped
+      if (useSmote)
+        fitInput = new Smote().setStrategy(smoteStrategy).transform(prepped)
+          .localCheckpoint()
       val clf = Trainers.byName(modelType, params).fit(fitInput)
         .asInstanceOf[org.apache.spark.ml.Transformer]
       // wrap the already-fitted stages: Pipeline.fit passes Transformers
@@ -56,7 +62,12 @@ object MultiModel {
         clf.transform(prepped).select(col("label"), col("prediction")))
         .head().getDouble(0)
       Trained(inference, modelType, params, acc)
-    } finally prepped.unpersist()
+    } finally {
+      prepped.unpersist()
+      // the checkpoint's blocks: nothing reads them after the fit
+      fitInput.queryExecution.logical.collectFirst {
+        case r: LogicalRDD => r.rdd }.foreach(_.unpersist(blocking = false))
+    }
   }
 
   /** L6 — score a frame: adds `prediction` (and probability columns where
@@ -76,17 +87,24 @@ object MultiModel {
     * `$dir/$name-v<createdAtMs>`, and registers it only once the write
     * has completed, so a reader of the registry never sees a partial
     * model and a retrain under the same name never overwrites the model
-    * being served. A path that already exists fails the save.
+    * being served. A path that already exists fails the save, so a path
+    * names one model for good: the fitted pipeline is handed to
+    * [[ModelCache]] under it, and [[load]] serves it with no disk read.
     */
   def save(t: Trained, dir: String, registry: ModelRegistry,
       name: String, metrics: Map[String, Double] = Map.empty): String = {
     val createdAtMs = System.currentTimeMillis()
     val path = s"$dir/$name-v$createdAtMs"
     t.pipeline.write.save(path)
+    ModelCache.saved(SparkSession.active, path)(t.pipeline)
     registry.append(ModelEntry(name, path, t.modelType, t.params,
       metrics ++ Map("train_accuracy" -> t.trainAccuracy), createdAtMs))
     path
   }
 
-  def load(path: String): PipelineModel = PipelineModel.load(path)
+  /** The pipeline saved at `path`, read once per session through
+    * [[ModelCache]] (the fitted model itself when this session saved it).
+    */
+  def load(path: String): PipelineModel =
+    ModelCache.saved(SparkSession.active, path)(PipelineModel.load(path))
 }

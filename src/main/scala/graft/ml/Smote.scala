@@ -1,12 +1,13 @@
 package graft.ml
 
 import org.apache.spark.ml.Transformer
+import org.apache.spark.ml.attribute.NominalAttribute
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.ml.param.{IntParam, LongParam, Param, ParamMap}
 import org.apache.spark.ml.util.{DefaultParamsReadable, DefaultParamsWritable,
   Identifiable}
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -37,7 +38,9 @@ import org.apache.spark.sql.types.StructType
   * identical output (asserted in SmoteSpec).
   *
   * Output schema is (labelCol, featuresCol): like the reference, SMOTE
-  * operates on the modeling matrix, not the raw table.
+  * operates on the modeling matrix, not the raw table. The label carries
+  * the class count from SMOTE's class histogram as nominal metadata, so
+  * a classifier fit on the output skips its own max(label) pass.
   */
 class Smote(override val uid: String) extends Transformer
     with DefaultParamsWritable {
@@ -83,6 +86,13 @@ class Smote(override val uid: String) extends Transformer
     val stats = df.groupBy(col(lc))
       .agg(count(lit(1)).as("__n"), first(col(fc)).as("__sample"))
       .collect()
+    Smote.withNumClasses(rebalance(df, stats), lc, stats.map(_.get(0)).toSeq)
+  }
+
+  /** `df` plus the synthetic minority rows its class histogram `stats`
+    * calls for. */
+  private def rebalance(df: DataFrame, stats: Array[Row]): DataFrame = {
+    val lc = $(labelCol); val fc = $(featuresCol)
     val counts = stats.map(r => (r.get(0), r.getLong(1)))
     if (counts.length < 2) return df
     val (_, majCount) = counts.maxBy(_._2)
@@ -121,7 +131,7 @@ class Smote(override val uid: String) extends Transformer
     val offsets = slabSizes.scanLeft(0L)(_ + _._2).zip(slabSizes)
       .map { case (off, (slab, _)) => (slab, off) }
     val offDf = broadcast(
-      ds.sparkSession.createDataFrame(offsets.toSeq)
+      df.sparkSession.createDataFrame(offsets.toSeq)
         .toDF("__slab", "__off"))
 
     val w = Window.partitionBy(col("__slab"))
@@ -180,6 +190,22 @@ class Smote(override val uid: String) extends Transformer
 object Smote extends DefaultParamsReadable[Smote] {
   /** The values `strategy` accepts. */
   val Strategies: Seq[String] = Seq("oversample", "smote")
+
+  /** `out` with its label column carrying, as nominal metadata, the class
+    * count a classifier infers from `labels` (max label + 1), so a fit on
+    * `out` skips its own max(label) pass. Unchanged unless the labels are
+    * non-negative integers below 100, where a classifier infers the count
+    * itself (and raises its own error otherwise).
+    */
+  private def withNumClasses(out: DataFrame, lc: String,
+      labels: Seq[Any]): DataFrame = {
+    val values = labels.collect { case n: Number => n.doubleValue }
+    if (values.isEmpty || values.size != labels.size ||
+        values.exists(v => v < 0 || v != math.floor(v)) || values.max >= 100)
+      out
+    else out.withMetadata(lc, NominalAttribute.defaultAttr
+      .withNumValues(values.max.toInt + 1).toMetadata())
+  }
 
   /** synthetic = a + t·(b − a), elementwise. */
   private[ml] val lerpUdf =

@@ -4,19 +4,16 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.{ConcurrentHashMap, Executors}
 
-import scala.jdk.CollectionConverters._
-
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.ml.PipelineModel
+import org.apache.spark.ml.util.Identifiable
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 import graft.io.RedisSink
-import graft.ml.{ModelCache, ModelEntry, ModelRegistry, MultiModel, Smote,
-  Trainers}
+import graft.ml.{LocalScorer, ModelCache, ModelEntry, ModelRegistry,
+  MultiModel, Smote, Trainers}
 
 /** The reference's FastAPI serving layer re-expressed on the JDK HTTP
   * server (zero extra dependencies): `POST /train/` and `POST /predict/`
@@ -26,11 +23,18 @@ import graft.ml.{ModelCache, ModelEntry, ModelRegistry, MultiModel, Smote,
   *   - one long-lived SparkSession and a cached prepared DataFrame shared
   *     across requests — the reference re-reads and re-fits the world per
   *     request (train.py:26-114);
-  *   - each registry entry is loaded once per session (through
-  *     ModelCache) and shared by `/predict/` and `/metrics/` — the
-  *     reference re-reads the model per request (predict.py:99-125);
+  *   - each registry entry's model is read once per session through
+  *     ModelCache (`MultiModel.load`), and a model `/train/` just fitted
+  *     is served as fitted, with no read at all — the reference re-reads
+  *     the model per request (predict.py:99-125);
+  *   - smoke's `test_score` and `/metrics/` share one confusion pass per
+  *     entry, kept next to the model in ModelCache and computed once
+  *     however many requests ask for it at the same time;
+  *   - a retrain under an existing name evicts the superseded entry's
+  *     model and confusion from ModelCache;
   *   - `upload` mode actually works (app.py:124 calls a method that does
-  *     not exist);
+  *     not exist), and scores its rows on the driver (LocalScorer): no
+  *     Spark job, no query planning;
   *   - no CLI-argv parsing inside the HTTP path (predict.py:100);
   *   - registry is append-only JSONL, not racy INI rewrites.
   *
@@ -55,15 +59,14 @@ class GraftServer(
   private val registry = new ModelRegistry(s"$modelDir/registry.jsonl")
   private val localCache = new ConcurrentHashMap[String, String]()
   @volatile private var lastModelName: Option[String] = None
+  // names this server's held-out split in ModelCache's confusion entries
+  private val heldOut = Identifiable.randomUID("heldOut")
 
   // the reference rebuilds this per request; we prepare once and reuse
   private lazy val prepared: (DataFrame, DataFrame) = {
     val (tr, te) = MultiModel.split(trainData())
     (tr.cache(), te.cache())
   }
-
-  private val uploadSchema =
-    StructType(featureCols.map(StructField(_, DoubleType)))
 
   // Send every reply without waiting on Nagle's algorithm: a reply is
   // written as headers then body, and without TCP_NODELAY the body waits
@@ -132,27 +135,20 @@ class GraftServer(
       .getOrElse(throw new HttpError(404, s"unknown model $name"))
   }
 
-  /** The entry's model, loaded once per session. The tag carries the
-    * entry's creation time, so a retrain under the same name (a new
-    * entry at a new path) is a new load, never the old model.
-    */
-  private def loaded(entry: ModelEntry): PipelineModel =
-    ModelCache.fitted(spark, entry.path, s"load@${entry.createdAtMs}") {
-      MultiModel.load(entry.path)
-    }.asInstanceOf[PipelineModel]
-
   /** The entry's confusion counts over the held-out split, as
     * (label, prediction, n) sorted by label then prediction: the one
-    * scoring pass behind smoke's `test_score` and `/metrics/`.
+    * scoring pass behind smoke's `test_score` and `/metrics/`, run once
+    * per entry through ModelCache.
     */
-  private def confusion(entry: ModelEntry): Seq[(Double, Double, Long)] = {
-    import scala.math.Ordering.Double.TotalOrdering
-    val (_, te) = prepared
-    MultiModel.score(loaded(entry), te)
-      .groupBy(col("label").cast("double").as("label"), col("prediction"))
-      .count().collect()
-      .map(r => (r.getDouble(0), r.getDouble(1), r.getLong(2))).toSeq.sorted
-  }
+  private def confusion(entry: ModelEntry): Seq[(Double, Double, Long)] =
+    ModelCache.confusion(spark, entry.path, heldOut) {
+      import scala.math.Ordering.Double.TotalOrdering
+      val (_, te) = prepared
+      MultiModel.score(MultiModel.load(entry.path), te)
+        .groupBy(col("label").cast("double").as("label"), col("prediction"))
+        .count().collect()
+        .map(r => (r.getDouble(0), r.getDouble(1), r.getLong(2))).toSeq.sorted
+    }
 
   route("/train/") { ex =>
     val p = queryParams(ex)
@@ -170,7 +166,9 @@ class GraftServer(
     val t = MultiModel.train(tr, featureCols, modelType, p, useSmote,
       smoteStrategy)
     val name = p.getOrElse("name", modelType.toLowerCase)
+    val superseded = registry.latest(name)
     MultiModel.save(t, modelDir, registry, name)
+    superseded.foreach(e => ModelCache.evict(spark, e.path, heldOut))
     lastModelName = Some(name)
     localCache.clear()
     Map(
@@ -214,7 +212,7 @@ class GraftServer(
               "test_score" -> correct.toDouble / cm.map(_._3).sum)
           case "db" =>
             val (_, te) = prepared
-            val preds = MultiModel.score(loaded(entry), te)
+            val preds = MultiModel.score(MultiModel.load(entry.path), te)
             redis.foreach { case (h, rp) =>
               RedisSink.writeList(preds, "prediction", h, rp)
             }
@@ -222,11 +220,9 @@ class GraftServer(
               "sink" -> redis.map(_ => "redis").getOrElse("none"))
           case "upload" =>
             // the mode the reference 500s on (app.py:124): parse the CSV
-            // rows in this process, score them in one Spark action
-            val rows = parseUpload(uploadBody, featureCols)
-            val predictions = MultiModel.score(loaded(entry),
-                spark.createDataFrame(rows.asJava, uploadSchema))
-              .select("prediction").collect().map(_.getDouble(0)).toSeq
+            // rows and score them in this process
+            val predictions = LocalScorer.predict(MultiModel.load(entry.path),
+              featureCols, parseUpload(uploadBody, featureCols))
             Map("mode" -> "upload", "n_scored" -> predictions.length,
               "predictions" -> predictions)
           case other =>

@@ -2,7 +2,9 @@ package graft.ml
 
 import java.nio.file.Files
 
+import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.Metadata
 
 import graft.SparkSpec
 import graft.cli.Jobs
@@ -97,7 +99,11 @@ class MlPipelineSpec extends SparkSpec {
     val t = MultiModel.train(tr, featureCols, "D_TREE",
       Map("max_depth" -> "4"), useSmote = false)
     val path = MultiModel.save(t, dir, reg, "dtree_test")
-    val reloaded = MultiModel.load(path)
+    // the save handed the fitted pipeline to ModelCache, which
+    // MultiModel.load reads through; the round-trip reads the disk
+    assert(MultiModel.load(path) eq t.pipeline)
+    val reloaded = PipelineModel.load(path)
+    assert(!(reloaded eq t.pipeline))
     val a = MultiModel.score(t.pipeline, te).select("prediction")
       .collect().map(_.getDouble(0)).toSeq
     val b = MultiModel.score(reloaded, te).select("prediction")
@@ -106,6 +112,26 @@ class MlPipelineSpec extends SparkSpec {
     val entry = reg.latest("dtree_test")
     assert(entry.exists(_.modelType === "D_TREE"))
     assert(entry.exists(_.params === Map("max_depth" -> "4")))
+  }
+
+  test("the D_TREE MultiModel.train fits on its materialized SMOTE " +
+      "input equals a fit on the unmaterialized SMOTE frame") {
+    type Dt = org.apache.spark.ml.classification.DecisionTreeClassificationModel
+    def shape(m: Dt) =
+      m.toDebugString.replaceAll("uid=dtc_[0-9a-f]+", "uid=<norm>")
+    for (seed <- Seq(42L, 7L)) {
+      val (tr, _) = MultiModel.split(labeled, seed)
+      val viaTrain = MultiModel.train(tr, featureCols, "D_TREE")
+        .pipeline.stages.last.asInstanceOf[Dt]
+      // the fit as it ran before: the lazy SMOTE plan, no label metadata
+      val prepped = PrepPipeline.matrix(PrepPipeline.fit(tr, featureCols), tr)
+        .persist()
+      val smoted = new Smote().setStrategy("oversample").transform(prepped)
+        .withMetadata("label", Metadata.empty)
+      val direct = Trainers.byName("D_TREE").fit(smoted).asInstanceOf[Dt]
+      prepped.unpersist()
+      assert(shape(viaTrain) === shape(direct), s"split seed $seed")
+    }
   }
 
   test("M2 SMOTE balances classes exactly") {

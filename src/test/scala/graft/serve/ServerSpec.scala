@@ -3,9 +3,13 @@ package graft.serve
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, Executors,
+  TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBridge
+import org.apache.spark.ml.PipelineModel
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -55,24 +59,32 @@ class ServerSpec extends SparkSpec {
     """"test_score":([0-9.Ee-]+)""".r.findFirstMatchIn(body)
       .getOrElse(fail(s"no test_score in $body")).group(1).toDouble
 
-  /** Spark jobs started while `body` runs (listener bus drained on both
-    * sides, so no earlier job leaks in and no job of `body` is missed).
+  /** The call sites (stage names) of each Spark job started while `body`
+    * runs (listener bus drained on both sides, so no earlier job leaks in
+    * and no job of `body` is missed).
     */
-  private def jobsDuring[T](body: => T): (T, Int) = {
+  private def jobSitesDuring[T](body: => T): (T, Seq[String]) = {
     val sc = spark.sparkContext
     ListenerBridge.drain(sc)
-    val jobs = new AtomicInteger(0)
+    val jobs = new ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+        jobs.add(e.stageInfos.map(_.name).mkString(" | "))
     }
     sc.addSparkListener(listener)
     try {
       val r = body
       ListenerBridge.drain(sc)
-      (r, jobs.get())
+      (r, jobs.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
+
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val (r, sites) = jobSitesDuring(body)
+    (r, sites.size)
+  }
+
+  private val header = "l_quantity,l_extendedprice,l_discount,l_tax\n"
 
   private def loadsOf(entry: ModelEntry): Int =
     ModelCache.buildLog.keys.count(_._2 == entry.path)
@@ -119,7 +131,6 @@ class ServerSpec extends SparkSpec {
   test("POST /predict/ upload mode scores CSV rows (fixed vs reference)") {
     post("/train/?model_type=D_TREE&name=upload_test")
     // a malformed body is a 400 naming the row and the column
-    val header = "l_quantity,l_extendedprice,l_discount,l_tax\n"
     val cases = Seq(
       (header + "10,1000.0,0.05,0.02\n25,50000.0,0.1,0.08\n", 200,
         "\"n_scored\":2"),
@@ -176,7 +187,7 @@ class ServerSpec extends SparkSpec {
     val fromMetrics = trace.toDouble / cells.map(_._3).sum
     assert(testScore(sb) === fromMetrics)
     assert(fromMetrics ===
-      MultiModel.accuracy(MultiModel.load(entry.path), te))
+      MultiModel.accuracy(PipelineModel.load(entry.path), te))
   }
 
   test("unknown or missing model is 404 on /predict/ and /metrics/; an " +
@@ -224,7 +235,6 @@ class ServerSpec extends SparkSpec {
     val (tc, tb) = post("/train/?model_type=D_TREE&name=load_once")
     assert(tc === 200, tb)
     val first = registry.latest("load_once").get
-    val header = "l_quantity,l_extendedprice,l_discount,l_tax\n"
     val (c1, b1) = post("/predict/?mode=upload&name=load_once",
       header + "10,1000.0,0.05,0.02\n")
     assert(c1 === 200, b1)
@@ -250,5 +260,66 @@ class ServerSpec extends SparkSpec {
       MultiModel.accuracy(MultiModel.load(second.path), te))
     assert(loadsOf(second) === 1)
     assert(loadsOf(first) === 1)
+  }
+
+  test("a same-name retrain evicts the superseded entry's model from " +
+      "ModelCache") {
+    assert(post("/train/?model_type=D_TREE&name=evict_me")._1 === 200)
+    val first = registry.latest("evict_me").get
+    assert(ModelCache.holds(spark, first.path))
+    assert(post("/predict/?mode=smoke&name=evict_me")._1 === 200)
+    assert(post("/train/?model_type=D_TREE&max_depth=3&name=evict_me")._1
+      === 200)
+    val second = registry.latest("evict_me").get
+    assert(!ModelCache.holds(spark, first.path))
+    assert(ModelCache.holds(spark, second.path))
+  }
+
+  test("an upload miss on a just-trained entry runs no Spark job") {
+    assert(post("/train/?model_type=D_TREE&name=no_jobs")._1 === 200)
+    val ((c, b), jobs) = jobsDuring(post("/predict/?mode=upload&name=no_jobs",
+      header + "10,1000.0,0.05,0.02\n25,,0.1,0.08\n"))
+    assert(c === 200, b)
+    assert(b.contains("\"from_cache\":false"), b)
+    assert(jobs === 0)
+  }
+
+  test("four concurrent smoke misses on one entry run one confusion pass") {
+    for (n <- Seq("pass_warm", "pass_one", "pass_four"))
+      assert(post(s"/train/?model_type=D_TREE&name=$n")._1 === 200)
+    // the first smoke of the suite also fills the held-out split's cache
+    assert(post("/predict/?mode=smoke&name=pass_warm")._1 === 200)
+    val ((c1, _), onePass) =
+      jobsDuring(post("/predict/?mode=smoke&name=pass_one"))
+    assert(c1 === 200)
+    assert(onePass > 0)
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      val smoke = new Callable[(Int, String)] {
+        def call(): (Int, String) = post("/predict/?mode=smoke&name=pass_four")
+      }
+      val (replies, jobs) = jobsDuring((1 to 4).map(_ => pool.submit(smoke))
+        .map(_.get(120, TimeUnit.SECONDS)))
+      assert(replies.forall(_._1 == 200), replies)
+      assert(replies.map(r => testScore(r._2)).distinct.size === 1)
+      assert(jobs === onePass)
+    } finally pool.shutdown()
+  }
+
+  test("/predict/ on a just-trained entry runs no ReadWrite load jobs") {
+    assert(post("/train/?model_type=D_TREE&name=no_load")._1 === 200)
+    val (_, sites) = jobSitesDuring {
+      for (mode <- Seq("smoke", "db"))
+        assert(post(s"/predict/?mode=$mode&name=no_load")._1 === 200)
+      assert(post("/predict/?mode=upload&name=no_load",
+        header + "10,1000.0,0.05,0.02\n")._1 === 200)
+      assert(post("/metrics/?name=no_load")._1 === 200)
+    }
+    assert(sites.nonEmpty)
+    assert(!sites.exists(_.contains("ReadWrite")), sites)
+    // a load from disk does show up as ReadWrite jobs
+    val (_, loadSites) = jobSitesDuring(
+      PipelineModel.load(registry.latest("no_load").get.path))
+    assert(loadSites.exists(_.contains("ReadWrite")), loadSites)
   }
 }
