@@ -42,12 +42,6 @@ object Preprocess {
     df.select(fixed.toIndexedSeq: _*)
   }
 
-  /** All double-typed columns of a frame (the usual infToNull target set). */
-  def doubleCols(df: DataFrame): Seq[String] =
-    df.schema.fields.collect {
-      case StructField(n, DoubleType | FloatType, _, _) => n
-    }.toIndexedSeq
-
   /** P2 — tolerant drop: ignore names not present (reference preprocess.py:88
     * `drop(..., errors='ignore')`).
     */

@@ -1,5 +1,7 @@
 package graft.ml
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.ml.{PipelineModel, Transformer}
 import org.apache.spark.sql.SparkSession
 
@@ -7,9 +9,10 @@ import graft.core.SessionCache
 
 /** Session-scoped cache of fitted models, built once per key through
   * [[graft.core.SessionCache]]. Trainers are seeded (42, the reference
-  * protocol) over deterministic cached matrices, so a hit equals a refit
-  * (DeterminismSpec); it mirrors the reference pickling its fitted models
-  * so later requests skip refitting.
+  * protocol) over cached matrices that are deterministic for a fixed scan
+  * partition count (the seed-42 split follows it), so on one host a hit
+  * equals a refit (DeterminismSpec); it mirrors the reference pickling
+  * its fitted models so later requests skip refitting.
   *
   * Saved inference pipelines live here too: key = the model's saved path,
   * tag = [[Saved]]. [[MultiModel.save]] hands the pipeline it just wrote
@@ -18,7 +21,9 @@ import graft.core.SessionCache
   * are write-once (a save refuses an existing path), so a hit equals a
   * load from disk. Next to each saved model sits its confusion counts
   * over a held-out split ([[confusion]]), the one scoring pass behind
-  * GraftServer's smoke replies and `/metrics/`.
+  * GraftServer's smoke replies and `/metrics/`. A retrain supersedes a
+  * path for good ([[evict]]): a late reader that resolved it before the
+  * retrain still gets its model and confusion, but neither is held.
   */
 object ModelCache {
 
@@ -28,6 +33,20 @@ object ModelCache {
   private val cache = new SessionCache[(String, String), Transformer](_ => ())
   private val confusions =
     new SessionCache[(String, String), Seq[(Double, Double, Long)]](_ => ())
+  // (applicationId, path) of every saved pipeline a retrain superseded
+  private val superseded = ConcurrentHashMap.newKeySet[(String, String)]()
+
+  /** `c`'s value of `key`, dropped from `c` again when the saved `path`
+    * it belongs to is superseded: [[evict]] marks the path before it
+    * removes, so a reader that installs after the removal sees the mark.
+    */
+  private def unlessSuperseded[K, V](c: SessionCache[K, V],
+      spark: SparkSession, path: String, key: K)(build: => V): V = {
+    val v = c(spark, key)(build)
+    if (superseded.contains((spark.sparkContext.applicationId, path)))
+      c.remove(spark, key)
+    v
+  }
 
   /** Completed fits this JVM: (applicationId, key, tag) -> fit seconds. */
   def buildLog: Map[(String, String, String), Double] =
@@ -41,7 +60,8 @@ object ModelCache {
   /** Get-or-load the inference pipeline saved at `path`. */
   def saved(spark: SparkSession, path: String)
       (load: => PipelineModel): PipelineModel =
-    fitted(spark, path, Saved)(load).asInstanceOf[PipelineModel]
+    unlessSuperseded(cache, spark, path, (path, Saved))(load)
+      .asInstanceOf[PipelineModel]
 
   /** Whether the pipeline saved at `path` is held (loaded or loading). */
   def holds(spark: SparkSession, path: String): Boolean =
@@ -51,15 +71,19 @@ object ModelCache {
     * held-out split `heldOut` names, as (label, prediction, n). */
   def confusion(spark: SparkSession, path: String, heldOut: String)
       (count: => Seq[(Double, Double, Long)]): Seq[(Double, Double, Long)] =
-    confusions(spark, (path, heldOut))(count)
+    unlessSuperseded(confusions, spark, path, (path, heldOut))(count)
 
   /** Drop the pipeline saved at `path` and its confusion over `heldOut`
-    * (a retrain superseded it); a later reader loads it afresh. */
+    * (a retrain superseded it), and hold neither again: a later reader
+    * loads and counts afresh each time. */
   def evict(spark: SparkSession, path: String, heldOut: String): Unit = {
+    superseded.add((spark.sparkContext.applicationId, path))
     cache.remove(spark, (path, Saved))
     confusions.remove(spark, (path, heldOut))
   }
 
   /** Drop all cached models and confusions (tests / memory pressure). */
-  def clear(): Unit = { cache.clear(); confusions.clear() }
+  def clear(): Unit = {
+    cache.clear(); confusions.clear(); superseded.clear()
+  }
 }

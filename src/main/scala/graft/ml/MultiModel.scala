@@ -30,6 +30,51 @@ object MultiModel {
     (tr, te)
   }
 
+  /** A training split's fit input: the fitted prep, its prepared matrix
+    * (persisted), what the classifier fits on (the matrix rebalanced and
+    * materialized, or the matrix itself) and, when one was given, the
+    * held-out split's prepared matrix (persisted, materialized by its
+    * first reader). [[release]] frees everything the build pinned.
+    */
+  private[ml] final case class FitInput(prep: PipelineModel,
+      matrix: DataFrame, fitOn: DataFrame, heldOut: Option[DataFrame]) {
+    def release(): Unit = {
+      matrix.unpersist()
+      heldOut.foreach(_.unpersist())
+      // the rebalanced checkpoint's blocks (the root of its plan, never
+      // an RDD of the caller's lineage)
+      fitOn.queryExecution.logical match {
+        case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+        case _ =>
+      }
+    }
+  }
+
+  /** Fit the prep on `train` and build its fit input, rebalanced by the
+    * SMOTE `rebalance` strategy when one is given: the one sequence behind
+    * [[train]] and [[TrainingCache]]. A build that fails releases what it
+    * pinned.
+    */
+  private[ml] def fitInput(train: DataFrame, featureCols: Seq[String],
+      rebalance: Option[String], heldOut: Option[DataFrame] = None)
+      : FitInput = {
+    val prep = PrepPipeline.fit(train, featureCols)
+    // the prepped matrix feeds SMOTE's class histogram + neighborhood
+    // pass, the classifier fit and the training-accuracy scan — persist
+    // once instead of re-running impute/assemble/scale per consumer
+    val matrix = PrepPipeline.matrix(prep, train).persist()
+    val in = FitInput(prep, matrix, matrix,
+      heldOut.map(PrepPipeline.matrix(prep, _).persist()))
+    // the rebalanced fit input is materialized once: a classifier fit
+    // reads its input in several jobs (partition count, instances), each
+    // re-running SMOTE's plan, and SMOTE's label metadata spares it the
+    // max(label) pass. localCheckpoint, not persist: it keeps the plan's
+    // partition layout, which a tree's split sampling depends on
+    try rebalance.fold(in)(s =>
+      in.copy(fitOn = Smote.rebalance(matrix, s).localCheckpoint()))
+    catch { case e: Throwable => in.release(); throw e }
+  }
+
   /** Fit prep + (optional SMOTE) + classifier; return an inference
     * pipeline that applies prep then the classifier (no SMOTE inside).
     */
@@ -37,37 +82,19 @@ object MultiModel {
       params: Map[String, String] = Map.empty,
       useSmote: Boolean = true,
       smoteStrategy: String = "oversample"): Trained = {
-    val prep = PrepPipeline.fit(train, featureCols)
-    // the prepped matrix feeds SMOTE's class histogram + neighborhood
-    // pass, the classifier fit and the training-accuracy scan — persist
-    // once instead of re-running impute/assemble/scale per consumer
-    val prepped = PrepPipeline.matrix(prep, train).persist()
-    // the rebalanced fit input is materialized once: a classifier fit
-    // reads its input in several jobs (partition count, instances), each
-    // re-running SMOTE's plan, and SMOTE's label metadata spares it the
-    // max(label) pass. localCheckpoint, not persist: it keeps the plan's
-    // partition layout, which a tree's split sampling depends on
-    var fitInput = prepped
+    val in = fitInput(train, featureCols, Option.when(useSmote)(smoteStrategy))
     try {
-      if (useSmote)
-        fitInput = new Smote().setStrategy(smoteStrategy).transform(prepped)
-          .localCheckpoint()
-      val clf = Trainers.byName(modelType, params).fit(fitInput)
+      val clf = Trainers.byName(modelType, params).fit(in.fitOn)
         .asInstanceOf[org.apache.spark.ml.Transformer]
       // wrap the already-fitted stages: Pipeline.fit passes Transformers
       // through untouched, so nothing is re-fit here
       val inference = new Pipeline()
-        .setStages(Array(prep, clf)).fit(train.limit(1))
+        .setStages(Array(in.prep, clf)).fit(train.limit(1))
       val acc = Metrics.accuracy(
-        clf.transform(prepped).select(col("label"), col("prediction")))
+        clf.transform(in.matrix).select(col("label"), col("prediction")))
         .head().getDouble(0)
       Trained(inference, modelType, params, acc)
-    } finally {
-      prepped.unpersist()
-      // the checkpoint's blocks: nothing reads them after the fit
-      fitInput.queryExecution.logical.collectFirst {
-        case r: LogicalRDD => r.rdd }.foreach(_.unpersist(blocking = false))
-    }
+    } finally in.release()
   }
 
   /** L6 — score a frame: adds `prediction` (and probability columns where

@@ -1,20 +1,16 @@
 package graft.ml
 
-import org.apache.spark.ml.Transformer
 import org.apache.spark.ml.attribute.NominalAttribute
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.linalg.{Vector, Vectors}
-import org.apache.spark.ml.param.{IntParam, LongParam, Param, ParamMap}
-import org.apache.spark.ml.util.{DefaultParamsReadable, DefaultParamsWritable,
-  Identifiable}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
-/** M2 — SMOTE minority-class rebalancing as a custom spark.ml Transformer
-  * (the one genuinely novel distributed component, SURVEY §7.3/7.4;
-  * reference /root/reference/src/train.py:70-71 `SMOTE(random_state=42)`).
+/** M2 — SMOTE minority-class rebalancing of a prepared matrix, applied at
+  * fit time only, as the reference's imblearn `fit_resample` is
+  * (/root/reference/src/train.py:70-71 `SMOTE(random_state=42)`; SURVEY
+  * §7.3/7.4). It is never a stage of a saved model.
   *
   * Two strategies:
   *   - "oversample": exact-count duplication of minority rows (cheap
@@ -34,39 +30,16 @@ import org.apache.spark.sql.types.StructType
   *
   * Determinism: no RNG state — the projection direction, per-row synthetic
   * copy counts, neighbor choice and interpolation coefficient all derive
-  * from xxhash64/seeded arithmetic, so two runs on identical data produce
-  * identical output (asserted in SmoteSpec).
-  *
-  * Output schema is (labelCol, featuresCol): like the reference, SMOTE
-  * operates on the modeling matrix, not the raw table. The label carries
-  * the class count from SMOTE's class histogram as nominal metadata, so
-  * a classifier fit on the output skips its own max(label) pass.
+  * from xxhash64/seeded arithmetic under the fixed seed 42, so two runs on
+  * identical data produce identical output (asserted in MlPipelineSpec).
   */
-class Smote(override val uid: String) extends Transformer
-    with DefaultParamsWritable {
+object Smote {
+  /** The values `strategy` accepts. */
+  val Strategies: Seq[String] = Seq("oversample", "smote")
 
-  def this() = this(Identifiable.randomUID("smote"))
-
-  val labelCol = new Param[String](this, "labelCol", "label column")
-  val featuresCol = new Param[String](this, "featuresCol", "features column")
-  val seed = new LongParam(this, "seed", "determinism seed")
-  val k = new IntParam(this, "k", "neighborhood size for interpolation")
-  val strategy = new Param[String](this, "strategy", "oversample | smote")
-
-  setDefault(labelCol -> "label", featuresCol -> PrepPipeline.FeaturesCol,
-    seed -> 42L, k -> 5, strategy -> "smote")
-
-  def setLabelCol(v: String): this.type = set(labelCol, v)
-  def setFeaturesCol(v: String): this.type = set(featuresCol, v)
-  def setSeed(v: Long): this.type = set(seed, v)
-  def setK(v: Int): this.type = set(k, v)
-  def setStrategy(v: String): this.type = set(strategy, v)
-
-  override def transformSchema(schema: StructType): StructType =
-    StructType(schema.filter(f =>
-      f.name == $(labelCol) || f.name == $(featuresCol)))
-
-  override def copy(extra: ParamMap): Smote = defaultCopy(extra)
+  private val Seed = 42L
+  private val Label = "label"
+  private val Features = PrepPipeline.FeaturesCol
 
   /** Slab width along the unit projection; features are standardized
     * upstream so the projection is ~N(0,1) and 0.25 keeps slabs populated
@@ -74,25 +47,33 @@ class Smote(override val uid: String) extends Transformer
     */
   private val SlabWidth = 0.25
 
-  override def transform(ds: Dataset[_]): DataFrame = {
-    val lc = $(labelCol); val fc = $(featuresCol)
-    val df = ds.toDF.select(col(lc), col(fc))
+  /** `matrix` (a [[PrepPipeline.matrix]]: `label`, `features`) plus the
+    * synthetic minority rows that balance its classes under `strategy`,
+    * interpolating between each minority row and one of its `k` nearest
+    * minority neighbors for "smote". The label carries the class count
+    * from SMOTE's class histogram as nominal metadata, so a classifier fit
+    * on the output skips its own max(label) pass.
+    */
+  def rebalance(matrix: DataFrame, strategy: String, k: Int = 5)
+      : DataFrame = {
+    val df = matrix.select(col(Label), col(Features))
     // class histogram is |classes| rows — driver-side collect is exact
     // and cheap at any scale. The per-class sample vector rides along so
     // the feature dimension comes out of the SAME pass (round-9: a
     // separate head() action re-executed the whole upstream prep
     // transform once more per call — measurable when the input is an
     // unpersisted pipeline output).
-    val stats = df.groupBy(col(lc))
-      .agg(count(lit(1)).as("__n"), first(col(fc)).as("__sample"))
+    val stats = df.groupBy(col(Label))
+      .agg(count(lit(1)).as("__n"), first(col(Features)).as("__sample"))
       .collect()
-    Smote.withNumClasses(rebalance(df, stats), lc, stats.map(_.get(0)).toSeq)
+    withNumClasses(synthesize(df, stats, strategy, k),
+      stats.map(_.get(0)).toSeq)
   }
 
   /** `df` plus the synthetic minority rows its class histogram `stats`
     * calls for. */
-  private def rebalance(df: DataFrame, stats: Array[Row]): DataFrame = {
-    val lc = $(labelCol); val fc = $(featuresCol)
+  private def synthesize(df: DataFrame, stats: Array[Row], strategy: String,
+      k: Int): DataFrame = {
     val counts = stats.map(r => (r.get(0), r.getLong(1)))
     if (counts.length < 2) return df
     val (_, majCount) = counts.maxBy(_._2)
@@ -100,16 +81,16 @@ class Smote(override val uid: String) extends Transformer
     val deficit = majCount - minCount
     if (deficit == 0) return df
 
-    val minority = df.filter(col(lc) === lit(minLabel))
+    val minority = df.filter(col(Label) === lit(minLabel))
 
     // deterministic unit projection direction from the seed
     val dim = stats.head.getAs[Vector]("__sample").size
-    val rng = new scala.util.Random($(seed))
+    val rng = new scala.util.Random(Seed)
     val raw = Array.fill(dim)(rng.nextGaussian())
     val nrm = math.sqrt(raw.map(x => x * x).sum)
     val u = raw.map(_ / nrm)
     val proj = aggregate(
-      zip_with(vector_to_array(col(fc)),
+      zip_with(vector_to_array(col(Features)),
         lit(u), (x, w) => x * w),
       lit(0.0d), (acc, v) => acc + v)
 
@@ -135,20 +116,19 @@ class Smote(override val uid: String) extends Transformer
         .toDF("__slab", "__off"))
 
     val w = Window.partitionBy(col("__slab"))
-      .orderBy(col("__proj"), xxhash64(col(fc).cast("string")))
-    val kk = $(k)
+      .orderBy(col("__proj"), xxhash64(col(Features).cast("string")))
     val indexed = slabbed.join(offDf, Seq("__slab"))
       .withColumn("__sid", row_number().over(w) + col("__off"))
     // the k lag/lead vector neighborhoods are only consumed by the
     // interpolating strategy — "oversample" duplicates rows verbatim, so
     // skip shipping k extra vectors per row through the window there
-    val ranked = ($(strategy) match {
+    val ranked = (strategy match {
       case "smote" =>
         // exactly k candidates: alternate lag/lead then truncate (odd k
         // would otherwise yield k+1 — one farther neighbor than asked)
-        val neighborCols = (1 to (kk + 1) / 2).flatMap(i =>
-          Seq(lag(col(fc), i).over(w), lead(col(fc), i).over(w)))
-          .take(kk)
+        val neighborCols = (1 to (k + 1) / 2).flatMap(i =>
+          Seq(lag(col(Features), i).over(w), lead(col(Features), i).over(w)))
+          .take(k)
         indexed.withColumn("__nbs",
           filter(array(neighborCols: _*), x => x.isNotNull))
       case _ => indexed
@@ -164,32 +144,27 @@ class Smote(override val uid: String) extends Transformer
       .filter(col("__copies") > 0)
       .withColumn("__ci", explode(sequence(lit(1L), col("__copies"))))
 
-    val synth = $(strategy) match {
-      case "oversample" => expanded.select(col(lc), col(fc))
+    val synth = strategy match {
+      case "oversample" => expanded.select(col(Label), col(Features))
       case "smote" =>
         // neighbor pick + interpolation coefficient, both hash-derived
         expanded
           .withColumn("__nb", when(size(col("__nbs")) > 0,
             element_at(col("__nbs"),
-              (pmod(xxhash64(col("__sid"), col("__ci"), lit($(seed))),
+              (pmod(xxhash64(col("__sid"), col("__ci"), lit(Seed)),
                 size(col("__nbs"))) + 1).cast("int"))))
           .withColumn("__t",
-            pmod(xxhash64(col("__ci"), col("__sid"), lit($(seed))),
+            pmod(xxhash64(col("__ci"), col("__sid"), lit(Seed)),
               lit(1000000L)).cast("double") / 1000000.0)
-          .select(col(lc),
-            when(col("__nb").isNull, col(fc))
-              .otherwise(Smote.lerpUdf(col(fc), col("__nb"), col("__t")))
-              .as(fc))
+          .select(col(Label),
+            when(col("__nb").isNull, col(Features))
+              .otherwise(lerpUdf(col(Features), col("__nb"), col("__t")))
+              .as(Features))
       case other =>
         throw new IllegalArgumentException(s"unknown strategy: $other")
     }
-    df.unionByName(synth.select(col(lc), col(fc)))
+    df.unionByName(synth.select(col(Label), col(Features)))
   }
-}
-
-object Smote extends DefaultParamsReadable[Smote] {
-  /** The values `strategy` accepts. */
-  val Strategies: Seq[String] = Seq("oversample", "smote")
 
   /** `out` with its label column carrying, as nominal metadata, the class
     * count a classifier infers from `labels` (max label + 1), so a fit on
@@ -197,13 +172,13 @@ object Smote extends DefaultParamsReadable[Smote] {
     * non-negative integers below 100, where a classifier infers the count
     * itself (and raises its own error otherwise).
     */
-  private def withNumClasses(out: DataFrame, lc: String,
-      labels: Seq[Any]): DataFrame = {
+  private def withNumClasses(out: DataFrame, labels: Seq[Any])
+      : DataFrame = {
     val values = labels.collect { case n: Number => n.doubleValue }
     if (values.isEmpty || values.size != labels.size ||
         values.exists(v => v < 0 || v != math.floor(v)) || values.max >= 100)
       out
-    else out.withMetadata(lc, NominalAttribute.defaultAttr
+    else out.withMetadata(Label, NominalAttribute.defaultAttr
       .withNumValues(values.max.toInt + 1).toMetadata())
   }
 

@@ -247,20 +247,20 @@ object AnalyticsQueries extends QueryModule {
 
     "q_cms_heavy_hitters" -> QueryDef(
       (s, dir) => {
-        // native mergeable Count-Min sketch vs exact counts, both
-        // computed in one pass each: the sketch aggregate's estimates
-        // must bracket the exact frequency (est >= exact always;
-        // est <= exact + 5N/width by the CMS bound with slack). Counter
-        // merges are elementwise sums, so the estimates are bit-stable
-        // at any partitioning — the 100 TB path needs only the fixed
-        // 256 KB (depth 4 × width 8192 × 8 B) buffer per partition,
-        // never a |vocab| shuffle.
+        // mergeable Count-Min sketch (Spark's count_min_sketch
+        // aggregate) vs exact counts, both computed in one pass each:
+        // the sketch's estimates must bracket the exact frequency (est
+        // >= exact always; est <= exact + 5N/width by the CMS bound with
+        // slack). Counter merges are elementwise sums, so the estimates
+        // are bit-stable at any partitioning — the 100 TB path needs
+        // only the fixed 256 KB (depth 4 × width 8192 × 8 B) buffer per
+        // partition, never a |vocab| shuffle.
         val probes = Seq("spark", "join", "window", "table", "data")
         val toks = T(s, dir, "documents")
           .select(explode(graft.text.TextStats.tokens(lower(col("text"))))
             .as("tok"))
         val sketch = toks.agg(
-          graft.functions.CountMinSketchAgg
+          graft.functions.CountMinSketchEstimates
             .cms_estimates(col("tok"), probes).as("est"),
           count(lit(1)).as("n_total"))
         val exact = toks.filter(col("tok").isin(probes: _*))
@@ -287,7 +287,7 @@ object AnalyticsQueries extends QueryModule {
              |   TRUE AS lower_ok, TRUE AS upper_ok
              | FROM toks WHERE tok IN ('spark','join','window','table','data')
              | GROUP BY tok ORDER BY tok""".stripMargin),
-      "native mergeable Count-Min sketch aggregate: estimates bracket " +
+      "mergeable Count-Min sketch aggregate: estimates bracket " +
         "exact counts, bit-stable under any merge order"),
 
     "q_corr_matrix" -> QueryDef(

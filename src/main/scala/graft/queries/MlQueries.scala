@@ -23,9 +23,10 @@ object MlQueries extends QueryModule {
 
   /** The shared prepared-matrix cache entry for a testdata dir (split +
     * prep fit + SMOTE paid once per session per dir — SURVEY §7.4.6's
-    * cached-prepared-data requirement; every stage is deterministic so
-    * cached == fresh). Built from the modeling frame the CLI jobs and
-    * the server train on, [[Jobs.labeled]].
+    * cached-prepared-data requirement; every stage is deterministic for a
+    * fixed scan partition count, so cached == fresh on one host). Built
+    * from the modeling frame the CLI jobs and the server train on,
+    * [[Jobs.labeled]].
     */
   private def prepared(s: SparkSession, dir: String): TrainingCache.Entry =
     TrainingCache.entry(s, dir, Jobs.FeatureCols)(Jobs.labeled(s, dir))
@@ -211,8 +212,7 @@ object MlQueries extends QueryModule {
         val prep = ModelCache.fitted(s, dir, "PREP:full")(
           PrepPipeline.fit(df, Jobs.FeatureCols))
           .asInstanceOf[org.apache.spark.ml.PipelineModel]
-        new Smote().setStrategy("smote").setK(3)
-          .transform(PrepPipeline.matrix(prep, df))
+        Smote.rebalance(PrepPipeline.matrix(prep, df), "smote", k = 3)
           .groupBy(col("label")).agg(count(lit(1)).as("cnt"))
           .orderBy(col("label"))
       },

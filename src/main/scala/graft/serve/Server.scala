@@ -31,7 +31,9 @@ import graft.ml.{LocalScorer, ModelCache, ModelEntry, ModelRegistry,
   *     entry, kept next to the model in ModelCache and computed once
   *     however many requests ask for it at the same time;
   *   - a retrain under an existing name evicts the superseded entry's
-  *     model and confusion from ModelCache;
+  *     model and confusion from ModelCache for good: a request that
+  *     resolved that entry just before the retrain is still answered,
+  *     but leaves nothing of it held;
   *   - `upload` mode actually works (app.py:124 calls a method that does
   *     not exist), and scores its rows on the driver (LocalScorer): no
   *     Spark job, no query planning;

@@ -65,7 +65,7 @@ class ReferenceParitySpec extends SparkSpec {
 
     // 5. SMOTE balanced the training matrix exactly (reference invariant)
     val prepped = PrepPipeline.matrix(PrepPipeline.fit(tr, featureCols), tr)
-    val smoted = new Smote().setK(3).transform(prepped)
+    val smoted = Smote.rebalance(prepped, "smote", k = 3)
       .groupBy("label").count().collect()
       .map(r => r.getDouble(0) -> r.getLong(1)).toMap
     assert(smoted(0.0) === smoted(1.0))

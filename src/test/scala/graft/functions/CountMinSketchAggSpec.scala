@@ -1,9 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.CountMinSketch
 
 import graft.SparkSpec
 
+/** Spark's `count_min_sketch` aggregate and the estimate step of
+  * [[CountMinSketchEstimates]]. */
 class CountMinSketchAggSpec extends SparkSpec {
 
   import spark.implicits._
@@ -13,7 +16,7 @@ class CountMinSketchAggSpec extends SparkSpec {
     val toks = Seq.fill(40)("a") ++ Seq.fill(7)("b") ++ Seq.fill(1)("c")
     def estimates(parts: Int): Seq[Long] = {
       val df = spark.sparkContext.parallelize(toks, parts).toDF("tok")
-      df.agg(CountMinSketchAgg.cms_estimates(col("tok"),
+      df.agg(CountMinSketchEstimates.cms_estimates(col("tok"),
           Seq("a", "b", "c", "absent")).as("e"))
         .head().getSeq[Long](0)
     }
@@ -29,7 +32,11 @@ class CountMinSketchAggSpec extends SparkSpec {
     // only inflate, never undercount
     val toks = (1 to 200).map(i => s"t${i % 10}")
     val df = toks.toDF("tok")
-    val est = df.agg(CountMinSketchAgg.cms_estimates(col("tok"),
+    val cms = CountMinSketch.readFrom(df.agg(
+        CountMinSketchEstimates.sketch(col("tok"), depth = 3, width = 2))
+      .head().getAs[Array[Byte]](0))
+    assert((cms.depth, cms.width) === ((3, 2)))
+    val est = df.agg(CountMinSketchEstimates.cms_estimates(col("tok"),
         Seq("t0", "t5"), depth = 3, width = 2).as("e"))
       .head().getSeq[Long](0)
     assert(est.forall(_ >= 20L)) // true count of each is 20

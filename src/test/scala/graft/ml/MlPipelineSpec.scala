@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.Metadata
+import org.apache.spark.storage.StorageLevel
 
 import graft.SparkSpec
 import graft.cli.Jobs
@@ -92,6 +93,26 @@ class MlPipelineSpec extends SparkSpec {
     ModelCache.clear()
   }
 
+  test("a late reader of a path a retrain evicted leaves neither its " +
+      "model nor its confusion held") {
+    val dir = Files.createTempDirectory("graft-evicted").toString
+    val (tr, _) = MultiModel.split(labeled)
+    val path = MultiModel.save(MultiModel.train(tr, featureCols, "D_TREE",
+      Map("max_depth" -> "2"), useSmote = false), dir,
+      new ModelRegistry(s"$dir/registry.jsonl"), "late_reader")
+    ModelCache.evict(spark, path, "held_out")
+    // a request that resolved `path` before the retrain reads it now
+    var counts = 0
+    def confusion() = ModelCache.confusion(spark, path, "held_out") {
+      counts += 1; Seq((0.0, 0.0, 1L))
+    }
+    assert(MultiModel.load(path).stages.length === 2)
+    confusion()
+    assert(!ModelCache.holds(spark, path), "the evicted model stayed held")
+    confusion()
+    assert(counts === 2, "the evicted confusion stayed held")
+  }
+
   test("S7 save/load round-trip preserves predictions; registry records") {
     val dir = Files.createTempDirectory("graft-models").toString
     val reg = new ModelRegistry(s"$dir/registry.jsonl")
@@ -126,7 +147,7 @@ class MlPipelineSpec extends SparkSpec {
       // the fit as it ran before: the lazy SMOTE plan, no label metadata
       val prepped = PrepPipeline.matrix(PrepPipeline.fit(tr, featureCols), tr)
         .persist()
-      val smoted = new Smote().setStrategy("oversample").transform(prepped)
+      val smoted = Smote.rebalance(prepped, "oversample")
         .withMetadata("label", Metadata.empty)
       val direct = Trainers.byName("D_TREE").fit(smoted).asInstanceOf[Dt]
       prepped.unpersist()
@@ -137,7 +158,7 @@ class MlPipelineSpec extends SparkSpec {
   test("M2 SMOTE balances classes exactly") {
     val prepped = PrepPipeline.matrix(
       PrepPipeline.fit(labeled, featureCols), labeled)
-    val out = new Smote().setStrategy("smote").setK(3).transform(prepped)
+    val out = Smote.rebalance(prepped, "smote", k = 3)
     val counts = out.groupBy("label").count().collect()
       .map(r => r.getDouble(0) -> r.getLong(1)).toMap
     assert(counts(0.0) === counts(1.0))
@@ -146,8 +167,7 @@ class MlPipelineSpec extends SparkSpec {
   test("M2 SMOTE is deterministic under fixed seed") {
     val prepped = PrepPipeline.matrix(
       PrepPipeline.fit(labeled, featureCols), labeled)
-    def runSum() = new Smote().setStrategy("smote").setK(3)
-      .transform(prepped)
+    def runSum() = Smote.rebalance(prepped, "smote", k = 3)
       .select(explode(
         org.apache.spark.ml.functions.vector_to_array(col("features")))
         .as("v"))
@@ -158,7 +178,7 @@ class MlPipelineSpec extends SparkSpec {
   test("M2 oversample strategy duplicates real minority rows only") {
     val prepped = PrepPipeline.matrix(
       PrepPipeline.fit(labeled, featureCols), labeled).cache()
-    val out = new Smote().setStrategy("oversample").transform(prepped)
+    val out = Smote.rebalance(prepped, "oversample")
     val counts = out.groupBy("label").count().collect()
       .map(r => r.getDouble(0) -> r.getLong(1)).toMap
     assert(counts(0.0) === counts(1.0))
@@ -210,8 +230,6 @@ class MlPipelineSpec extends SparkSpec {
     assert(math.abs(rep(1.0)._4 - 2.0 / 3.0) < 1e-12)
   }
 
-  // last in the suite: TrainingCache unpersists its input, which is the
-  // plan `labeled` caches
   test("a D_TREE fit on TrainingCache's smotedTrain is the classifier " +
       "MultiModel.train fits with useSmote and oversample") {
     TrainingCache.clear()
@@ -233,7 +251,20 @@ class MlPipelineSpec extends SparkSpec {
     val cached = viaCache.transform(e.preppedTest)
       .select("prediction").collect().map(_.getDouble(0)).toSeq
     assert(predicted.size === e.nTest)
+    assert(e.nTrain === tr.count())
     assert(cached === predicted)
     TrainingCache.clear()
+  }
+
+  test("a TrainingCache build keeps its caller's cache of the frame it " +
+      "splits") {
+    TrainingCache.clear()
+    val mine = Jobs.labeled(spark, sf0001).cache()
+    mine.count()
+    TrainingCache.entry(spark, "caller-cache", Jobs.FeatureCols)(
+      Jobs.labeled(spark, sf0001))
+    assert(mine.storageLevel !== StorageLevel.NONE)
+    TrainingCache.clear()
+    mine.unpersist()
   }
 }
