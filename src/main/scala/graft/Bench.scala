@@ -77,6 +77,16 @@ object Bench {
     median(xs.filter(_ <= 3.0 * lo))
   }
 
+  /** Heap in use after two full collections at the end of a run, its
+    * caches still held: what the run retains (perfbench's
+    * `heap_retained_mb`).
+    */
+  private def heapRetainedMb(): Double = {
+    val mem = java.lang.management.ManagementFactory.getMemoryMXBean
+    (1 to 2).foreach { _ => System.gc(); Thread.sleep(50) }
+    mem.getHeapMemoryUsage.getUsed / 1048576.0
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default 5 (round 8): the sandbox host shows external stall windows
@@ -143,6 +153,7 @@ object Bench {
     val emitted = new java.util.concurrent.atomic.AtomicBoolean(false)
     def emitSummary(partial: Boolean): Unit =
       if (emitted.compareAndSet(false, true)) synchronized {
+        val heapMb = fmt.format(heapRetainedMb())
         val results: Seq[(String, Double)] = selected.map { case (name, _) =>
           val xs = repsDetail.getOrElse(name, Nil).toSeq
           val sec =
@@ -207,7 +218,7 @@ object Bench {
         val divJson = divergent.map("\"" + esc(_) + "\"")
           .mkString("[", ",", "]")
         val fullLine =
-          s"""{"metric":"total","value":${fmt.format(total)},"unit":"sec","queries":$fullJson,"plain_median":$plainJson,"median_divergent":$divJson,"profiles":$profJson,"cache_build_sec":${fmt.format(cacheBuildSec)},$cacheJsonTotals,"cache_builds":$cacheJson,"rep_samples":$repsJson,"warmup_sec":$warmJson,"start_offset_sec":$offJson,"sf":"$sfDir","cpus":$cpus,"profile":"$profile","reps":$reps,"clean_reps":$cleanReps,"fold_warmup":$foldWarmup,"warmup":1,"interleaved":true,"failed":$failed,"unreached":$unreached,"partial":$partial}"""
+          s"""{"metric":"total","value":${fmt.format(total)},"unit":"sec","queries":$fullJson,"plain_median":$plainJson,"median_divergent":$divJson,"profiles":$profJson,"cache_build_sec":${fmt.format(cacheBuildSec)},$cacheJsonTotals,"heap_retained_mb":$heapMb,"cache_builds":$cacheJson,"rep_samples":$repsJson,"warmup_sec":$warmJson,"start_offset_sec":$offJson,"sf":"$sfDir","cpus":$cpus,"profile":"$profile","reps":$reps,"clean_reps":$cleanReps,"fold_warmup":$foldWarmup,"warmup":1,"interleaved":true,"failed":$failed,"unreached":$unreached,"partial":$partial}"""
         val fullPath = java.nio.file.Paths.get("bench_full.json")
         java.nio.file.Files.write(fullPath, (fullLine + "\n").getBytes("UTF-8"))
         // The full line goes ONLY to the file, never to stderr: sbt's
@@ -226,7 +237,7 @@ object Bench {
         val byCost = results.filter(_._2 < 0) ++ done.sortBy(-_._2)
         val budget = 1400
         val head =
-          s"""{"metric":"total","value":${fmt.format(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,"profile":"$profile","reps":$reps,"clean_reps":$cleanReps,"warmup":1,"n_queries":${results.size},"failed":$failed,"unreached":$unreached,"partial":$partial,"cache_build_sec":${fmt.format(cacheBuildSec)},$cacheJsonTotals,"full":"bench_full.json","queries":{"""
+          s"""{"metric":"total","value":${fmt.format(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,"profile":"$profile","reps":$reps,"clean_reps":$cleanReps,"warmup":1,"n_queries":${results.size},"failed":$failed,"unreached":$unreached,"partial":$partial,"cache_build_sec":${fmt.format(cacheBuildSec)},$cacheJsonTotals,"heap_retained_mb":$heapMb,"full":"bench_full.json","queries":{"""
         val tail0 = "}}"
         val kept = scala.collection.mutable.ListBuffer.empty[String]
         var len = head.length + tail0.length + 40 // slack for omitted_*

@@ -27,9 +27,13 @@ import org.apache.spark.sql.SparkSession
   * Ledger: each completed build's start and end `nanoTime` per key;
   * [[buildLog]] gives their lengths, [[SessionCache.buildUnionSec]] the
   * union over every cache, so concurrent or nested builds count once.
-  * @param release frees a finished value of a live context on `clear()`
+  * @param release frees a finished value of a live context when its
+  *   entry is dropped
+  * @param live whether a finished value can still be served; a hit on
+  *   one that cannot drops that entry, releases it and builds afresh
   */
-final class SessionCache[K, V](release: V => Unit) {
+final class SessionCache[K, V](release: V => Unit,
+    live: V => Boolean = (_: V) => true) {
 
   private val cache =
     new ConcurrentHashMap[(String, K), (SparkContext, CompletableFuture[V])]()
@@ -48,10 +52,16 @@ final class SessionCache[K, V](release: V => Unit) {
     val k = (sc.applicationId, key)
     val mine = (sc, new CompletableFuture[V]())
     val existing = cache.putIfAbsent(k, mine)
-    if (existing != null)
-      try existing._2.join() catch {
+    if (existing != null) {
+      val v = try existing._2.join() catch {
         case e: CompletionException => throw Option(e.getCause).getOrElse(e) }
-    else try {
+      if (live(v)) v
+      else {
+        // drop exactly this entry: a racing caller may have replaced it
+        if (cache.remove(k, existing)) release(v)
+        apply(spark, key)(build)
+      }
+    } else try {
       val t0 = System.nanoTime()
       val v = build
       spans.put(k, (t0, System.nanoTime()))

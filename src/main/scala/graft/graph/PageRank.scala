@@ -49,21 +49,21 @@ object PageRank {
     val outdeg = edges.groupBy(col(srcCol)).agg(count(lit(1)).as("__deg"))
     // Materialize the degree-annotated edge list ONCE, hash-partitioned
     // by src — the in-memory analogue of a src-bucketed table layout
-    // (io/Bucketing.scala proves the on-disk variant). InMemoryTableScan
-    // preserves the cached plan's outputPartitioning, so every
+    // (io/Bucketing.scala proves the on-disk variant). The FrameCache
+    // checkpoint declares the build's outputPartitioning, so every
     // iteration's join-by-src consumes the edges WITHOUT a new Exchange:
     // only the (node-sized) rank frame moves per iteration, instead of
     // re-shuffling the whole edge list K times. At 100 TB the edge list
     // is the graph's dominant volume, so this turns K edge shuffles into
-    // one (PlanAuditSpec pins it). NOT localCheckpoint: the LogicalRDD
-    // it produces reports UnknownPartitioning — the layout would survive
-    // physically but be invisible to EnsureRequirements, putting the
-    // per-iteration Exchange right back. Callers without a cache key get
-    // the UN-repartitioned plan: a small (broadcast-able) edge side then
-    // pays ZERO exchanges, and a big one still shuffles only once because
-    // ReuseExchange dedupes the K identical join subtrees — forcing the
-    // repartition there would make small-graph callers pay a shuffle the
-    // optimizer would otherwise skip.
+    // one (PlanAuditSpec pins it). NOT a plain Dataset.localCheckpoint:
+    // the LogicalRDD it produces reports UnknownPartitioning — the layout
+    // would survive physically but be invisible to EnsureRequirements,
+    // putting the per-iteration Exchange right back. Callers without a
+    // cache key get the UN-repartitioned plan: a small (broadcast-able)
+    // edge side then pays ZERO exchanges, and a big one still shuffles
+    // only once because ReuseExchange dedupes the K identical join
+    // subtrees — forcing the repartition there would make small-graph
+    // callers pay a shuffle the optimizer would otherwise skip.
     val e = edgeCacheKey match {
       case Some(k) =>
         graft.core.FrameCache.cached(nodes.sparkSession, k) {

@@ -2,9 +2,9 @@ package graft.ml
 
 import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
+import graft.core.FrameCache
 import graft.eval.Metrics
 
 /** The reference's `MultiModel` + `Predictor` core re-expressed Spark-first
@@ -38,16 +38,8 @@ object MultiModel {
     */
   private[ml] final case class FitInput(prep: PipelineModel,
       matrix: DataFrame, fitOn: DataFrame, heldOut: Option[DataFrame]) {
-    def release(): Unit = {
-      matrix.unpersist()
-      heldOut.foreach(_.unpersist())
-      // the rebalanced checkpoint's blocks (the root of its plan, never
-      // an RDD of the caller's lineage)
-      fitOn.queryExecution.logical match {
-        case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-        case _ =>
-      }
-    }
+    def release(): Unit =
+      (Seq(matrix, fitOn) ++ heldOut).foreach(FrameCache.release)
   }
 
   /** Fit the prep on `train` and build its fit input, rebalanced by the

@@ -526,8 +526,8 @@ object MiningQueries extends QueryModule {
         // (and any other co-order-graph consumer that adopts the key)
         // ... and it is cached HASH-PARTITIONED BY src (the in-memory
         // analogue of a src-bucketed table; io/Bucketing.scala proves
-        // the on-disk variant): InMemoryTableScan preserves the cached
-        // plan's outputPartitioning, so every hop's frontier⋈edges join
+        // the on-disk variant): the FrameCache checkpoint declares the
+        // build's outputPartitioning, so every hop's frontier⋈edges join
         // consumes the edge list with ZERO new Exchange — only the
         // (much smaller) frontier moves per hop. Without the layout,
         // each hop re-shuffled the full edge list on src.

@@ -454,9 +454,11 @@ class PlanAuditSpec extends SparkSpec {
   test("q_sessionize_batch: consumes the shared sessionization frame " +
       "from the in-memory cache (one events window pass per session)") {
     // any interval consumer builds the FrameCache entry; this one's plan
-    // must then read the cached relation, not re-run the window subplan
+    // must then scan its checkpoint, and hold none of the build's window
+    // subplan
     val p = planOf("q_sessionize_batch")
-    assert(p.contains("InMemoryTableScan"), p.take(3000))
+    assert(p.contains("Scan ExistingRDD"), p.take(3000))
+    assert(!p.contains("Window"), p.take(3000))
   }
 
   test("q_sliding_hll: sketches union via object agg; fan-out is a " +
@@ -523,9 +525,11 @@ class PlanAuditSpec extends SparkSpec {
     assert("""windowspecdefinition\(shard""".r.findFirstIn(p).isDefined,
       p.take(3000))
     assert(!p.contains("Exchange SinglePartition"), p.take(3000))
-    // the minhash pair set must come from the session FrameCache, not a
-    // fresh LSH pass per pipeline run
-    assert(p.contains("InMemoryTableScan"), p.take(3000))
+    // the minhash pair set must come from the session FrameCache's
+    // checkpoint, not a fresh LSH pass per pipeline run: none of the
+    // build's cross/within-band union is in the plan
+    assert(p.contains("Scan ExistingRDD"), p.take(3000))
+    assert(!p.contains("Union"), p.take(3000))
   }
 
   test("q_containment_dedup: blocking + verify are equi-joins, never " +
@@ -562,14 +566,16 @@ class PlanAuditSpec extends SparkSpec {
   test("q_bfs_reach: src-bucketed edge cache — no per-hop edge re-shuffle") {
     withoutAutoBroadcast {
       val p = planOf("q_bfs_reach")
-      // the edge list is consumed from the cache...
-      assert(p.contains("InMemoryTableScan"), p.take(2000))
+      // the edge list is consumed from the cache's checkpoint, with
+      // none of its build (the collect_set dedup) in the plan...
+      assert(p.contains("Scan ExistingRDD"), p.take(2000))
+      assert(!p.contains("ObjectHashAggregate"), p.take(2000))
       // ...and no hop re-shuffles it: an ENSURE_REQUIREMENTS exchange
       // over the 2-column (src, dst) pair frame is exactly the per-hop
       // edge shuffle the bucketed layout removes (only the small
       // frontier, keyed on `node`, may move per hop). The cached
-      // build's OWN src exchange carries the collect_set buffer, not a
-      // dst column, so the signature below cannot match it.
+      // build's own src exchange is not in the plan at all: the entry
+      // is a checkpoint.
       val edgeShuffle =
         ("""Input \[2\]: \[src#\d+L, dst#\d+L\]\n""" +
           """Arguments: hashpartitioning\(src#\d+L, \d+\), """ +
@@ -583,8 +589,11 @@ class PlanAuditSpec extends SparkSpec {
     withoutAutoBroadcast {
       val p = planOf("q_pagerank_links")
       // the degree-annotated edge list is cached hash(src)-partitioned
-      // (graph/PageRank.scala edgeCacheKey)...
-      assert(p.contains("InMemoryTableScan"), p.take(2000))
+      // (graph/PageRank.scala edgeCacheKey) and read from the cache's
+      // checkpoint, with none of its build (the src repartition) in the
+      // plan...
+      assert(p.contains("Scan ExistingRDD"), p.take(2000))
+      assert(!p.contains("REPARTITION_BY_COL"), p.take(2000))
       // ...and no join ever re-shuffles it: an ENSURE_REQUIREMENTS
       // exchange over the 3-column (src, dst, __deg) frame is exactly
       // the per-iteration edge shuffle the layout removes. (The rank
