@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.ml.{Pipeline, PipelineModel}
+import org.apache.spark.ml.{GraftMlBridge, PipelineModel}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,47 +24,69 @@ object MultiModel {
       params: Map[String, String],
       trainAccuracy: Double)
 
-  /** M1 — the reference's 70/30 seed-42 split (notebook cell 46). */
+  /** M1 — the reference's 70/30 seed-42 split (notebook cell 46) as a
+    * narrow filter: a row trains when `pmod(xxhash64(<its columns>,
+    * seed), 10⁶) < 700,000` and is held out otherwise. Its side depends on
+    * the row and the seed alone, never on the partitioning, the core
+    * count or AQE, as `randomSplit`'s per-partition sampler did, and it
+    * needs no per-partition sort.
+    */
   def split(df: DataFrame, seed: Long = 42L): (DataFrame, DataFrame) = {
-    val Array(tr, te) = df.randomSplit(Array(0.7, 0.3), seed)
-    (tr, te)
+    val draw = pmod(xxhash64(df.columns.map(c => df.col(s"`$c`")).toSeq
+      :+ lit(seed): _*), lit(1000000L))
+    (df.filter(draw < 700000L), df.filter(draw >= 700000L))
   }
 
   /** A training split's fit input: the fitted prep, its prepared matrix
-    * (persisted), what the classifier fits on (the matrix rebalanced and
-    * materialized, or the matrix itself) and, when one was given, the
-    * held-out split's prepared matrix (persisted, materialized by its
-    * first reader). [[release]] frees everything the build pinned.
+    * (persisted, materialized by its first reader), what the classifier
+    * fits on (the split rebalanced and materialized, or the matrix
+    * itself), when one was given the held-out split's prepared matrix
+    * (persisted, materialized by its first reader), and the split's row
+    * count. [[release]] frees everything the build pinned.
     */
   private[ml] final case class FitInput(prep: PipelineModel,
-      matrix: DataFrame, fitOn: DataFrame, heldOut: Option[DataFrame]) {
+      matrix: DataFrame, fitOn: DataFrame, heldOut: Option[DataFrame],
+      rows: Long) {
     def release(): Unit =
       (Seq(matrix, fitOn) ++ heldOut).foreach(FrameCache.release)
   }
 
   /** Fit the prep on `train` and build its fit input, rebalanced by the
     * SMOTE `rebalance` strategy when one is given: the one sequence behind
-    * [[train]] and [[TrainingCache]]. A build that fails releases what it
-    * pinned.
+    * [[train]] and [[TrainingCache]]. One aggregate over `train` fits the
+    * prep and counts its rows per class (for "oversample" per class and
+    * content-hash bucket); the oversampled input is then one more job, or
+    * two when it reads the bucket its cut falls in. A build that fails
+    * releases what it pinned.
     */
   private[ml] def fitInput(train: DataFrame, featureCols: Seq[String],
       rebalance: Option[String], heldOut: Option[DataFrame] = None)
       : FitInput = {
-    val prep = PrepPipeline.fit(train, featureCols)
-    // the prepped matrix feeds SMOTE's class histogram + neighborhood
-    // pass, the classifier fit and the training-accuracy scan — persist
-    // once instead of re-running impute/assemble/scale per consumer
+    val (prep, groups) = PrepPipeline.fitCounting(train, featureCols,
+      Smote.keys(train, rebalance))
+    // the prepped matrix feeds the training-accuracy scan and, in
+    // TrainingCache, every trainer query: persist it once
     val matrix = PrepPipeline.matrix(prep, train).persist()
     val in = FitInput(prep, matrix, matrix,
-      heldOut.map(PrepPipeline.matrix(prep, _).persist()))
+      heldOut.map(PrepPipeline.matrix(prep, _).persist()),
+      groups.map(_._2).sum)
     // the rebalanced fit input is materialized once: a classifier fit
-    // reads its input in several jobs (partition count, instances), each
-    // re-running SMOTE's plan, and SMOTE's label metadata spares it the
-    // max(label) pass. localCheckpoint, not persist: it keeps the plan's
-    // partition layout, which a tree's split sampling depends on
-    try rebalance.fold(in)(s =>
-      in.copy(fitOn = Smote.rebalance(matrix, s).localCheckpoint()))
-    catch { case e: Throwable => in.release(); throw e }
+    // reads its input in several jobs (split candidates, instances), each
+    // re-running the rebalance's plan, and the label metadata spares it
+    // the max(label) pass. localCheckpoint, not persist: it keeps the
+    // plan's partition layout, which a tree's split sampling depends on
+    try rebalance.fold(in) { s =>
+      val rebalanced = s match {
+        case "oversample" =>
+          PrepPipeline.matrix(prep, Smote.oversample(train, groups))
+        case "smote" => Smote.smote(matrix, Smote.classCounts(groups),
+          featureCols.size, k = 5)
+        case other =>
+          throw new IllegalArgumentException(s"unknown strategy: $other")
+      }
+      in.copy(fitOn = Smote.withNumClasses(rebalanced,
+        Smote.classCounts(groups).map(_._1)).localCheckpoint())
+    } catch { case e: Throwable => in.release(); throw e }
   }
 
   /** Fit prep + (optional SMOTE) + classifier; return an inference
@@ -78,10 +100,7 @@ object MultiModel {
     try {
       val clf = Trainers.byName(modelType, params).fit(in.fitOn)
         .asInstanceOf[org.apache.spark.ml.Transformer]
-      // wrap the already-fitted stages: Pipeline.fit passes Transformers
-      // through untouched, so nothing is re-fit here
-      val inference = new Pipeline()
-        .setStages(Array(in.prep, clf)).fit(train.limit(1))
+      val inference = GraftMlBridge.pipelineModel(Array(in.prep, clf))
       val acc = Metrics.accuracy(
         clf.transform(in.matrix).select(col("label"), col("prediction")))
         .head().getDouble(0)
@@ -109,12 +128,14 @@ object MultiModel {
     * being served. A path that already exists fails the save, so a path
     * names one model for good: the fitted pipeline is handed to
     * [[ModelCache]] under it, and [[load]] serves it with no disk read.
+    * The pipeline's metadata and its stages are written side by side
+    * (`GraftMlBridge.save`), in `PipelineModel.write`'s format.
     */
   def save(t: Trained, dir: String, registry: ModelRegistry,
       name: String, metrics: Map[String, Double] = Map.empty): String = {
     val createdAtMs = System.currentTimeMillis()
     val path = s"$dir/$name-v$createdAtMs"
-    t.pipeline.write.save(path)
+    GraftMlBridge.save(t.pipeline, path)
     ModelCache.saved(SparkSession.active, path)(t.pipeline)
     registry.append(ModelEntry(name, path, t.modelType, t.params,
       metrics ++ Map("train_accuracy" -> t.trainAccuracy), createdAtMs))

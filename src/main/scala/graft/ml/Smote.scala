@@ -1,27 +1,36 @@
 package graft.ml
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.ml.attribute.NominalAttribute
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.linalg.{Vector, Vectors}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** M2 — SMOTE minority-class rebalancing of a prepared matrix, applied at
-  * fit time only, as the reference's imblearn `fit_resample` is
+/** M2 — minority-class rebalancing, applied at fit time only, as the
+  * reference's imblearn `fit_resample` is
   * (/root/reference/src/train.py:70-71 `SMOTE(random_state=42)`; SURVEY
   * §7.3/7.4). It is never a stage of a saved model.
   *
   * Two strategies:
-  *   - "oversample": exact-count duplication of minority rows (cheap
-  *     fallback; no vector math).
+  *   - "oversample": exact-count duplication of minority rows, with no
+  *     vector math, shuffle or window. Every minority row gets
+  *     `deficit / minCount` copies, and the `deficit % minCount` rows
+  *     first in (content hash, row) order one more. Equal rows share a
+  *     hash, so the output multiset depends on the rows alone, never on
+  *     their partitioning. The class histogram and the minority rows'
+  *     hash-bucket counts come from the aggregate that fits the prep
+  *     ([[keys]], [[PrepPipeline]]); only the bucket the cut falls in is
+  *     read again, so nothing collected grows faster than a bucket.
   *   - "smote": true SMOTE semantics — each synthetic sample interpolates
   *     between a minority row and one of its k nearest minority neighbors.
   *
-  * Neighborhood search is a sorted-projection scheme rather than a pair
-  * join: project every minority vector onto a deterministic random unit
-  * direction, slab-partition the projection axis, sort within slabs, and
-  * take the k window-adjacent rows (lag/lead) as the neighborhood.
+  * SMOTE's neighborhood search is a sorted-projection scheme rather than
+  * a pair join: project every minority vector onto a deterministic random
+  * unit direction, slab-partition the projection axis, sort within slabs,
+  * and take the k window-adjacent rows (lag/lead) as the neighborhood.
   * Projection-adjacent ⇒ near in feature space (Johnson-Lindenstrauss
   * flavored); quality is approximate exactly like LSH-kNN, but the cost is
   * one narrow shuffle + per-slab sort — strictly linear, no candidate-pair
@@ -47,34 +56,108 @@ object Smote {
     */
   private val SlabWidth = 0.25
 
+  /** A row's content hash is xxhash64 over all its columns; its top 12
+    * bits name its bucket, so bucket order is hash order. */
+  private val BucketShift = 52
+
+  private def contentHash(df: DataFrame): Column =
+    xxhash64(df.columns.map(c => df.col(s"`$c`")).toSeq: _*)
+
+  /** The keys to group the rebalance's aggregate over `df` by: the label
+    * as a double, and for "oversample" the content-hash bucket. */
+  private[ml] def keys(df: DataFrame, strategy: Option[String]): Seq[Column] =
+    if (strategy.contains("oversample"))
+      Seq(col(Label).cast("double"), shiftright(contentHash(df), BucketShift))
+    else Seq(col(Label).cast("double"))
+
+  /** The class histogram of an aggregate grouped by [[keys]]. */
+  private[ml] def classCounts(groups: Seq[(Row, Long)]): Seq[(Any, Long)] =
+    groups.groupMapReduce(_._1.get(0))(_._2)(_ + _).toSeq
+
   /** `matrix` (a [[PrepPipeline.matrix]]: `label`, `features`) plus the
-    * synthetic minority rows that balance its classes under `strategy`,
-    * interpolating between each minority row and one of its `k` nearest
-    * minority neighbors for "smote". The label carries the class count
-    * from SMOTE's class histogram as nominal metadata, so a classifier fit
-    * on the output skips its own max(label) pass.
+    * rows that balance its classes under `strategy`, interpolating
+    * between each minority row and one of its `k` nearest minority
+    * neighbors for "smote". The label carries the class count as nominal
+    * metadata, so a classifier fit on the output skips its own max(label)
+    * pass.
     */
   def rebalance(matrix: DataFrame, strategy: String, k: Int = 5)
       : DataFrame = {
     val df = matrix.select(col(Label), col(Features))
-    // class histogram is |classes| rows — driver-side collect is exact
-    // and cheap at any scale. The per-class sample vector rides along so
-    // the feature dimension comes out of the SAME pass (round-9: a
-    // separate head() action re-executed the whole upstream prep
-    // transform once more per call — measurable when the input is an
-    // unpersisted pipeline output).
-    val stats = df.groupBy(col(Label))
-      .agg(count(lit(1)).as("__n"), first(col(Features)).as("__sample"))
-      .collect()
-    withNumClasses(synthesize(df, stats, strategy, k),
-      stats.map(_.get(0)).toSeq)
+    val keyCols = keys(df, Some(strategy))
+    // class histogram is |classes| rows (times the hash buckets for
+    // "oversample") — driver-side collect is exact and cheap at any
+    // scale. A sample vector rides along for the feature dimension
+    val stats = df.groupBy(keyCols: _*)
+      .agg(count(lit(1)), first(col(Features))).collect().toSeq
+    val groups = stats.map(r =>
+      Row.fromSeq(r.toSeq.take(keyCols.size)) -> r.getLong(keyCols.size))
+    val out = strategy match {
+      case "oversample" => oversample(df, groups)
+      case "smote" => smote(df, classCounts(groups),
+        stats.headOption.fold(0)(_.getAs[Vector](keyCols.size + 1).size), k)
+      case other =>
+        throw new IllegalArgumentException(s"unknown strategy: $other")
+    }
+    withNumClasses(out, classCounts(groups).map(_._1))
   }
 
-  /** `df` plus the synthetic minority rows its class histogram `stats`
-    * calls for. */
-  private def synthesize(df: DataFrame, stats: Array[Row], strategy: String,
+  /** `df` with its minority class duplicated up to the majority count (see
+    * the object doc); `groups` is the aggregate over `df` grouped by
+    * [[keys]] for "oversample". One Spark job reads the bucket the cut
+    * falls in, unless the cut ends a bucket.
+    */
+  private[ml] def oversample(df: DataFrame, groups: Seq[(Row, Long)])
+      : DataFrame = {
+    val counts = classCounts(groups)
+    if (counts.length < 2) return df
+    val (_, majCount) = counts.maxBy(_._2)
+    val (minLabel, minCount) = counts.minBy(_._2)
+    val deficit = majCount - minCount
+    if (deficit == 0) return df
+    val rem = deficit % minCount
+    val hash = contentHash(df)
+    val bucket = shiftright(hash, BucketShift)
+    val minority = col(Label).cast("double") === lit(minLabel)
+    // the rem minority rows first in (hash, row) order get one more copy:
+    // whole buckets below the cut's, then a prefix of the cut's bucket,
+    // where a run of equal hashes the cut splits is topped up with copies
+    // of the run's first rows in row order
+    val (extra, tied) = if (rem == 0) (lit(false), Seq.empty[Row]) else {
+      val buckets = groups.filter(_._1.get(0) == minLabel)
+        .map(g => g._1.getLong(1) -> g._2).sortBy(_._1)
+      val upTo = buckets.scanLeft(0L)(_ + _._2).tail
+      val i = upTo.indexWhere(_ >= rem)
+      val (b, size) = buckets(i)
+      val need = (rem - upTo(i) + size).toInt
+      if (need == size) (bucket <= b, Nil) else {
+        val rows = df.filter(minority && bucket === b).withColumn("__h", hash)
+          .collect().toSeq.map(r => r.getLong(r.length - 1) ->
+            Row.fromSeq(r.toSeq.init)).sortBy { case (h, r) => (h, r.toString) }
+        val cut = rows(need - 1)._1
+        if (rows(need)._1 != cut) (hash <= cut, Nil)
+        else (hash < cut, rows.filter(_._1 == cut)
+          .take(need - rows.count(_._1 < cut)).map(_._2))
+      }
+    }
+    // the copies go beside the rows, not among them, so a fit reads them
+    // in partitions of their own
+    val copies = lit(deficit / minCount) + when(extra, 1L).otherwise(0L)
+    val added = df.filter(minority && copies > 0)
+      .withColumn("__copy", explode(sequence(lit(1L), copies)))
+      .drop("__copy")
+    val out = df.unionByName(added)
+    if (tied.isEmpty) out
+    else out.unionByName(df.sparkSession.createDataFrame(tied.asJava,
+      df.schema))
+  }
+
+  /** `df` plus the synthetic minority rows interpolated for its class
+    * histogram `counts`: each between a minority row and one of its `k`
+    * projection-nearest minority neighbors, in a `dim`-dimensional
+    * feature space. */
+  private[ml] def smote(df: DataFrame, counts: Seq[(Any, Long)], dim: Int,
       k: Int): DataFrame = {
-    val counts = stats.map(r => (r.get(0), r.getLong(1)))
     if (counts.length < 2) return df
     val (_, majCount) = counts.maxBy(_._2)
     val (minLabel, minCount) = counts.minBy(_._2)
@@ -84,7 +167,6 @@ object Smote {
     val minority = df.filter(col(Label) === lit(minLabel))
 
     // deterministic unit projection direction from the seed
-    val dim = stats.head.getAs[Vector]("__sample").size
     val rng = new scala.util.Random(Seed)
     val raw = Array.fill(dim)(rng.nextGaussian())
     val nrm = math.sqrt(raw.map(x => x * x).sum)
@@ -117,22 +199,15 @@ object Smote {
 
     val w = Window.partitionBy(col("__slab"))
       .orderBy(col("__proj"), xxhash64(col(Features).cast("string")))
-    val indexed = slabbed.join(offDf, Seq("__slab"))
+    // exactly k candidates: alternate lag/lead then truncate (odd k would
+    // otherwise yield k+1 — one farther neighbor than asked)
+    val neighborCols = (1 to (k + 1) / 2).flatMap(i =>
+      Seq(lag(col(Features), i).over(w), lead(col(Features), i).over(w)))
+      .take(k)
+    val ranked = slabbed.join(offDf, Seq("__slab"))
       .withColumn("__sid", row_number().over(w) + col("__off"))
-    // the k lag/lead vector neighborhoods are only consumed by the
-    // interpolating strategy — "oversample" duplicates rows verbatim, so
-    // skip shipping k extra vectors per row through the window there
-    val ranked = (strategy match {
-      case "smote" =>
-        // exactly k candidates: alternate lag/lead then truncate (odd k
-        // would otherwise yield k+1 — one farther neighbor than asked)
-        val neighborCols = (1 to (k + 1) / 2).flatMap(i =>
-          Seq(lag(col(Features), i).over(w), lead(col(Features), i).over(w)))
-          .take(k)
-        indexed.withColumn("__nbs",
-          filter(array(neighborCols: _*), x => x.isNotNull))
-      case _ => indexed
-    }).drop("__proj", "__slab", "__off")
+      .withColumn("__nbs", filter(array(neighborCols: _*), x => x.isNotNull))
+      .drop("__proj", "__slab", "__off")
 
     // deterministic per-row synthetic copy counts: spread the deficit
     // round-robin (base copies for all, +1 for the first `rem` sids)
@@ -144,26 +219,20 @@ object Smote {
       .filter(col("__copies") > 0)
       .withColumn("__ci", explode(sequence(lit(1L), col("__copies"))))
 
-    val synth = strategy match {
-      case "oversample" => expanded.select(col(Label), col(Features))
-      case "smote" =>
-        // neighbor pick + interpolation coefficient, both hash-derived
-        expanded
-          .withColumn("__nb", when(size(col("__nbs")) > 0,
-            element_at(col("__nbs"),
-              (pmod(xxhash64(col("__sid"), col("__ci"), lit(Seed)),
-                size(col("__nbs"))) + 1).cast("int"))))
-          .withColumn("__t",
-            pmod(xxhash64(col("__ci"), col("__sid"), lit(Seed)),
-              lit(1000000L)).cast("double") / 1000000.0)
-          .select(col(Label),
-            when(col("__nb").isNull, col(Features))
-              .otherwise(lerpUdf(col(Features), col("__nb"), col("__t")))
-              .as(Features))
-      case other =>
-        throw new IllegalArgumentException(s"unknown strategy: $other")
-    }
-    df.unionByName(synth.select(col(Label), col(Features)))
+    // neighbor pick + interpolation coefficient, both hash-derived
+    val synth = expanded
+      .withColumn("__nb", when(size(col("__nbs")) > 0,
+        element_at(col("__nbs"),
+          (pmod(xxhash64(col("__sid"), col("__ci"), lit(Seed)),
+            size(col("__nbs"))) + 1).cast("int"))))
+      .withColumn("__t",
+        pmod(xxhash64(col("__ci"), col("__sid"), lit(Seed)),
+          lit(1000000L)).cast("double") / 1000000.0)
+      .select(col(Label),
+        when(col("__nb").isNull, col(Features))
+          .otherwise(lerpUdf(col(Features), col("__nb"), col("__t")))
+          .as(Features))
+    df.unionByName(synth)
   }
 
   /** `out` with its label column carrying, as nominal metadata, the class
@@ -172,7 +241,7 @@ object Smote {
     * non-negative integers below 100, where a classifier infers the count
     * itself (and raises its own error otherwise).
     */
-  private def withNumClasses(out: DataFrame, labels: Seq[Any])
+  private[ml] def withNumClasses(out: DataFrame, labels: Seq[Any])
       : DataFrame = {
     val values = labels.collect { case n: Number => n.doubleValue }
     if (values.isEmpty || values.size != labels.size ||

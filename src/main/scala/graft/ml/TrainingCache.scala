@@ -7,14 +7,14 @@ import graft.core.SessionCache
 /** Session-scoped cache of the prepared training matrix per (session,
   * input dir, feature set), built once through [[graft.core.SessionCache]]:
   * the seed-42 split, then [[MultiModel.train]]'s own fit-input build with
-  * its defaults (prep fit + [[PrepPipeline.matrix]] → oversample), so
+  * its defaults (one aggregate fits the prep and counts the classes, then
+  * the split is oversampled and prepared by [[PrepPipeline.matrix]]), so
   * `smotedTrain` is the very input `MultiModel.train` fits a classifier
   * on. The reference rebuilds all of it per request; here N trainings on
-  * the same data pay scan/impute/scale/rebalance once. Every stage is
-  * deterministic (seed 42 split, hash-derived SMOTE) for a fixed scan
-  * partition count, so cached == fresh on one host; the split itself
-  * follows the partition count (41,969 against 42,102 train rows at
-  * sf0.01 on 2 against 4 cores).
+  * the same data pay scan/impute/scale/rebalance once. The split and the
+  * oversample are functions of the rows and the seed alone (hash-based),
+  * so their rows are the same at any core or partition count; the
+  * classifier a fit input gives still follows its partition layout.
   */
 object TrainingCache {
 
@@ -42,10 +42,10 @@ object TrainingCache {
     val (tr, te) = MultiModel.split(labeled)
     val in = MultiModel.fitInput(tr, featureCols, Some("oversample"),
       Some(te))
-    // the train count reads the matrix SMOTE materialized; the held-out
-    // count materializes its matrix. A build that fails never reaches
-    // the cache, so it releases what it pinned
-    try new Entry(in, in.matrix.count(), in.heldOut.get.count())
+    // the train count comes from the prep fit's class histogram; the
+    // held-out count materializes its matrix. A build that fails never
+    // reaches the cache, so it releases what it pinned
+    try new Entry(in, in.rows, in.heldOut.get.count())
     catch { case e: Throwable => in.release(); throw e }
   }
 

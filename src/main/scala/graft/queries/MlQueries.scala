@@ -23,8 +23,8 @@ object MlQueries extends QueryModule {
 
   /** The shared prepared-matrix cache entry for a testdata dir (split +
     * prep fit + SMOTE paid once per session per dir — SURVEY §7.4.6's
-    * cached-prepared-data requirement; every stage is deterministic for a
-    * fixed scan partition count, so cached == fresh on one host). Built
+    * cached-prepared-data requirement; the split and the oversample are
+    * hash-based, so their rows are the same at any partitioning). Built
     * from the modeling frame the CLI jobs and the server train on,
     * [[Jobs.labeled]].
     */
@@ -155,7 +155,7 @@ object MlQueries extends QueryModule {
 
     "q_m1_split" -> QueryDef(
       (s, dir) => {
-        // 70/30 randomSplit seed 42: the split sizes themselves are not
+        // 70/30 hash split seed 42: the split sizes themselves are not
         // ANSI-SQL-reproducible, but conservation (the two splits sum to
         // the exact source count — DuckDB recomputes it) and the 70%±2
         // fraction are
@@ -169,7 +169,8 @@ object MlQueries extends QueryModule {
       Some("""SELECT s AS split, (SELECT COUNT(*) FROM lineitem) AS n_sum,
              | TRUE AS frac_ok
              | FROM (VALUES ('test'), ('train')) t(s) ORDER BY split""".stripMargin),
-      "M1: 70/30 randomSplit seed 42, conservation + fraction gated " +
+      "M1: 70/30 split seed 42 (a row trains when pmod(xxhash64(row, " +
+        "42), 10^6) < 700,000), conservation + fraction gated " +
         "(notebook cell 46)"),
 
     "q_m4_stratified_sample" -> QueryDef(
@@ -205,7 +206,7 @@ object MlQueries extends QueryModule {
         // SMOTE balance invariant IS oracle-checkable: post-transform both
         // classes sit at the majority count.
         val df = Jobs.labeled(s, dir)
-        // the prep FIT (two stat scans) is deterministic input
+        // the prep FIT (one aggregate) is deterministic input
         // preparation shared across reps/serving, exactly like
         // TrainingCache's role for the trainer family; the SMOTE
         // transform itself — the operator under measurement — runs fresh

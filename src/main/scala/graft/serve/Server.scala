@@ -2,7 +2,8 @@ package graft.serve
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.{ConcurrentHashMap, Executors}
+import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
@@ -65,9 +66,12 @@ class GraftServer(
   private val heldOut = Identifiable.randomUID("heldOut")
 
   // the reference rebuilds this per request; we prepare once and reuse
+  // (and unpersist at stop)
+  @volatile private var cachedSplit: Option[(DataFrame, DataFrame)] = None
   private lazy val prepared: (DataFrame, DataFrame) = {
     val (tr, te) = MultiModel.split(trainData())
-    (tr.cache(), te.cache())
+    cachedSplit = Some((tr.cache(), te.cache()))
+    cachedSplit.get
   }
 
   // Send every reply without waiting on Nagle's algorithm: a reply is
@@ -76,7 +80,13 @@ class GraftServer(
   // property once, when the first HttpServer is created.
   System.setProperty("sun.net.httpserver.nodelay", "true")
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
-  server.setExecutor(Executors.newFixedThreadPool(4))
+  // the handler threads, named after this server
+  private[serve] val threadPrefix = Identifiable.randomUID("graft-serve")
+  private val handlers = Executors.newFixedThreadPool(4, {
+    val n = new AtomicInteger(0)
+    (r: Runnable) => new Thread(r, s"$threadPrefix-${n.incrementAndGet()}")
+  })
+  server.setExecutor(handlers)
 
   def boundPort: Int = server.getAddress.getPort
 
@@ -242,7 +252,17 @@ class GraftServer(
   }
 
   def start(): Unit = server.start()
-  def stop(): Unit = server.stop(0)
+
+  /** Stop serving: close the listener, end the handler threads once their
+    * requests are answered, and unpersist the split this server cached.
+    */
+  def stop(): Unit = {
+    server.stop(0)
+    handlers.shutdown()
+    if (!handlers.awaitTermination(60, TimeUnit.SECONDS))
+      handlers.shutdownNow()
+    cachedSplit.foreach { case (tr, te) => tr.unpersist(); te.unpersist() }
+  }
 }
 
 object GraftServer {

@@ -227,16 +227,17 @@ class ConcurrencySpec extends SparkSpec {
       slowF.get(120, TimeUnit.SECONDS)
       pool.shutdownNow()
     }
-    // a label only the held-out rows cannot cast: the label sorts after
-    // the features, so poisoning it keeps randomSplit's row order and the
-    // held-out set. The split and prep fit pass, the train matrix and its
+    // a label only held-out rows cannot cast: the split hashes the whole
+    // row, so the rows to poison are those the split holds out once
+    // poisoned. The split and prep fit pass, the train matrix and its
     // SMOTE rebalance materialize, then the test matrix throws.
     val keyed = Tables.load(spark, sf0001, "lineitem").select(
       col("l_quantity"), col("l_extendedprice"), col("l_discount"),
       col("l_tax"), when(col("l_returnflag") === "R", "1").otherwise("0")
         .as("label"),
       monotonically_increasing_id().as("id"))
-    val heldOut = graft.ml.MultiModel.split(keyed)._2.select("id")
+    val heldOut = graft.ml.MultiModel.split(keyed.withColumn("label",
+      concat(col("label"), lit("x"))))._2.select("id")
       .collect().map(_.getLong(0))
     // Smote's localCheckpoint RDDs are Spark's lineage truncation, freed
     // by the ContextCleaner; every other persisted RDD is a pinned frame

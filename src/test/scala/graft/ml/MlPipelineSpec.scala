@@ -144,13 +144,12 @@ class MlPipelineSpec extends SparkSpec {
       val (tr, _) = MultiModel.split(labeled, seed)
       val viaTrain = MultiModel.train(tr, featureCols, "D_TREE")
         .pipeline.stages.last.asInstanceOf[Dt]
-      // the fit as it ran before: the lazy SMOTE plan, no label metadata
-      val prepped = PrepPipeline.matrix(PrepPipeline.fit(tr, featureCols), tr)
-        .persist()
-      val smoted = Smote.rebalance(prepped, "oversample")
+      // the fit on the lazy oversample plan, no label metadata
+      val (prep, groups) = PrepPipeline.fitCounting(tr, featureCols,
+        Smote.keys(tr, Some("oversample")))
+      val smoted = PrepPipeline.matrix(prep, Smote.oversample(tr, groups))
         .withMetadata("label", Metadata.empty)
       val direct = Trainers.byName("D_TREE").fit(smoted).asInstanceOf[Dt]
-      prepped.unpersist()
       assert(shape(viaTrain) === shape(direct), s"split seed $seed")
     }
   }

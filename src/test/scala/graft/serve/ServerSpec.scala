@@ -322,4 +322,23 @@ class ServerSpec extends SparkSpec {
       PipelineModel.load(registry.latest("no_load").get.path))
     assert(loadSites.exists(_.contains("ReadWrite")), loadSites)
   }
+
+  test("stop() ends the handler threads and unpersists the cached split") {
+    // its own frame, so its split is not the cache entry of the suite's
+    // server
+    val data = () => labeled().where(col("l_quantity") > 0)
+    val s = new GraftServer(spark, data, featureCols,
+      Files.createTempDirectory("graft-stop").toString)
+    s.start()
+    assert(post("/train/?model_type=GNB&use_smote=false&name=stop_me",
+      port = s.boundPort)._1 === 200)
+    val (tr, te) = MultiModel.split(data())
+    assert(tr.storageLevel.useMemory && te.storageLevel.useMemory)
+    def handlers = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith(s.threadPrefix))
+    assert(handlers.nonEmpty)
+    s.stop()
+    assert(handlers.filter(_.isAlive).isEmpty, handlers)
+    assert(!tr.storageLevel.useMemory && !te.storageLevel.useMemory)
+  }
 }
