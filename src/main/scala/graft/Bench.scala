@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, QueryMetrics}
+import graft.core.QueryMetrics.Compiles
 
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query seconds.
@@ -42,6 +43,10 @@ import graft.core.GraftSession
   *     artifact with "partial":true instead of nothing.
   *   - A query that throws is recorded as -1.0 (never silently counted
   *     as a fast success), excluded from the total and from later passes.
+  *   - Codegen compiles (classes and compile seconds) are recorded per
+  *     query for the warmup run and for the timed reps summed, with run
+  *     totals in the summary line, so a recompile regression shows in the
+  *     artifacts.
   */
 object Bench {
 
@@ -123,7 +128,7 @@ object Bench {
     def ent(k: String, v: Double) = "\"" + esc(k) + "\":" + fmt.format(v)
 
     val profiles = scala.collection.mutable.LinkedHashMap
-      .empty[String, graft.core.QueryMetrics.PlanProfile]
+      .empty[String, QueryMetrics.PlanProfile]
     // per-rep samples + sweep-relative start offsets PER REP: the medians
     // alone cannot distinguish a real regression from an environment
     // stall window; offsets reconstruct which reps shared a window
@@ -136,6 +141,12 @@ object Bench {
     val startOff = scala.collection.mutable.LinkedHashMap
       .empty[String, scala.collection.mutable.ArrayBuffer[Double]]
     val failedQ = scala.collection.mutable.LinkedHashSet.empty[String]
+    // codegen compiles per query: its warmup run, and its timed reps
+    // summed (classes in a warm rep are recompiles)
+    val warmupCompiles = scala.collection.mutable.LinkedHashMap
+      .empty[String, Compiles]
+    val repCompiles = scala.collection.mutable.LinkedHashMap
+      .empty[String, Compiles]
     val sweepT0 = System.nanoTime()
 
     // ---- streaming progress: one JSONL line per completed run --------
@@ -217,8 +228,20 @@ object Bench {
         }.mkString("{", ",", "}")
         val divJson = divergent.map("\"" + esc(_) + "\"")
           .mkString("[", ",", "]")
+        val noCompiles = Compiles(0, 0.0)
+        val compilesJson = warmupCompiles.map { case (k, w) =>
+          val r = repCompiles.getOrElse(k, noCompiles)
+          "\"" + esc(k) + "\":{\"warmup_classes\":" + w.classes +
+            ",\"warmup_compile_s\":" + fmt.format(w.seconds) +
+            ",\"reps_classes\":" + r.classes +
+            ",\"reps_compile_s\":" + fmt.format(r.seconds) + "}"
+        }.mkString("{", ",", "}")
+        val warmTotal = warmupCompiles.values.foldLeft(noCompiles)(_ + _)
+        val repTotal = repCompiles.values.foldLeft(noCompiles)(_ + _)
+        val compileTotals =
+          s""""compile_warmup_classes":${warmTotal.classes},"compile_warmup_s":${fmt.format(warmTotal.seconds)},"compile_reps_classes":${repTotal.classes},"compile_reps_s":${fmt.format(repTotal.seconds)}"""
         val fullLine =
-          s"""{"metric":"total","value":${fmt.format(total)},"unit":"sec","queries":$fullJson,"plain_median":$plainJson,"median_divergent":$divJson,"profiles":$profJson,"cache_build_sec":${fmt.format(cacheBuildSec)},$cacheJsonTotals,"heap_retained_mb":$heapMb,"cache_builds":$cacheJson,"rep_samples":$repsJson,"warmup_sec":$warmJson,"start_offset_sec":$offJson,"sf":"$sfDir","cpus":$cpus,"profile":"$profile","reps":$reps,"clean_reps":$cleanReps,"fold_warmup":$foldWarmup,"warmup":1,"interleaved":true,"failed":$failed,"unreached":$unreached,"partial":$partial}"""
+          s"""{"metric":"total","value":${fmt.format(total)},"unit":"sec","queries":$fullJson,"plain_median":$plainJson,"median_divergent":$divJson,"profiles":$profJson,"cache_build_sec":${fmt.format(cacheBuildSec)},$cacheJsonTotals,"heap_retained_mb":$heapMb,$compileTotals,"compiles":$compilesJson,"cache_builds":$cacheJson,"rep_samples":$repsJson,"warmup_sec":$warmJson,"start_offset_sec":$offJson,"sf":"$sfDir","cpus":$cpus,"profile":"$profile","reps":$reps,"clean_reps":$cleanReps,"fold_warmup":$foldWarmup,"warmup":1,"interleaved":true,"failed":$failed,"unreached":$unreached,"partial":$partial}"""
         val fullPath = java.nio.file.Paths.get("bench_full.json")
         java.nio.file.Files.write(fullPath, (fullLine + "\n").getBytes("UTF-8"))
         // The full line goes ONLY to the file, never to stderr: sbt's
@@ -237,7 +260,7 @@ object Bench {
         val byCost = results.filter(_._2 < 0) ++ done.sortBy(-_._2)
         val budget = 1400
         val head =
-          s"""{"metric":"total","value":${fmt.format(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,"profile":"$profile","reps":$reps,"clean_reps":$cleanReps,"warmup":1,"n_queries":${results.size},"failed":$failed,"unreached":$unreached,"partial":$partial,"cache_build_sec":${fmt.format(cacheBuildSec)},$cacheJsonTotals,"heap_retained_mb":$heapMb,"full":"bench_full.json","queries":{"""
+          s"""{"metric":"total","value":${fmt.format(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,"profile":"$profile","reps":$reps,"clean_reps":$cleanReps,"warmup":1,"n_queries":${results.size},"failed":$failed,"unreached":$unreached,"partial":$partial,"cache_build_sec":${fmt.format(cacheBuildSec)},$cacheJsonTotals,"heap_retained_mb":$heapMb,$compileTotals,"full":"bench_full.json","queries":{"""
         val tail0 = "}}"
         val kept = scala.collection.mutable.ListBuffer.empty[String]
         var len = head.length + tail0.length + 40 // slack for omitted_*
@@ -276,9 +299,11 @@ object Bench {
         // realized scan rows / shuffle bytes land in bench_full.json
         // at zero added cost
         val t0 = System.nanoTime()
-        profiles(name) = graft.core.QueryMetrics.profile(fn(spark, sfDir))
-        if (foldWarmup) synchronized {
-          warmupSec(name) = (System.nanoTime() - t0) / 1e9
+        val c0 = QueryMetrics.compiles()
+        profiles(name) = QueryMetrics.profile(fn(spark, sfDir))
+        synchronized {
+          warmupCompiles(name) = QueryMetrics.compiles() - c0
+          if (foldWarmup) warmupSec(name) = (System.nanoTime() - t0) / 1e9
         }
         System.err.println(s"[bench] warmup $name ok")
       } catch {
@@ -295,7 +320,9 @@ object Bench {
           try {
             System.gc()
             val off = (System.nanoTime() - sweepT0) / 1e9
+            val c0 = QueryMetrics.compiles()
             val sec = runOnce(spark, sfDir, fn)
+            val compiled = QueryMetrics.compiles() - c0
             // same lock as emitSummary: the SIGTERM shutdown hook
             // snapshots these maps while this loop is still running —
             // unsynchronized inserts could corrupt its iteration
@@ -304,6 +331,8 @@ object Bench {
                 scala.collection.mutable.ArrayBuffer.empty) += sec
               startOff.getOrElseUpdate(name,
                 scala.collection.mutable.ArrayBuffer.empty) += off
+              repCompiles(name) =
+                repCompiles.get(name).fold(compiled)(_ + compiled)
             }
             appendProgress(s"""{"q":"${esc(name)}","pass":$pass,"sec":${fmt.format(sec)},"off":${fmt.format(off)}}""")
           } catch {

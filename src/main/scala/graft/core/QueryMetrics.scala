@@ -1,11 +1,16 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import java.util.concurrent.{ArrayBlockingQueue, TimeUnit}
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec,
   ShuffleExchangeLike}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Post-execution plan accounting: what a query actually read and
   * shuffled, straight from the executed plan's SQLMetrics. This is the
@@ -26,36 +31,33 @@ object QueryMetrics {
   final case class PlanProfile(scanRows: Long, shuffleBytes: Long,
       nShuffles: Int)
 
+  /** Codegen classes compiled (Janino runs, i.e. misses of Spark's
+    * JVM-wide class cache) and the seconds spent compiling them.
+    */
+  final case class Compiles(classes: Long, seconds: Double) {
+    def -(o: Compiles): Compiles =
+      Compiles(classes - o.classes, seconds - o.seconds)
+    def +(o: Compiles): Compiles =
+      Compiles(classes + o.classes, seconds + o.seconds)
+  }
+
+  /** This JVM's compiles so far; the difference of two readings is what
+    * ran between them (JVM-wide, so it is a query's own only while that
+    * query runs alone).
+    */
+  def compiles(): Compiles =
+    Compiles(CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      CodeGenerator.compileTime / 1e9)
+
   /** Execute `df` via the noop sink (same materialization Bench times)
     * and return realized scan/shuffle totals from the final adaptive
     * plan. Reused exchanges are counted once (their metrics live on the
     * original node).
-    *
-    * The write runs its OWN QueryExecution (df.queryExecution is a
-    * separate, never-executed plan), so the executed plan is captured
-    * through a QueryExecutionListener; the listener bus is async, hence
-    * the bounded poll.
     */
   def profile(df: DataFrame): PlanProfile = {
-    val spark = df.sparkSession
-    val captured =
-      new java.util.concurrent.ArrayBlockingQueue[
-        org.apache.spark.sql.execution.QueryExecution](4)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = { captured.offer(qe); () }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    val qe = try {
+    val qe = executed(df.sparkSession)(_ => true) {
       df.write.format("noop").mode("overwrite").save()
-      val got = captured.poll(30, java.util.concurrent.TimeUnit.SECONDS)
-      require(got != null, "query-execution event not observed within 30s")
-      got
-    } finally spark.listenerManager.unregister(listener)
+    }
     val all = collectAll(qe.executedPlan)
     val scanRows = all.collect {
       case p if p.nodeName.contains("Scan") =>
@@ -68,6 +70,30 @@ object QueryMetrics {
       .map(_.metrics.get("shuffleBytesWritten").map(_.value).getOrElse(0L))
       .sum
     PlanProfile(scanRows, shuffleBytes, shuffles.size)
+  }
+
+  /** Run `action` and return the first QueryExecution it completes for
+    * which `accept` holds. A write runs its OWN QueryExecution (a
+    * frame's `queryExecution` is a separate, never-executed plan), so the
+    * executed one is captured through a QueryExecutionListener; the
+    * listener bus is async, hence the bounded poll.
+    */
+  def executed(spark: SparkSession)(accept: QueryExecution => Boolean)(
+      action: => Unit): QueryExecution = {
+    val captured = new ArrayBlockingQueue[QueryExecution](4)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = if (accept(qe)) { captured.offer(qe); () }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      action
+      val got = captured.poll(30, TimeUnit.SECONDS)
+      require(got != null, "query-execution event not observed within 30s")
+      got
+    } finally spark.listenerManager.unregister(listener)
   }
 
   /** Recursive walk that crosses AQE boundaries (final adaptive plan,

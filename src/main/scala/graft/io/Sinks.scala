@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.core.QueryMetrics
+
 /** S2/S4 — file sinks matching the reference's persisted artifacts. */
 object Sinks {
 
@@ -38,6 +40,19 @@ object Sinks {
     val w = df.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(path)
+  }
+
+  /** [[parquet]] that returns the number of rows it wrote, counted by the
+    * write itself through a named `observe`, so no second pass over `df`
+    * runs just to count it. The `Observation` API is avoided: it attaches
+    * a non-serializable manager to the session, which breaks later
+    * closures that capture the session.
+    */
+  def parquetCounted(df: DataFrame, path: String): Long = {
+    val name = "graft_rows_" + java.util.UUID.randomUUID.toString.replace("-", "")
+    QueryMetrics.executed(df.sparkSession)(_.observedMetrics.contains(name)) {
+      parquet(df.observe(name, count(lit(1))), path)
+    }.observedMetrics(name).getLong(0)
   }
 
   /** S4 — JSON predictions document

@@ -16,9 +16,17 @@ class JobsSpec extends SparkSpec {
     val dataDir = Files.createTempDirectory("graft-cli-data").toString
     val modelDir = Files.createTempDirectory("graft-cli-models").toString
 
-    PreprocessJob.main(Array(sf0001, dataDir))
-    assert(Files.exists(java.nio.file.Paths.get(s"$dataDir/train.parquet")))
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(PreprocessJob.main(Array(sf0001, dataDir)))
     assert(Files.exists(java.nio.file.Paths.get(s"$dataDir/train_X.csv")))
+    // the printed counts come from the writes themselves; they must be
+    // the row counts of the files written
+    val printed = """"(train|test)": (\d+)""".r.findAllMatchIn(out.toString)
+      .map(m => m.group(1) -> m.group(2).toLong).toMap
+    val written = Seq("train", "test").map(s =>
+      s -> spark.read.parquet(s"$dataDir/$s.parquet").count()).toMap
+    assert(printed === written, out.toString)
+    assert(written.values.forall(_ > 0))
 
     TrainJob.main(Array(dataDir, modelDir, "D_TREE", "max_depth=4",
       "name=cli_dtree"))

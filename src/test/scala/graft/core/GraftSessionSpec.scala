@@ -11,6 +11,7 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
     assert(
       spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "4096")
   }
 
   test("configure sets shuffle partitions to GraftSession.cpus; " +
