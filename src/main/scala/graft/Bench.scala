@@ -9,8 +9,8 @@ import graft.core.QueryMetrics.Compiles
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query seconds.
   *
   * Methodology (round-12 revision):
-  *   - The warmup run (JIT, scan cache, shared TrainingCache population)
-  *     doubles as the metrics-accounting run (realized scan rows /
+  *   - The warmup run (JIT, scan cache, the trainer family's TrainingCache
+  *     fit input) doubles as the metrics-accounting run (realized scan rows /
   *     shuffle bytes) AND — by default — as timed pass 1: its wall time
   *     is recorded per query in "warmup_sec" but EXCLUDED from the
   *     committed medians (it carries JIT + cache-build cost), and only
@@ -200,7 +200,9 @@ object Bench {
         // medians are clean of build cost — but the build time itself
         // swung invisible between rounds. Report every build as its own
         // ledger line so the bench total decomposes into query time +
-        // cache-build time.
+        // cache-build time. A TrainingCache line is one fit input,
+        // `matrix:<input>:<strategy>:<features>`; the held-out row count
+        // is not in it, but in the time of the first query that reads it.
         val cacheBuilds: Seq[(String, Double)] =
           graft.core.FrameCache.buildLog.toSeq.map { case ((_, k), s) =>
             s"frame:$k" -> s } ++

@@ -60,62 +60,6 @@ object Preprocess {
     df.select(cols.toIndexedSeq: _*)
   }
 
-  /** F8 — mode-impute: fill nulls in each column with that column's most
-    * frequent value (reference notebook cells 18, 39 `fillna(df.mode())`),
-    * with the same deterministic tie-break as [[ColumnStats.modeOf]]
-    * (highest count, then smallest value — numeric order for numeric
-    * columns, lexicographic otherwise).
-    *
-    * ONE pass for any number of columns: melt each row into (column,
-    * value) structs, hash-aggregate counts with map-side combine, pick
-    * each column's winner over the tiny aggregated frame. The reference's
-    * 85-column frame costs one scan here, not 85 (the per-column
-    * `modeOf().collect()` loop this replaces ran N jobs for N columns).
-    * Non-fillable column types (dates, arrays, …) are left untouched,
-    * matching `na.fill`'s own contract.
-    */
-  def imputeMode(df: DataFrame, cols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val dts = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    val fillable = cols.filter(c => dts(c) match {
-      case _: NumericType | StringType | BooleanType => true
-      case _ => false
-    })
-    if (fillable.isEmpty) return df
-    val melted = df.select(explode(array(fillable.map { c =>
-      val ord = dts(c) match {
-        case _: NumericType => col(c).cast(DoubleType)
-        case _ => lit(null).cast(DoubleType)
-      }
-      struct(lit(c).as("name"), col(c).cast(StringType).as("vs"),
-        ord.as("ord"))
-    }: _*)).as("m"))
-      .select(col("m.name").as("name"), col("m.vs").as("vs"),
-        col("m.ord").as("ord"))
-      .filter(col("vs").isNotNull)
-    val counts = melted.groupBy("name", "vs", "ord")
-      .agg(count(lit(1)).as("cnt"))
-    val w = Window.partitionBy("name")
-      .orderBy(desc("cnt"), asc_nulls_last("ord"), asc("vs"))
-    val winners = counts
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select("name", "vs")
-      .collect()
-    val modes: Map[String, Any] = winners.map { r =>
-      val c = r.getString(0)
-      val v = r.getString(1)
-      val typed: Any = dts(c) match {
-        case ByteType | ShortType | IntegerType | LongType => v.toLong
-        case FloatType | DoubleType | _: DecimalType => v.toDouble
-        case BooleanType => v.toBoolean
-        case _ => v
-      }
-      c -> typed
-    }.toMap
-    df.na.fill(modes)
-  }
-
   /** P7 — rows that occur more than once (reference notebook cell 5
     * `df[df.duplicated()]`), as (row-values, count>1). Hash-partitioned
     * group-by on all columns: scales linearly, never all-pairs.

@@ -11,6 +11,11 @@ import graft.eval.Metrics
   * (/root/reference/src/train.py:25-218, predict.py:99-125):
   * prep-fit → SMOTE rebalance (train-only) → classifier fit → a single
   * inference PipelineModel (prep + classifier), persisted via MLWritable.
+  * The first two steps are the fit input ([[fitInput]]), built once per
+  * training split: [[train]] builds and releases one per call, and
+  * [[TrainingCache]] holds one per input, feature set and rebalance
+  * strategy for the trainer queries and `/train/`, which then pay only
+  * for [[fit]].
   *
   * SMOTE is deliberately NOT a stage of the persisted pipeline: it must run
   * at fit time only, never at scoring time (the reference gets this via
@@ -42,26 +47,30 @@ object MultiModel {
     * fits on (the split rebalanced and materialized, or the matrix
     * itself), when one was given the held-out split's prepared matrix
     * (persisted, materialized by its first reader), and the split's row
-    * count. [[release]] frees everything the build pinned.
+    * count. The held-out row count is taken when it is first read.
+    * [[release]] frees everything the build pinned.
     */
-  private[ml] final case class FitInput(prep: PipelineModel,
+  private[graft] final case class FitInput(prep: PipelineModel,
       matrix: DataFrame, fitOn: DataFrame, heldOut: Option[DataFrame],
       rows: Long) {
+    lazy val heldOutRows: Long = heldOut.fold(0L)(_.count())
     def release(): Unit =
       (Seq(matrix, fitOn) ++ heldOut).foreach(FrameCache.release)
   }
 
   /** Fit the prep on `train` and build its fit input, rebalanced by the
-    * SMOTE `rebalance` strategy when one is given: the one sequence behind
-    * [[train]] and [[TrainingCache]]. One aggregate over `train` fits the
-    * prep and counts its rows per class (for "oversample" per class and
-    * content-hash bucket); the oversampled input is then one more job, or
-    * two when it reads the bucket its cut falls in. A build that fails
-    * releases what it pinned.
+    * SMOTE `rebalance` strategy when one is given ("smote" interpolates
+    * between each minority row and one of its `k` nearest minority
+    * neighbors): the one fit-input build behind [[train]],
+    * [[TrainingCache]] and q_m2_smote. One aggregate over `train` fits
+    * the prep and counts its rows per class (for "oversample" per class
+    * and content-hash bucket); the oversampled input is then one more
+    * job, or two when it reads the bucket its cut falls in. A build that
+    * fails releases what it pinned.
     */
-  private[ml] def fitInput(train: DataFrame, featureCols: Seq[String],
-      rebalance: Option[String], heldOut: Option[DataFrame] = None)
-      : FitInput = {
+  private[graft] def fitInput(train: DataFrame, featureCols: Seq[String],
+      rebalance: Option[String], heldOut: Option[DataFrame] = None,
+      k: Int = 5): FitInput = {
     val (prep, groups) = PrepPipeline.fitCounting(train, featureCols,
       Smote.keys(train, rebalance))
     // the prepped matrix feeds the training-accuracy scan and, in
@@ -80,7 +89,7 @@ object MultiModel {
         case "oversample" =>
           PrepPipeline.matrix(prep, Smote.oversample(train, groups))
         case "smote" => Smote.smote(matrix, Smote.classCounts(groups),
-          featureCols.size, k = 5)
+          featureCols.size, k)
         case other =>
           throw new IllegalArgumentException(s"unknown strategy: $other")
       }
@@ -90,22 +99,30 @@ object MultiModel {
   }
 
   /** Fit prep + (optional SMOTE) + classifier; return an inference
-    * pipeline that applies prep then the classifier (no SMOTE inside).
+    * pipeline that applies prep then the classifier (no SMOTE inside):
+    * [[fitInput]], [[fit]], then the fit input's release.
     */
   def train(train: DataFrame, featureCols: Seq[String], modelType: String,
       params: Map[String, String] = Map.empty,
       useSmote: Boolean = true,
       smoteStrategy: String = "oversample"): Trained = {
     val in = fitInput(train, featureCols, Option.when(useSmote)(smoteStrategy))
-    try {
-      val clf = Trainers.byName(modelType, params).fit(in.fitOn)
-        .asInstanceOf[org.apache.spark.ml.Transformer]
-      val inference = GraftMlBridge.pipelineModel(Array(in.prep, clf))
-      val acc = Metrics.accuracy(
-        clf.transform(in.matrix).select(col("label"), col("prediction")))
-        .head().getDouble(0)
-      Trained(inference, modelType, params, acc)
-    } finally in.release()
+    try fit(in, modelType, params) finally in.release()
+  }
+
+  /** Fit the classifier on `in`'s fit input and score its training
+    * accuracy on the prepared matrix; the inference pipeline is `in`'s
+    * prep then the classifier.
+    */
+  private[graft] def fit(in: FitInput, modelType: String,
+      params: Map[String, String]): Trained = {
+    val clf = Trainers.byName(modelType, params).fit(in.fitOn)
+      .asInstanceOf[org.apache.spark.ml.Transformer]
+    val acc = Metrics.accuracy(
+      clf.transform(in.matrix).select(col("label"), col("prediction")))
+      .head().getDouble(0)
+    Trained(GraftMlBridge.pipelineModel(Array(in.prep, clf)), modelType,
+      params, acc)
   }
 
   /** L6 — score a frame: adds `prediction` (and probability columns where

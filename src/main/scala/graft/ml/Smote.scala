@@ -12,7 +12,9 @@ import org.apache.spark.sql.functions._
 /** M2 — minority-class rebalancing, applied at fit time only, as the
   * reference's imblearn `fit_resample` is
   * (/root/reference/src/train.py:70-71 `SMOTE(random_state=42)`; SURVEY
-  * §7.3/7.4). It is never a stage of a saved model.
+  * §7.3/7.4). It is never a stage of a saved model: its one entry point
+  * is [[MultiModel.fitInput]], whose prep aggregate also counts the
+  * classes these functions balance.
   *
   * Two strategies:
   *   - "oversample": exact-count duplication of minority rows, with no
@@ -73,34 +75,6 @@ object Smote {
   /** The class histogram of an aggregate grouped by [[keys]]. */
   private[ml] def classCounts(groups: Seq[(Row, Long)]): Seq[(Any, Long)] =
     groups.groupMapReduce(_._1.get(0))(_._2)(_ + _).toSeq
-
-  /** `matrix` (a [[PrepPipeline.matrix]]: `label`, `features`) plus the
-    * rows that balance its classes under `strategy`, interpolating
-    * between each minority row and one of its `k` nearest minority
-    * neighbors for "smote". The label carries the class count as nominal
-    * metadata, so a classifier fit on the output skips its own max(label)
-    * pass.
-    */
-  def rebalance(matrix: DataFrame, strategy: String, k: Int = 5)
-      : DataFrame = {
-    val df = matrix.select(col(Label), col(Features))
-    val keyCols = keys(df, Some(strategy))
-    // class histogram is |classes| rows (times the hash buckets for
-    // "oversample") — driver-side collect is exact and cheap at any
-    // scale. A sample vector rides along for the feature dimension
-    val stats = df.groupBy(keyCols: _*)
-      .agg(count(lit(1)), first(col(Features))).collect().toSeq
-    val groups = stats.map(r =>
-      Row.fromSeq(r.toSeq.take(keyCols.size)) -> r.getLong(keyCols.size))
-    val out = strategy match {
-      case "oversample" => oversample(df, groups)
-      case "smote" => smote(df, classCounts(groups),
-        stats.headOption.fold(0)(_.getAs[Vector](keyCols.size + 1).size), k)
-      case other =>
-        throw new IllegalArgumentException(s"unknown strategy: $other")
-    }
-    withNumClasses(out, classCounts(groups).map(_._1))
-  }
 
   /** `df` with its minority class duplicated up to the majority count (see
     * the object doc); `groups` is the aggregate over `df` grouped by
@@ -180,7 +154,7 @@ object Smote {
     // below and the synthesis job) and its lineage contains the entire
     // upstream prep transform — without truncation each reader
     // re-executes that transform (round-9 profiling: 4 full upstream
-    // passes per SMOTE call; 2 after this + the fused stats pass above).
+    // passes per SMOTE call; 2 after this + the class-count pass).
     // Minority-class rows only, so the materialization is the small side
     // by construction.
     val slabbed = minority

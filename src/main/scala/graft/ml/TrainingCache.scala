@@ -4,51 +4,47 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.SessionCache
 
-/** Session-scoped cache of the prepared training matrix per (session,
-  * input dir, feature set), built once through [[graft.core.SessionCache]]:
-  * the seed-42 split, then [[MultiModel.train]]'s own fit-input build with
-  * its defaults (one aggregate fits the prep and counts the classes, then
-  * the split is oversampled and prepared by [[PrepPipeline.matrix]]), so
-  * `smotedTrain` is the very input `MultiModel.train` fits a classifier
-  * on. The reference rebuilds all of it per request; here N trainings on
-  * the same data pay scan/impute/scale/rebalance once. The split and the
+/** Session-scoped cache of fit inputs ([[MultiModel.FitInput]]) per
+  * (session, input key, feature set, rebalance strategy), built once
+  * through [[graft.core.SessionCache]]: the seed-42 split, then
+  * [[MultiModel.fitInput]] on its train half with the held-out half
+  * prepared beside it, so `fitOn` is the very input `MultiModel.train`
+  * fits a classifier on. The trainer queries and `/train/` read it; the
+  * reference rebuilds all of it per request, here N trainings on the
+  * same data pay scan/impute/scale/rebalance once. The split and the
   * oversample are functions of the rows and the seed alone (hash-based),
   * so their rows are the same at any core or partition count; the
   * classifier a fit input gives still follows its partition layout.
   */
 object TrainingCache {
 
-  /** The prepared train matrix, its oversampled fit input, the prepared
-    * held-out matrix and the split's row counts. */
-  final class Entry private[ml] (in: MultiModel.FitInput,
-      val nTrain: Long, val nTest: Long) {
-    def preppedTrain: DataFrame = in.matrix
-    def smotedTrain: DataFrame = in.fitOn
-    def preppedTest: DataFrame = in.heldOut.get
-    private[ml] def release(): Unit = in.release()
-  }
+  private type Key = (String, Seq[String], Option[String])
 
   private val cache =
-    new SessionCache[(String, Seq[String]), Entry](_.release())
+    new SessionCache[Key, MultiModel.FitInput](_.release())
 
-  /** Completed matrix builds this JVM: key -> build seconds. */
+  /** Completed fit-input builds this JVM: (applicationId, "<input
+    * key>:<strategy or none>", feature set) -> build seconds. */
   def buildLog: Map[(String, String, Seq[String]), Double] =
-    cache.buildLog.map { case ((app, (key, fc)), s) => (app, key, fc) -> s }
+    cache.buildLog.map { case ((app, (key, fc, r)), s) =>
+      (app, s"$key:${r.getOrElse("none")}", fc) -> s }
 
-  /** Get-or-build the prepared matrix for `labeled`, a deterministic
-    * function of `key` (the caller's input path). */
-  def entry(spark: SparkSession, key: String, featureCols: Seq[String])
-      (labeled: => DataFrame): Entry = cache(spark, (key, featureCols)) {
-    val (tr, te) = MultiModel.split(labeled)
-    val in = MultiModel.fitInput(tr, featureCols, Some("oversample"),
-      Some(te))
-    // the train count comes from the prep fit's class histogram; the
-    // held-out count materializes its matrix. A build that fails never
-    // reaches the cache, so it releases what it pinned
-    try new Entry(in, in.rows, in.heldOut.get.count())
-    catch { case e: Throwable => in.release(); throw e }
-  }
+  /** Get-or-build the fit input of `labeled`'s train split, a
+    * deterministic function of `key` (the caller's input). */
+  private[graft] def entry(spark: SparkSession, key: String,
+      featureCols: Seq[String], rebalance: Option[String])
+      (labeled: => DataFrame): MultiModel.FitInput =
+    cache(spark, (key, featureCols, rebalance)) {
+      val (tr, te) = MultiModel.split(labeled)
+      MultiModel.fitInput(tr, featureCols, rebalance, Some(te))
+    }
 
-  /** Drop and unpersist every cached matrix (tests / memory pressure). */
+  /** Drop and release the fit inputs of `key` under every strategy. */
+  private[graft] def remove(spark: SparkSession, key: String,
+      featureCols: Seq[String]): Unit =
+    (None +: Smote.Strategies.map(Some(_))).foreach(r =>
+      cache.remove(spark, (key, featureCols, r)))
+
+  /** Drop and unpersist every cached fit input (tests / memory pressure). */
   def clear(): Unit = cache.clear()
 }

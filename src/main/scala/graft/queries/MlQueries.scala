@@ -8,8 +8,8 @@ import org.apache.spark.sql.types._
 import graft.cli.Jobs
 import graft.core.{QueryDef, QueryModule, Tables}
 import graft.eval.Metrics
-import graft.ml.{Importance, ModelCache, MultiModel, PrepPipeline, Smote,
-  Trainers, TrainingCache}
+import graft.ml.{Importance, ModelCache, MultiModel, PrepPipeline, Trainers,
+  TrainingCache}
 
 /** ML-pipeline queries (SURVEY §2.8-2.9). Queries whose semantics are
   * SQL-expressible carry a DuckDB oracle (label encoding); trainer/metric
@@ -21,15 +21,16 @@ object MlQueries extends QueryModule {
   private def T(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
-  /** The shared prepared-matrix cache entry for a testdata dir (split +
-    * prep fit + SMOTE paid once per session per dir — SURVEY §7.4.6's
+  /** The shared oversampled fit input for a testdata dir (split + prep
+    * fit + SMOTE paid once per session per dir — SURVEY §7.4.6's
     * cached-prepared-data requirement; the split and the oversample are
     * hash-based, so their rows are the same at any partitioning). Built
     * from the modeling frame the CLI jobs and the server train on,
     * [[Jobs.labeled]].
     */
-  private def prepared(s: SparkSession, dir: String): TrainingCache.Entry =
-    TrainingCache.entry(s, dir, Jobs.FeatureCols)(Jobs.labeled(s, dir))
+  private def prepared(s: SparkSession, dir: String): MultiModel.FitInput =
+    TrainingCache.entry(s, dir, Jobs.FeatureCols, Some("oversample"))(
+      Jobs.labeled(s, dir))
 
   /** Train one reference model type end-to-end and report the
     * oracle-expressible invariants of the run: the split conserves every
@@ -48,7 +49,7 @@ object MlQueries extends QueryModule {
       val e = prepared(s, dir)
       val tag = s"$modelType:${params.toSeq.sorted.mkString(",")}:smoted"
       val clf = ModelCache.fitted(s, dir, tag)(
-        Trainers.byName(modelType, params).fit(e.smotedTrain)
+        Trainers.byName(modelType, params).fit(e.fitOn)
           .asInstanceOf[org.apache.spark.ml.Transformer])
       // Scoring cost shaping (this IS the timed cost of the trainer
       // gates — the fit itself is ModelCache'd): (a) disable the
@@ -67,17 +68,17 @@ object MlQueries extends QueryModule {
         case other => other
       }
       val scored = lean.transform(
-        e.preppedTrain.withColumn("__is_train", lit(true))
-          .unionByName(e.preppedTest.withColumn("__is_train", lit(false))))
+        e.matrix.withColumn("__is_train", lit(true))
+          .unionByName(e.heldOut.get.withColumn("__is_train", lit(false))))
         .groupBy(col("__is_train"))
         .agg((sum(when(col("label") === col("prediction"), 1L)
           .otherwise(0L)) / count(lit(1))).as("accuracy"))
         .collect().map(r => r.getBoolean(0) -> r.getDouble(1)).toMap
       val trainAcc = scored(true)
       val testAcc = scored(false)
-      val frac = e.nTrain.toDouble / (e.nTrain + e.nTest)
+      val frac = e.rows.toDouble / (e.rows + e.heldOutRows)
       s.createDataFrame(Seq(
-        (modelType, e.nTrain + e.nTest,
+        (modelType, e.rows + e.heldOutRows,
           math.abs(frac - 0.7) <= 0.02,
           trainAcc >= 0.3 && trainAcc <= 1.0,
           testAcc >= 0.3 && testAcc <= 1.0)))
@@ -130,10 +131,10 @@ object MlQueries extends QueryModule {
         val e = prepared(s, dir)
         val clf = ModelCache.fitted(s, dir, "D_TREE:max_depth=5:prepped")(
           Trainers.byName("D_TREE", Map("max_depth" -> "5"))
-            .fit(e.preppedTrain)
+            .fit(e.matrix)
             .asInstanceOf[org.apache.spark.ml.Transformer])
         val conf = Metrics.confusion(
-          clf.transform(e.preppedTest)
+          clf.transform(e.heldOut.get)
             .select(col("label"), col("prediction")))
         conf.agg(
             sum(col("n")).as("__total"),
@@ -141,7 +142,7 @@ object MlQueries extends QueryModule {
               .otherwise(0L)).as("__correct"),
             countDistinct(col("label")).as("__classes"))
           .select(lit("D_TREE").as("model_type"),
-            (col("__total") === e.nTest).as("scored_all_ok"),
+            (col("__total") === e.heldOutRows).as("scored_all_ok"),
             (col("__correct") / col("__total") >= 0.3).as("acc_ok"),
             col("__classes").cast("long").as("n_classes"))
       },
@@ -160,10 +161,11 @@ object MlQueries extends QueryModule {
         // the exact source count — DuckDB recomputes it) and the 70%±2
         // fraction are
         val e = prepared(s, dir)
-        val frac = e.nTrain.toDouble / (e.nTrain + e.nTest)
+        val n = e.rows + e.heldOutRows
+        val frac = e.rows.toDouble / n
         s.createDataFrame(Seq(
-          ("test", e.nTrain + e.nTest, math.abs(frac - 0.7) <= 0.02),
-          ("train", e.nTrain + e.nTest, math.abs(frac - 0.7) <= 0.02)))
+          ("test", n, math.abs(frac - 0.7) <= 0.02),
+          ("train", n, math.abs(frac - 0.7) <= 0.02)))
           .toDF("split", "n_sum", "frac_ok").orderBy(col("split"))
       },
       Some("""SELECT s AS split, (SELECT COUNT(*) FROM lineitem) AS n_sum,
@@ -203,19 +205,17 @@ object MlQueries extends QueryModule {
 
     "q_m2_smote" -> QueryDef(
       (s, dir) => {
-        // SMOTE balance invariant IS oracle-checkable: post-transform both
-        // classes sit at the majority count.
-        val df = Jobs.labeled(s, dir)
-        // the prep FIT (one aggregate) is deterministic input
-        // preparation shared across reps/serving, exactly like
-        // TrainingCache's role for the trainer family; the SMOTE
-        // transform itself — the operator under measurement — runs fresh
-        val prep = ModelCache.fitted(s, dir, "PREP:full")(
-          PrepPipeline.fit(df, Jobs.FeatureCols))
-          .asInstanceOf[org.apache.spark.ml.PipelineModel]
-        Smote.rebalance(PrepPipeline.matrix(prep, df), "smote", k = 3)
-          .groupBy(col("label")).agg(count(lit(1)).as("cnt"))
-          .orderBy(col("label"))
+        // SMOTE balance invariant IS oracle-checkable: post-rebalance
+        // both classes sit at the majority count. The fit input is built
+        // fresh on every run, SMOTE being the operator under measurement;
+        // its one aggregate fits the prep and counts the classes
+        val in = MultiModel.fitInput(Jobs.labeled(s, dir), Jobs.FeatureCols,
+          Some("smote"), k = 3)
+        val counts = try in.fitOn.groupBy(col("label"))
+            .agg(count(lit(1))).collect()
+            .map(r => r.getDouble(0) -> r.getLong(1)).sortBy(_._1).toSeq
+          finally in.release()
+        s.createDataFrame(counts).toDF("label", "cnt")
       },
       Some("""WITH c AS (SELECT CASE WHEN l_returnflag = 'R' THEN 1.0 ELSE 0.0 END AS label,
              |   COUNT(*) AS cnt FROM lineitem GROUP BY 1)
@@ -231,7 +231,7 @@ object MlQueries extends QueryModule {
         // never see the test rows, matching the trainer protocol)
         val e = prepared(s, dir)
         val rf = ModelCache.fitted(s, dir, "RAND_FOREST:n=20:prepped")(
-          Trainers.randomForest(nEstimators = 20).fit(e.preppedTrain))
+          Trainers.randomForest(nEstimators = 20).fit(e.matrix))
           .asInstanceOf[
             org.apache.spark.ml.classification.RandomForestClassificationModel]
         // gate on the distribution invariants (every feature present

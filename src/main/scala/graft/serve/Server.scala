@@ -14,16 +14,18 @@ import org.apache.spark.sql.functions._
 
 import graft.io.RedisSink
 import graft.ml.{LocalScorer, ModelCache, ModelEntry, ModelRegistry,
-  MultiModel, Smote, Trainers}
+  MultiModel, Smote, Trainers, TrainingCache}
 
 /** The reference's FastAPI serving layer re-expressed on the JDK HTTP
   * server (zero extra dependencies): `POST /train/` and `POST /predict/`
   * with a response cache (reference /root/reference/src/app.py:37-140).
   *
   * Deliberate fixes over the reference (SURVEY §2.12):
-  *   - one long-lived SparkSession and a cached prepared DataFrame shared
-  *     across requests — the reference re-reads and re-fits the world per
-  *     request (train.py:26-114);
+  *   - one long-lived SparkSession, and the fit input of each rebalance
+  *     strategy built once per server in TrainingCache, so a `/train/`
+  *     after the first of its strategy fits only the classifier — the
+  *     reference re-reads and re-fits the world per request
+  *     (train.py:26-114);
   *   - each registry entry's model is read once per session through
   *     ModelCache (`MultiModel.load`), and a model `/train/` just fitted
   *     is served as fitted, with no read at all — the reference re-reads
@@ -63,16 +65,12 @@ class GraftServer(
   private val localCache = new ConcurrentHashMap[String, String]()
   @volatile private var lastModelName: Option[String] = None
   // names this server's held-out split in ModelCache's confusion entries
-  private val heldOut = Identifiable.randomUID("heldOut")
+  // and its fit inputs in TrainingCache
+  private[serve] val heldOut = Identifiable.randomUID("heldOut")
 
-  // the reference rebuilds this per request; we prepare once and reuse
-  // (and unpersist at stop)
-  @volatile private var cachedSplit: Option[(DataFrame, DataFrame)] = None
-  private lazy val prepared: (DataFrame, DataFrame) = {
-    val (tr, te) = MultiModel.split(trainData())
-    cachedSplit = Some((tr.cache(), te.cache()))
-    cachedSplit.get
-  }
+  // the held-out split smoke, db and /metrics/ score, cached once (and
+  // unpersisted at stop)
+  private lazy val test: DataFrame = MultiModel.split(trainData())._2.cache()
 
   // Send every reply without waiting on Nagle's algorithm: a reply is
   // written as headers then body, and without TCP_NODELAY the body waits
@@ -155,8 +153,7 @@ class GraftServer(
   private def confusion(entry: ModelEntry): Seq[(Double, Double, Long)] =
     ModelCache.confusion(spark, entry.path, heldOut) {
       import scala.math.Ordering.Double.TotalOrdering
-      val (_, te) = prepared
-      MultiModel.score(MultiModel.load(entry.path), te)
+      MultiModel.score(MultiModel.load(entry.path), test)
         .groupBy(col("label").cast("double").as("label"), col("prediction"))
         .count().collect()
         .map(r => (r.getDouble(0), r.getDouble(1), r.getLong(2))).toSeq.sorted
@@ -174,9 +171,9 @@ class GraftServer(
     if (!Smote.Strategies.contains(smoteStrategy)) invalid("smote_strategy")
     Trainers.IntParams.filter(k => p.get(k).exists(_.toIntOption.isEmpty))
       .foreach(invalid)
-    val (tr, _) = prepared
-    val t = MultiModel.train(tr, featureCols, modelType, p, useSmote,
-      smoteStrategy)
+    val in = TrainingCache.entry(spark, heldOut, featureCols,
+      Option.when(useSmote)(smoteStrategy))(trainData())
+    val t = MultiModel.fit(in, modelType, p)
     val name = p.getOrElse("name", modelType.toLowerCase)
     val superseded = registry.latest(name)
     MultiModel.save(t, modelDir, registry, name)
@@ -223,8 +220,7 @@ class GraftServer(
             Map("mode" -> "smoke",
               "test_score" -> correct.toDouble / cm.map(_._3).sum)
           case "db" =>
-            val (_, te) = prepared
-            val preds = MultiModel.score(MultiModel.load(entry.path), te)
+            val preds = MultiModel.score(MultiModel.load(entry.path), test)
             redis.foreach { case (h, rp) =>
               RedisSink.writeList(preds, "prediction", h, rp)
             }
@@ -254,14 +250,16 @@ class GraftServer(
   def start(): Unit = server.start()
 
   /** Stop serving: close the listener, end the handler threads once their
-    * requests are answered, and unpersist the split this server cached.
+    * requests are answered, unpersist the held-out split this server
+    * cached and drop its fit inputs from TrainingCache.
     */
   def stop(): Unit = {
     server.stop(0)
     handlers.shutdown()
     if (!handlers.awaitTermination(60, TimeUnit.SECONDS))
       handlers.shutdownNow()
-    cachedSplit.foreach { case (tr, te) => tr.unpersist(); te.unpersist() }
+    test.unpersist()
+    TrainingCache.remove(spark, heldOut, featureCols)
   }
 }
 

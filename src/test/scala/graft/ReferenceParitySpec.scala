@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.etl.{ColumnStats, Preprocess}
 import graft.io.Sources
-import graft.ml.{MultiModel, PrepPipeline, Smote}
+import graft.ml.MultiModel
 
 /** End-to-end reference-parity flow on CICIDS-shaped data (FIXTURES.md):
   * the full DataMaker → MultiModel pipeline
@@ -64,10 +64,10 @@ class ReferenceParitySpec extends SparkSpec {
     assert(acc >= 0.0 && acc <= 1.0)
 
     // 5. SMOTE balanced the training matrix exactly (reference invariant)
-    val prepped = PrepPipeline.matrix(PrepPipeline.fit(tr, featureCols), tr)
-    val smoted = Smote.rebalance(prepped, "smote", k = 3)
-      .groupBy("label").count().collect()
+    val in = MultiModel.fitInput(tr, featureCols, Some("smote"), k = 3)
+    val smoted = try in.fitOn.groupBy("label").count().collect()
       .map(r => r.getDouble(0) -> r.getLong(1)).toMap
+      finally in.release()
     assert(smoted(0.0) === smoted(1.0))
   }
 

@@ -197,12 +197,13 @@ class ConcurrencySpec extends SparkSpec {
       "frames and is retried") {
     val tc = graft.ml.TrainingCache
     val fc = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-    tc.entry(spark, "conc:tc-hit", fc)(labeled())
+    val os = Some("oversample")
+    tc.entry(spark, "conc:tc-hit", fc, os)(labeled())
     val entered = new CountDownLatch(1)
     val release = new CountDownLatch(1)
     val pool = Executors.newFixedThreadPool(2)
     val slowF = pool.submit(new Runnable {
-      override def run(): Unit = tc.entry(spark, "conc:tc-slow", fc) {
+      override def run(): Unit = tc.entry(spark, "conc:tc-slow", fc, os) {
         entered.countDown()
         release.await(60, TimeUnit.SECONDS)
         labeled()
@@ -212,9 +213,9 @@ class ConcurrencySpec extends SparkSpec {
       assert(entered.await(30, TimeUnit.SECONDS), "slow build never ran")
       val t0 = System.nanoTime()
       val hit = pool.submit(new java.util.concurrent.Callable[Long] {
-        override def call(): Long = tc.entry(spark, "conc:tc-hit", fc) {
+        override def call(): Long = tc.entry(spark, "conc:tc-hit", fc, os) {
           fail("hit key conc:tc-hit rebuilt")
-        }.nTrain
+        }.rows
       })
       assert(hit.get(10, TimeUnit.SECONDS) > 0L)
       val hitSecs = (System.nanoTime() - t0) / 1e9
@@ -229,8 +230,8 @@ class ConcurrencySpec extends SparkSpec {
     }
     // a label only held-out rows cannot cast: the split hashes the whole
     // row, so the rows to poison are those the split holds out once
-    // poisoned. The split and prep fit pass, the train matrix and its
-    // SMOTE rebalance materialize, then the test matrix throws.
+    // poisoned. The build never reads the held-out matrix, so it passes;
+    // the first reader of the held-out count is the one that throws
     val keyed = Tables.load(spark, sf0001, "lineitem").select(
       col("l_quantity"), col("l_extendedprice"), col("l_discount"),
       col("l_tax"), when(col("l_returnflag") === "R", "1").otherwise("0")
@@ -239,23 +240,40 @@ class ConcurrencySpec extends SparkSpec {
     val heldOut = graft.ml.MultiModel.split(keyed.withColumn("label",
       concat(col("label"), lit("x"))))._2.select("id")
       .collect().map(_.getLong(0))
+    val poisoned = tc.entry(spark, "conc:tc-poisoned", fc, os)(
+      keyed.withColumn("label", when(col("id").isin(heldOut.toSeq: _*),
+        concat(col("label"), lit("x"))).otherwise(col("label"))))
+    assert(poisoned.rows > 0L)
+    intercept[Exception](poisoned.heldOutRows)
+    tc.remove(spark, "conc:tc-poisoned", fc)
     // Smote's localCheckpoint RDDs are Spark's lineage truncation, freed
     // by the ContextCleaner; every other persisted RDD is a pinned frame
-    def pinnedRdds = spark.sparkContext.getPersistentRDDs.values
-      .count(!_.isCheckpointed)
+    def pinnedRdds = org.apache.spark.ListenerBridge.pinnedRdds(
+      spark.sparkContext)
     val before = pinnedRdds
+    // a source whose second pass throws: the prep aggregate reads it
+    // once, then SMOTE's first job reads the persisted train matrix,
+    // which the build has pinned by then, and throws
+    val parts = 4
+    ConcurrencySpec.reads.set(0)
+    val secondPassThrows = spark.createDataFrame(spark.sparkContext
+      .parallelize(keyed.collect().toSeq, parts).mapPartitions { rows =>
+        if (ConcurrencySpec.reads.incrementAndGet() > parts)
+          throw new IllegalStateException("second pass")
+        rows
+      }, keyed.schema)
+    val smote = Some("smote")
     intercept[Exception] {
-      tc.entry(spark, "conc:tc-fail", fc)(keyed.withColumn("label",
-        when(col("id").isin(heldOut.toSeq: _*),
-          concat(col("label"), lit("x"))).otherwise(col("label"))))
+      tc.entry(spark, "conc:tc-fail", fc, smote)(secondPassThrows)
     }
+    assert(ConcurrencySpec.reads.get() > parts, "the build never reread")
     assert(pinnedRdds === before, "failed build leaked persisted frames")
     val builds = new AtomicInteger(0)
-    val e = tc.entry(spark, "conc:tc-fail", fc) {
+    val e = tc.entry(spark, "conc:tc-fail", fc, smote) {
       builds.incrementAndGet(); keyed
     }
     assert(builds.get() === 1, "failed build was cached")
-    assert(e.nTrain > 0L && e.nTest > 0L)
+    assert(e.rows > 0L && e.heldOutRows > 0L)
   }
 
   test("ModelCache: 16 racing fitters of one tag -> exactly one fit; " +
@@ -371,4 +389,10 @@ class ConcurrencySpec extends SparkSpec {
     def all: Map[String, Int] =
       m.asScala.map { case (k, v) => k -> v.get() }.toMap
   }
+}
+
+object ConcurrencySpec {
+  /** Partition reads of the source the failing TrainingCache build
+    * scans (local mode: its tasks run in this JVM). */
+  val reads = new AtomicInteger(0)
 }

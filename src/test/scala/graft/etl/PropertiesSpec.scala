@@ -63,16 +63,6 @@ class PropertiesSpec extends SparkSpec {
     }
   }
 
-  test("property: imputeMode leaves no nulls when a mode exists") {
-    for (rows <- samples(frameGen, 5)
-         if rows.exists(r => r._1 != null && !r._1.isNaN
-           && !r._1.isInfinite)) {
-      val df = Preprocess.infToNull(mkDf(rows), Seq("a", "b"))
-      val filled = Preprocess.imputeMode(df, Seq("a"))
-      assert(filled.filter(col("a").isNull).count() === 0)
-    }
-  }
-
   test("property: dropDuplicates is idempotent (U3)") {
     for (rows <- samples(frameGen, 5)) {
       val df = mkDf(rows)

@@ -1,23 +1,21 @@
 package graft.ml
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.{ListenerBridge, SparkException}
+import org.apache.spark.SparkException
 import org.apache.spark.ml.{GraftMlBridge, Pipeline, PipelineModel,
   Transformer}
 import org.apache.spark.ml.classification.DecisionTreeClassificationModel
 import org.apache.spark.ml.feature.{Imputer, ImputerModel, StandardScaler,
   StandardScalerModel, VectorAssembler}
 import org.apache.spark.ml.util.MLWriter
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import graft.cli.Jobs
 
 /** The fit path behind `/train/`, `TrainJob` and `TrainingCache`: the
@@ -66,23 +64,6 @@ class FitInputSpec extends SparkSpec {
   type Dt = DecisionTreeClassificationModel
   private def shape(m: Dt) =
     m.toDebugString.replaceAll("uid=dtc_[0-9a-f]+", "uid=<norm>")
-
-  /** The number of Spark jobs started while `body` runs. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    ListenerBridge.drain(sc)
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      ListenerBridge.drain(sc)
-      (r, jobs.get())
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("the one-pass prep matches Imputer + StandardScaler on null and " +
       "NaN cells, and an all-missing column fails as Imputer does") {
@@ -238,6 +219,22 @@ class FitInputSpec extends SparkSpec {
       assert(counts.size === 1)
       assert(in.rows === tr.count())
     } finally { in.release(); tr.unpersist() }
+  }
+
+  test("q_m2_smote builds its SMOTE fit input on every run: the same " +
+      "jobs each time, the SMOTE's own among them") {
+    def run() = jobSitesDuring(
+      SparkEntry.queries("q_m2_smote")(spark, sf0001).collect().toSeq)
+    val (rows1, first) = run()
+    val (rows2, second) = run()
+    assert(rows1 === rows2)
+    assert(rows1.map(_.getLong(1)).distinct.size === 1)
+    // the prep aggregate, SMOTE's slab checkpoint and slab sizes, the
+    // fit input's checkpoint and the class count, each shuffle stage a
+    // job of its own
+    assert(first.size === 10, first)
+    assert(second.size === first.size, second)
+    assert(second.exists(_.contains("Smote.scala")), second)
   }
 
   /** The files under `dir`, relative, with part-file names' unique parts

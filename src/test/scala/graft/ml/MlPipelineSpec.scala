@@ -154,39 +154,43 @@ class MlPipelineSpec extends SparkSpec {
     }
   }
 
-  test("M2 SMOTE balances classes exactly") {
-    val prepped = PrepPipeline.matrix(
-      PrepPipeline.fit(labeled, featureCols), labeled)
-    val out = Smote.rebalance(prepped, "smote", k = 3)
-    val counts = out.groupBy("label").count().collect()
+  /** `f` of the fit input [[MultiModel.fitInput]] builds on `labeled`
+    * under `strategy`, released afterwards. */
+  private def withFitInput[T](strategy: String, k: Int = 5)
+      (f: MultiModel.FitInput => T): T = {
+    val in = MultiModel.fitInput(labeled, featureCols, Some(strategy), k = k)
+    try f(in) finally in.release()
+  }
+
+  private def classCounts(df: org.apache.spark.sql.DataFrame) =
+    df.groupBy("label").count().collect()
       .map(r => r.getDouble(0) -> r.getLong(1)).toMap
+
+  test("M2 SMOTE balances classes exactly") {
+    val counts = withFitInput("smote", k = 3)(in => classCounts(in.fitOn))
     assert(counts(0.0) === counts(1.0))
   }
 
   test("M2 SMOTE is deterministic under fixed seed") {
-    val prepped = PrepPipeline.matrix(
-      PrepPipeline.fit(labeled, featureCols), labeled)
-    def runSum() = Smote.rebalance(prepped, "smote", k = 3)
+    def runSum() = withFitInput("smote", k = 3)(_.fitOn
       .select(explode(
         org.apache.spark.ml.functions.vector_to_array(col("features")))
         .as("v"))
-      .agg(sum(floor(col("v") * 1000)).as("s")).head().getLong(0)
+      .agg(sum(floor(col("v") * 1000)).as("s")).head().getLong(0))
     assert(runSum() === runSum())
   }
 
   test("M2 oversample strategy duplicates real minority rows only") {
-    val prepped = PrepPipeline.matrix(
-      PrepPipeline.fit(labeled, featureCols), labeled).cache()
-    val out = Smote.rebalance(prepped, "oversample")
-    val counts = out.groupBy("label").count().collect()
-      .map(r => r.getDouble(0) -> r.getLong(1)).toMap
-    assert(counts(0.0) === counts(1.0))
-    // every synthetic row is a copy of an existing minority vector
-    val minority = prepped.filter(col("label") === 1.0)
-      .select(PrepPipeline.FeaturesCol).distinct()
-    val outDistinct = out.filter(col("label") === 1.0)
-      .select(PrepPipeline.FeaturesCol).distinct()
-    assert(outDistinct.exceptAll(minority).count() === 0)
+    withFitInput("oversample") { in =>
+      val counts = classCounts(in.fitOn)
+      assert(counts(0.0) === counts(1.0))
+      // every added row is a copy of an existing minority vector
+      val minority = in.matrix.filter(col("label") === 1.0)
+        .select(PrepPipeline.FeaturesCol).distinct()
+      val outDistinct = in.fitOn.filter(col("label") === 1.0)
+        .select(PrepPipeline.FeaturesCol).distinct()
+      assert(outDistinct.exceptAll(minority).count() === 0)
+    }
   }
 
   test("A10 importances cover all features and sum to ~1") {
@@ -197,18 +201,6 @@ class MlPipelineSpec extends SparkSpec {
     assert(ranked.map(_.getString(0)).sorted === featureCols.sorted.toArray)
     val total = ranked.map(_.getDouble(1)).sum
     assert(math.abs(total - 1.0) < 1e-6)
-  }
-
-  test("L8 pruneFeatures drops a zero-importance feature from frame and " +
-      "survivors") {
-    // a constant column never splits a tree, so its importance is 0
-    val withConst = labeled.withColumn("k_const", lit(1.0))
-    val cols = featureCols :+ "k_const"
-    val (pruned, survivors) =
-      Importance.pruneFeatures(withConst, cols, nTrees = 5)
-    assert(!survivors.contains("k_const"))
-    assert(!pruned.columns.contains("k_const"))
-    assert(survivors === pruned.columns.filter(cols.contains).toSeq)
   }
 
   test("A7-A9 metrics agree on a hand-built frame") {
@@ -229,17 +221,17 @@ class MlPipelineSpec extends SparkSpec {
     assert(math.abs(rep(1.0)._4 - 2.0 / 3.0) < 1e-12)
   }
 
-  test("a D_TREE fit on TrainingCache's smotedTrain is the classifier " +
+  test("a D_TREE fit on TrainingCache's fitOn is the classifier " +
       "MultiModel.train fits with useSmote and oversample") {
     TrainingCache.clear()
-    val e = TrainingCache.entry(spark, sf0001, Jobs.FeatureCols)(
-      Jobs.labeled(spark, sf0001))
+    val e = TrainingCache.entry(spark, sf0001, Jobs.FeatureCols,
+      Some("oversample"))(Jobs.labeled(spark, sf0001))
     val (tr, te) = MultiModel.split(Jobs.labeled(spark, sf0001))
     val trained = MultiModel.train(tr, Jobs.FeatureCols, "D_TREE",
       useSmote = true, smoteStrategy = "oversample")
     type Dt = org.apache.spark.ml.classification.DecisionTreeClassificationModel
     val viaTrain = trained.pipeline.stages.last.asInstanceOf[Dt]
-    val viaCache = Trainers.byName("D_TREE").fit(e.smotedTrain)
+    val viaCache = Trainers.byName("D_TREE").fit(e.fitOn)
       .asInstanceOf[Dt]
     def shape(m: Dt) =
       m.toDebugString.replaceAll("uid=dtc_[0-9a-f]+", "uid=<norm>")
@@ -247,10 +239,10 @@ class MlPipelineSpec extends SparkSpec {
     // the same predictions on the held-out split, row for row
     val predicted = MultiModel.score(trained.pipeline, te)
       .select("prediction").collect().map(_.getDouble(0)).toSeq
-    val cached = viaCache.transform(e.preppedTest)
+    val cached = viaCache.transform(e.heldOut.get)
       .select("prediction").collect().map(_.getDouble(0)).toSeq
-    assert(predicted.size === e.nTest)
-    assert(e.nTrain === tr.count())
+    assert(predicted.size === e.heldOutRows)
+    assert(e.rows === tr.count())
     assert(cached === predicted)
     TrainingCache.clear()
   }
@@ -260,8 +252,8 @@ class MlPipelineSpec extends SparkSpec {
     TrainingCache.clear()
     val mine = Jobs.labeled(spark, sf0001).cache()
     mine.count()
-    TrainingCache.entry(spark, "caller-cache", Jobs.FeatureCols)(
-      Jobs.labeled(spark, sf0001))
+    TrainingCache.entry(spark, "caller-cache", Jobs.FeatureCols,
+      Some("oversample"))(Jobs.labeled(spark, sf0001))
     assert(mine.storageLevel !== StorageLevel.NONE)
     TrainingCache.clear()
     mine.unpersist()

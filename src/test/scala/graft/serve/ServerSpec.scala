@@ -3,20 +3,19 @@ package graft.serve
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
-import java.util.concurrent.{Callable, ConcurrentLinkedQueue, Executors,
-  TimeUnit}
+import java.util.concurrent.{Callable, Executors, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ListenerBridge
 import org.apache.spark.ml.PipelineModel
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.ml.classification.DecisionTreeClassificationModel
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.core.Tables
-import graft.ml.{ModelCache, ModelEntry, ModelRegistry, MultiModel}
+import graft.ml.{ModelCache, ModelEntry, ModelRegistry, MultiModel,
+  TrainingCache}
 
 /** Functional API tests mirroring the reference's live-API suite
   * (/root/reference/src/tests/test_functional.py:22-112): train each model
@@ -58,31 +57,6 @@ class ServerSpec extends SparkSpec {
   private def testScore(body: String): Double =
     """"test_score":([0-9.Ee-]+)""".r.findFirstMatchIn(body)
       .getOrElse(fail(s"no test_score in $body")).group(1).toDouble
-
-  /** The call sites (stage names) of each Spark job started while `body`
-    * runs (listener bus drained on both sides, so no earlier job leaks in
-    * and no job of `body` is missed).
-    */
-  private def jobSitesDuring[T](body: => T): (T, Seq[String]) = {
-    val sc = spark.sparkContext
-    ListenerBridge.drain(sc)
-    val jobs = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(e.stageInfos.map(_.name).mkString(" | "))
-    }
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      ListenerBridge.drain(sc)
-      (r, jobs.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
-  }
-
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val (r, sites) = jobSitesDuring(body)
-    (r, sites.size)
-  }
 
   private val header = "l_quantity,l_extendedprice,l_discount,l_tax\n"
 
@@ -332,13 +306,83 @@ class ServerSpec extends SparkSpec {
     s.start()
     assert(post("/train/?model_type=GNB&use_smote=false&name=stop_me",
       port = s.boundPort)._1 === 200)
-    val (tr, te) = MultiModel.split(data())
-    assert(tr.storageLevel.useMemory && te.storageLevel.useMemory)
+    assert(post("/predict/?mode=smoke&name=stop_me",
+      port = s.boundPort)._1 === 200)
+    val (_, te) = MultiModel.split(data())
+    assert(te.storageLevel.useMemory)
+    // a hit: the server's fit input
+    val in = TrainingCache.entry(spark, s.heldOut, featureCols, None)(
+      fail("the server's fit input was not cached"))
+    assert(in.matrix.storageLevel.useMemory)
     def handlers = Thread.getAllStackTraces.keySet.asScala
       .filter(_.getName.startsWith(s.threadPrefix))
     assert(handlers.nonEmpty)
     s.stop()
     assert(handlers.filter(_.isAlive).isEmpty, handlers)
-    assert(!tr.storageLevel.useMemory && !te.storageLevel.useMemory)
+    assert(!te.storageLevel.useMemory)
+    assert(!in.matrix.storageLevel.useMemory)
+    var rebuilt = false
+    TrainingCache.entry(spark, s.heldOut, featureCols, None) {
+      rebuilt = true; data()
+    }
+    assert(rebuilt, "TrainingCache still held the stopped server's entry")
+    TrainingCache.remove(spark, s.heldOut, featureCols)
+  }
+
+  test("a second /train/ of a strategy reuses the first one's fit input: " +
+      "one TrainingCache build, and none of fitInput's jobs") {
+    val s = new GraftServer(spark, () => labeled(), featureCols,
+      Files.createTempDirectory("graft-reuse").toString)
+    s.start()
+    try {
+      def builds = TrainingCache.buildLog.keys
+        .count(_._2.startsWith(s"${s.heldOut}:"))
+      val ((c1, b1), first) = jobSitesDuring(
+        post("/train/?model_type=D_TREE&name=reuse_a", port = s.boundPort))
+      assert(c1 === 200, b1)
+      assert(builds === 1)
+      // of fitInput's jobs only the checkpoint is named by its site: AQE
+      // submits the aggregate's stages from threads of its own
+      def checkpoint(site: String) = site.contains("localCheckpoint at")
+      assert(first.exists(checkpoint), first)
+      val ((c2, b2), second) = jobSitesDuring(
+        post("/train/?model_type=GNB&name=reuse_b", port = s.boundPort))
+      assert(c2 === 200, b2)
+      assert(!second.exists(checkpoint), second)
+      // a D_TREE again runs the first call's jobs less the fit input's
+      // and less one: the first call's training-accuracy pass also
+      // materialized the fit input's persisted matrix, in a job of its own
+      val ((c3, b3), third) = jobSitesDuring(
+        post("/train/?model_type=D_TREE&name=reuse_c", port = s.boundPort))
+      assert(c3 === 200, b3)
+      assert(builds === 1)
+      val (tr, te) = MultiModel.split(labeled())
+      val (in, fitInputJobs) = jobsDuring(MultiModel.fitInput(tr,
+        featureCols, Some("oversample"), Some(te)))
+      in.release()
+      assert(fitInputJobs > 0)
+      assert(third.size + fitInputJobs + 1 === first.size,
+        s"${first.mkString("\n")}\n--\n${third.mkString("\n")}")
+    } finally s.stop()
+  }
+
+  test("the D_TREE /train/ serves equals MultiModel.train's on the same " +
+      "split, with oversample, smote and without SMOTE") {
+    type Dt = DecisionTreeClassificationModel
+    def shape(m: PipelineModel) = m.stages.last.asInstanceOf[Dt]
+      .toDebugString.replaceAll("uid=dtc_[0-9a-f]+", "uid=<norm>")
+    val (tr, _) = MultiModel.split(labeled())
+    for ((query, useSmote, strategy) <- Seq(
+        ("smote_strategy=oversample", true, "oversample"),
+        ("smote_strategy=smote", true, "smote"),
+        ("use_smote=false", false, "oversample"))) {
+      val name = s"same_${strategy}_$useSmote"
+      val (c, b) = post(s"/train/?model_type=D_TREE&$query&name=$name")
+      assert(c === 200, b)
+      val served = MultiModel.load(registry.latest(name).get.path)
+      val offline = MultiModel.train(tr, featureCols, "D_TREE",
+        useSmote = useSmote, smoteStrategy = strategy).pipeline
+      assert(shape(served) === shape(offline), query)
+    }
   }
 }
