@@ -74,6 +74,13 @@ object GraftSession {
       // it takes effect only if this builder creates the JVM's first
       // SparkContext, before any code is generated.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // The cache is keyed by the generated source, and by default each
+      // class name carries its whole-stage codegen stage id. AQE numbers
+      // stages in the order their inputs finish, so a rerun of the same
+      // plan (q_entropy_profile's three union branches race) could get
+      // other ids and miss the cache; identical pipelines in different
+      // stages never shared a class. Without the id they do.
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   /** Local parallelism of the entry points: `SPARK_GRAFT_CPUS`, else the
     * host's core count.

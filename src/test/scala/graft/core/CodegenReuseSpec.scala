@@ -11,7 +11,8 @@ import graft.SparkSpec
   * generates code) runs a fixed list of non-streaming registry queries
   * twice. The first pass compiles more classes than Spark's default
   * cache of 100 holds; the second must compile none, which holds only
-  * if [[GraftSession.configure]] sized the cache to the working set.
+  * if [[GraftSession.configure]] sized the cache to the working set and
+  * kept AQE's run-dependent stage ids out of the generated class names.
   */
 class CodegenReuseSpec extends SparkSpec {
 

@@ -12,6 +12,8 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(
       spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "4096")
+    assert(
+      spark.conf.get("spark.sql.codegen.useIdInClassName") === "false")
   }
 
   test("configure sets shuffle partitions to GraftSession.cpus; " +
